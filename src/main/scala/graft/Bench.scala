@@ -104,6 +104,14 @@ object Bench {
       s""""spread":$spreads,$load,$reg,"sf":"$sf"}"""
   }
 
+  /** Between timed runs: System.gc() prompts ContextCleaner to delete
+    * finished queries' shuffle files, whose residue otherwise fills local
+    * disk in a long suite (~50 GB by query ~94 of the sf100 run, three
+    * casualties; SCALE.md decade 5, finding 2). */
+  def reset(spark: org.apache.spark.sql.SparkSession): Unit = {
+    spark.catalog.clearCache(); System.gc()
+  }
+
   def systemLoad(): Double =
     java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
@@ -125,7 +133,7 @@ object Bench {
     val regimeCpus = intOr(cpus)
     val regimeShuffle = intOr(shuffle)
     // session stability knobs (heartbeat armor etc.) live in Sessions —
-    // shared with Profile so the two measurement regimes cannot drift
+    // shared with Measure so the two measurement regimes cannot drift
     val spark = Sessions.builder(cpus, shuffle).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warmup at the smallest SF first: JIT + codegen compilation otherwise
@@ -158,8 +166,8 @@ object Bench {
     // Timing action per query. Default "auto": entries whose windows
     // count() would prune run toRdd.count() — executes the FIXED
     // physical plan and produces every row executor-side (the honest
-    // "materialize the result" action; same choice as LayoutBench/
-    // JaccardBench, r13) — everything else keeps count() for
+    // "materialize the result" action; the one Measure always times,
+    // r13) — everything else keeps count() for
     // cross-round comparability. "count"/"rdd" force one action
     // everywhere (the dual-record transition columns, BENCH_NOTES r14).
     val actionMode = sys.env.getOrElse("SPARK_GRAFT_ACTION", "auto")
@@ -199,14 +207,7 @@ object Bench {
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         name -> (() => action(name, fn(spark, sfDir)))
       },
-      runs = runs,
-      // System.gc() prompts ContextCleaner's reference-queue pass, which
-      // is what actually deletes finished queries' shuffle files — in a
-      // 148-query single-application suite the residue otherwise
-      // accumulates until local disk fills (measured: ~50 GB by query
-      // ~94 of the sf100 run, three queries failed as casualties;
-      // SCALE.md decade 5, finding 2). Runs outside the timed window.
-      reset = () => { spark.catalog.clearCache(); System.gc() })
+      runs = runs, reset = () => reset(spark))
     val loadAvg = (loadStart, systemLoad())
     // r1+r2 driver runs both recorded parsed:null: the full per-query JSON
     // line is ~4.5 KB, so its START falls outside the driver's stdout-tail

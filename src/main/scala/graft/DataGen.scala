@@ -136,11 +136,7 @@ object DataGen {
     val sf = if (clustered || docsOnly) 0.0
       else args.headOption.map(_.toDouble).getOrElse(1.0)
     val outDir = args.lift(1).getOrElse("/root/repo/testdata/sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.builder("32", "32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (clustered) {
       // `DataGen clustered <nVecs> <outDir>`: embeddings-only fixture in
@@ -176,7 +172,7 @@ object DataGen {
     * space is in — near-duplicates and same-topic documents form tight
     * cones — and the regime LSH bucketing actually prunes in: whole
     * clusters land in a bucket, cross-cluster pairs rarely collide at
-    * ≥10 bits. `graft.LshSweep` measures recall + candidate fraction on
+    * ≥10 bits. The r9 grid sweep measured recall + candidate fraction on
     * these dirs (BENCH_NOTES "LSH clustered" entry). Same schema and
     * SplitMix determinism as the main generator; only embeddings.parquet
     * is written (the sweep reads nothing else). */

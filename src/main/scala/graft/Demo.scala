@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 import java.sql.Timestamp
 
@@ -13,14 +12,7 @@ import java.sql.Timestamp
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(plans.GraftExtensions.install)
-      .getOrCreate()
+    val spark = Sessions.builder("8", "8").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val dir = if (args.nonEmpty) java.nio.file.Paths.get(args(0))

@@ -1,11 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** The one local-mode session shape shared by the measurement entry
-  * points (Bench, Profile). The stability knobs live HERE and only here:
-  * the two mains drifted once already (Profile hardcoded cores/shuffle
-  * while Bench read the env), and a timeout tweak made in one place but
-  * not the other silently changes what an artifact measured. */
+/** The one local-mode session shape: every main and the benchmark build
+  * through here (SessionAuditSpec), so all run the registry's plans with
+  * GraftExtensions installed. Mains with their own sessions drifted once
+  * (hardcoded cores, no extensions), and a knob tweaked in one place but
+  * not another silently changes what an artifact measured. */
 object Sessions {
 
   /** Builder with the measurement-session config applied; callers add

@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke check mirroring the driver's t1 gate: SparkEntry.entry must
   * return >0 rows on sf0.001. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(graft.plans.GraftExtensions.install)
-      .getOrCreate()
+    val spark = Sessions.builder("4", "4").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     println("ENTRY_SCHEMA=" + df.schema.simpleString)

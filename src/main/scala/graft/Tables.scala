@@ -16,7 +16,7 @@ object Tables {
   /** Schema memo, keyed (path, dir mtime) — the catalog role a metastore
     * plays in production. A bare `spark.read.parquet(path)` runs a
     * footer-reading schema-inference JOB on every call (measured r15,
-    * graft.SchemaProbe: 54-86 ms per call at sf0.1 vs 5-9 ms with an
+    * BENCH_NOTES r15: 54-86 ms per call at sf0.1 vs 5-9 ms with an
     * explicit schema — the dominant share of EVERY query's construction
     * cost, ~13 s of a full 149-query bench pass). The memo infers once
     * per (table file, modification time) and replays the schema

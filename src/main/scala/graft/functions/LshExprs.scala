@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * Measured on sf10 (200k vectors): the same broadcast join runs 97.8 s
   * fused with the compositional projection and 1.2 s when the
   * projection is materialized first — a 80× cliff with zero plan-shape
-  * difference. (graft.LshDiag, round 10.)
+  * difference. (Round 10; `graft.Measure ab lsh_kernel`.)
   *
   * This expression collapses the whole bucket computation into ONE
   * tiny codegen call: the plane matrix rides along as a primitive

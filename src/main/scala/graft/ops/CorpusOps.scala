@@ -33,7 +33,7 @@ object CorpusOps extends QueryModule {
   /** dup_clusters' body over an injected near-dup pairs provider —
     * `(rawPairs, releaseDocs)` as returned by any of the
     * `TextOps.jaccardPairs*` variants. Factored out so the layout A/B
-    * (graft.JaccardBench) can run the SAME clustering over the cache
+    * (`graft.Measure ab jaccard`) can run the SAME clustering over the cache
     * arm and the bucketed arm explicitly; the registry query routes
     * through the size gate (`jaccardPairsAuto`).
     *

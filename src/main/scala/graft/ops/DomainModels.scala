@@ -26,7 +26,7 @@ object DomainModels extends QueryModule {
 
   /** flows_edges' join+projection over ANY layout of the two inputs
     * (plain parquet or bucketed tables) — the bucketed-layout A/B
-    * (graft.LayoutBench) must measure the identical expressions the
+    * (`graft.Measure ab layout`) must measure the identical expressions the
     * registry query runs. */
   private[graft] def flowsFrom(l: DataFrame, o: DataFrame): DataFrame =
     l.join(o, l("l_orderkey") === o("o_orderkey"))

@@ -219,6 +219,17 @@ object GraphOps extends QueryModule {
     }
   }
 
+  /** Each edge in both directions as a single Generate pass —
+    * `e.union(e.swap)` scans the (checkpointed) round input twice and
+    * doubles its subtree in the plan; explode reads it once (guide §2.3:
+    * don't recompute what one pass can emit; `Measure ab symshape`).
+    * Same rows, order-insensitive consumers only. */
+  private[graft] def symmetrize(e: DataFrame): DataFrame = e
+    .select(explode(array(
+      struct(col("src").as("s"), col("dst").as("d")),
+      struct(col("dst").as("s"), col("src").as("d")))).as("p"))
+    .select(col("p.s").as("src"), col("p.d").as("dst"))
+
   /** O(log n)-round connected components — alternating large-star /
     * small-star (Kiveris et al., "Connected Components in MapReduce and
     * Beyond", SoCC'14): each round hangs every node's neighbors onto
@@ -236,16 +247,6 @@ object GraphOps extends QueryModule {
       .select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
       .where(col("src") =!= col("dst")).distinct()
-    // One round-trip emission of each edge in both directions as a
-    // single Generate pass — `e.union(e.swap)` scans the (checkpointed)
-    // round input twice and doubles its subtree in the plan; explode
-    // reads it once (guide §2.3: don't recompute what one pass can
-    // emit). Same rows, order-insensitive consumers only.
-    def symmetrize(e: DataFrame): DataFrame = e
-      .select(explode(array(
-        struct(col("src").as("s"), col("dst").as("d")),
-        struct(col("dst").as("s"), col("src").as("d")))).as("p"))
-      .select(col("p.s").as("src"), col("p.d").as("dst"))
     // the paper's two phases (Algorithms 1-2), each as ONE window-min
     // pass instead of a groupBy + self-join: min(dst) OVER
     // (PARTITION BY src) computes the same per-neighborhood minimum the
@@ -930,8 +931,8 @@ object GraphOps extends QueryModule {
     //      EAGER since r15 (plan-size fix, not a semantics change): the
     //      lazy 3-iteration unroll over the scale-proportional edge set
     //      optimized to 7,690 plan lines / 610 Exchanges, and 1.9 s of
-    //      the gate's 3.1 s wall was the driver re-analyzing that plan
-    //      (OptDiag r15). barrierEvery=1 checkpoints the rank table per
+    //      the gate's 3.1 s wall was the driver re-analyzing that plan (r15,
+    //      `Measure bench`). barrierEvery=1 checkpoints the rank table per
     //      iteration — construction now runs those bounded jobs, so the
     //      Q is flagged eager (same contract as the CC gates; schema
     //      pinned in PageRankMassSpec). The mass row is bit-identical:
@@ -977,8 +978,8 @@ object GraphOps extends QueryModule {
         try {
           // The two CC bodies are INDEPENDENT convergence loops over the
           // same checkpointed edge list, but ran sequentially until r15 —
-          // half the twin's wall was one loop's driver gaps while the
-          // other loop had runnable work (OptDiag r15: 91 jobs, 2.4 s of
+          // half the twin's wall was one loop's driver gaps while the other
+          // loop had runnable work (r15 `Measure bench`: 91 jobs, 2.4 s of
           // gaps in a 5.7 s wall). Run the min-label loop on its own
           // driver thread and the log-star loop on this one (guide §2.6:
           // actions are only sequential because the driver calls them

@@ -89,7 +89,7 @@ object PortableHashOps extends QueryModule {
         }
         // Signature cache REMOVED (r15 third session, measured): the
         // r15a size-gated `.cache()` here lost to the plain plan at
-        // BOTH tested scales — graft.CacheGateBench (interleaved arms,
+        // BOTH tested scales — `Measure ab cachegate` (interleaved arms,
         // one JVM, min-of-3) cached/uncached 1.28/1.14 s at the sf0.1
         // corpus, 34.7/31.6 s at a 224 MB docs-amplified corpus:
         // uncached, the self-join's sides share this aggregate's

@@ -62,7 +62,7 @@ object RecallOps extends QueryModule {
 
     // Multi-table LSH vs brute-force cosine top-10. 20 tables × 6 bits
     // on weakly-correlated 64-dim vectors probes ~28% of this fixture;
-    // measured recall 0.68/0.70 at sf0.01/sf0.1 (graft.LshSweep grid) —
+    // measured recall 0.68/0.70 at sf0.01/sf0.1 (r7 LSH grid, BENCH_NOTES) —
     // the 0.5 floor pins "the index concentrates true neighbors well
     // above the probed fraction" with margin, per VERDICT r6 item 6.
     Q("ann_lsh_recall",

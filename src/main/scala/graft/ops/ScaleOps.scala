@@ -107,8 +107,8 @@ object ScaleOps extends QueryModule {
   }
 
   /** Deterministic skewed join fixture shared by SkewSpec (distribution
-    * pin) and SkewBench (wall-clock crossover) — a drifted copy would let
-    * the spec pin a different shape than the bench measures. Probe side:
+    * pin) and `Measure ab skew` (wall-clock crossover) — a drifted copy
+    * would let the spec pin another shape than the bench. Probe side:
     * lineitem with every even orderkey collapsed onto key 1 (~half the
     * rows hot), optionally row-amplified; build side: unique keys over
     * the same domain from orders. */
@@ -129,6 +129,23 @@ object ScaleOps extends QueryModule {
       .withColumn("payload", pmod(col("k"), lit(97)).cast("double"))
     (fact, dim)
   }
+
+  /** a2_approx_distinct's gate over deduped (l_suppkey, l_orderkey) pairs
+    * of either exchange shape (`Measure ab a2shape` times both). */
+  private[graft] def a2Gate(pairs: DataFrame): DataFrame = pairs
+    .groupBy("l_suppkey")
+    .agg(approx_count_distinct("l_orderkey").as("approx_orders"),
+      count(lit(1)).as("exact_orders"))
+    .agg(count(lit(1)).as("n_groups"),
+      max(abs(col("approx_orders") - col("exact_orders")) /
+        col("exact_orders")).as("max_rel_err"),
+      (sum(when(abs(col("approx_orders") - col("exact_orders")) /
+        col("exact_orders") > 0.15, 1).otherwise(0)) /
+        count(lit(1))).as("bad_frac"))
+    .select(col("n_groups"),
+      round(col("max_rel_err"), 6).as("max_rel_err"),
+      round(col("bad_frac"), 6).as("bad_frac"))
+    .filter(col("bad_frac") <= 0.01)
 
   def all: Seq[Q] = Seq(
 
@@ -174,23 +191,10 @@ object ScaleOps extends QueryModule {
     //      near-uniform; under group skew prefer the default composite
     //      exchange.
     Q("a2_approx_distinct",
-      (s, d) => lineitem(s, d)
+      (s, d) => a2Gate(lineitem(s, d)
         .select("l_suppkey", "l_orderkey")
         .repartition(col("l_suppkey"))
-        .distinct()
-        .groupBy("l_suppkey")
-        .agg(approx_count_distinct("l_orderkey").as("approx_orders"),
-          count(lit(1)).as("exact_orders"))
-        .agg(count(lit(1)).as("n_groups"),
-          max(abs(col("approx_orders") - col("exact_orders")) /
-            col("exact_orders")).as("max_rel_err"),
-          (sum(when(abs(col("approx_orders") - col("exact_orders")) /
-            col("exact_orders") > 0.15, 1).otherwise(0)) /
-            count(lit(1))).as("bad_frac"))
-        .select(col("n_groups"),
-          round(col("max_rel_err"), 6).as("max_rel_err"),
-          round(col("bad_frac"), 6).as("bad_frac"))
-        .filter(col("bad_frac") <= 0.01),
+        .distinct()),
       None),
 
     // ---- A2's one-exchange exact shape (SCALE.md decade 5, finding 5):
@@ -239,14 +243,14 @@ object ScaleOps extends QueryModule {
     //      of the fact side) is deliberately NOT a registered query: an
     //      unconditional salt multiplies the shuffled fact by the salt
     //      count regardless of skew — ~1.2B shuffled rows at sf100,
-    //      measured disk-death (SCALE.md decade 5, finding 3). Its
-    //      byte-identity vs the plain join is result-pinned in SkewBench
+    //      measured disk-death (SCALE.md decade 5, finding 3). Its byte-
+    //      identity vs the plain join is result-pinned in `Measure ab skew`
     //      (the A/B evidence arm) and SkewSpec; the registry carries only
     //      the scale-safe adaptive form below.
 
     // ---- Adaptive salted join on the ACTUALLY-skewed fixture (the one
-    //      SkewSpec/SkewBench share): ~half the probe rows collapse onto
-    //      key 1, which detection must find from the sample and salt,
+    //      SkewSpec and `Measure ab skew` share): ~half the probe rows
+    //      collapse onto key 1, which detection must find and salt,
     //      while the thousands of uniform keys pass through with fan-out
     //      1. Oracle = the plain SQL join over the same CASE-collapsed
     //      keys, so a detection or decomposition bug (lost rows,
@@ -292,7 +296,7 @@ object ScaleOps extends QueryModule {
       (s, d) => {
         // Cache REMOVED (r15 third session, measured): the r15a
         // size-gated cache of this normalized-vector projection LOSES
-        // 1.88× at a 76 MB / 300k-vector fixture (graft.CacheGateBench,
+        // 1.88× at a 76 MB / 300k-vector fixture (`Measure ab cachegate`,
         // interleaved arms: cached 214.0 s vs uncached 114.0 s; ~even
         // at the 780 KB sf0.1 table) — Spark's columnar cache encodes
         // the 64-wide array<double> rows slowly and its scans are not

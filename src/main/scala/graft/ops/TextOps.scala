@@ -67,7 +67,7 @@ object TextOps extends QueryModule {
     * better bucketed layout through [[jaccardPairsAuto]].
     *
     * `cached` overrides the gate for callers that are the A/B
-    * measurement itself (graft.JaccardBench's explicit cache arm) and
+    * measurement itself (`Measure ab jaccard`'s explicit cache arm) and
     * for tests pinning the above-gate plan shape on KB fixtures. */
   private[graft] def jaccardPairsWithRelease(
       s: SparkSession, d: String,
@@ -90,7 +90,7 @@ object TextOps extends QueryModule {
     * corpus is treated as big, so the scale-safe bucketed arm is the
     * default on any filesystem the gate cannot measure. */
   private[graft] def corpusCacheable(s: SparkSession, d: String): Boolean =
-    !graft.util.SizeGate.noGatedCache &&
+    !graft.util.SizeGate.noGatedCache(s) &&
       dirBytes(s, s"$d/documents.parquet") <= CORPUS_CACHE_MAX_BYTES
 
   /** Gram-dim broadcast gate, deliberately SEPARATE from the cache
@@ -201,7 +201,7 @@ object TextOps extends QueryModule {
     * negligible, though not provably zero; the r13 32-bit MurmurHash3
     * made cross-dataset aliasing merely unlikely at warehouse scale,
     * ADVICE r13). Stable across JVMs by design: amortized readers
-    * ([[jaccardPairsOverTable]], JaccardBench's reuse arm) re-derive
+    * ([[jaccardPairsOverTable]], [[jaccardPairsAuto]]) re-derive
     * the same name in later sessions. */
   private[graft] def bucketedTableName(d: String): String = {
     val digest = java.security.MessageDigest.getInstance("SHA-256")
@@ -235,7 +235,7 @@ object TextOps extends QueryModule {
 
   /** The pairs plan over an ALREADY-written bucketed corpus table —
     * the amortized read path for a caller holding a standing table on
-    * its own freshness contract (and JaccardBench's reuse arm). */
+    * its own freshness contract (and [[jaccardPairsAuto]]'s memo). */
   private[graft] def jaccardPairsOverTable(s: SparkSession, d: String,
       table: String): DataFrame =
     jaccardPairsFrom(s.table(table), corpusBcastable(s, d))
@@ -556,7 +556,7 @@ object TextOps extends QueryModule {
         // r15a version size-gated a `.cache()` of this aggregate, but
         // UNCACHED the self-join's two banded sides share the
         // groupBy(doc_id) exchange via ReuseExchange and only the final
-        // aggregate re-runs — graft.CacheGateBench (interleaved arms in
+        // aggregate re-runs — `Measure ab cachegate` (interleaved arms in
         // ONE JVM, min-of-3) reads cached/uncached 0.91/0.75 s at the
         // 584 KB sf0.1 corpus and 28.9/21.5 s at a 224 MB docs-amplified
         // corpus: the InMemoryRelation materialization plus the lost

@@ -110,14 +110,14 @@ object VectorOps extends QueryModule {
     * LshExprsSpec) because at 20×6 it inlined 120 literal arrays into
     * the expression tree and pushed any stage fused with a downstream
     * join off the compiled path — a measured 80× cliff at sf10
-    * (97.8 s → 1.2 s for the identical join; graft.LshDiag, round 10).
+    * (97.8 s → 1.2 s for the identical join; `Measure ab lsh_kernel`).
     *
     * The default geometry is measured, not guessed: the fixture's true
     * top-10 neighbors sit at cos 0.24–0.42 (sign-agreement
     * p = 1 − θ/π ≈ 0.59–0.64 per bit), so a 6-bit table collides a
     * true neighbor with p⁶ ≈ 0.05 and L tables give recall
-    * ≈ 1 − (1 − p⁶)^L. `graft.LshSweep` measures the grid at both test
-    * scales (recall at sf0.01/sf0.1, candidate fraction ~equal at both):
+    * ≈ 1 − (1 − p⁶)^L. The r7 grid sweep (BENCH_NOTES) measured both
+    * test scales (recall at sf0.01/sf0.1, candidate fraction ~equal):
     * 8×6 (round-6 config) 0.26/0.34 probing ~13%; 16×6 0.50/0.64
     * probing ~24%; 20×6 0.68/0.70 probing ~28%; 16×7 0.28/0.36 at ~13%.
     * 20×6 is the smallest config clearing the ≥0.5 gate floor WITH
@@ -159,7 +159,7 @@ object VectorOps extends QueryModule {
 
   /** Distinct scored LSH candidate pairs (query_id, vec_id, cos_raw)
     * for a given geometry — the sub-linear core of [[lshTopK]], exposed
-    * so `graft.LshSweep` can measure candidate fraction per config
+    * so specs (LshClusteredSpec) can gate candidate fraction per config
     * through the production code path.
     *
     * Shape notes (round-10 rework): the corpus side explodes to
@@ -197,8 +197,8 @@ object VectorOps extends QueryModule {
       .dropDuplicates("query_id", "vec_id")
   }
 
-  /** The LSH top-k body, parameterized by geometry so `graft.LshSweep`
-    * can measure configs through the production code path. */
+  /** The LSH top-k body, parameterized by geometry so specs can gate
+    * configs through the production code path. */
   private[graft] def lshTopK(s: SparkSession, d: String,
       tables: Int = numTables, bits: Int = bitsPerTable): DataFrame = {
     val scored = lshCandidates(s, d, tables, bits)

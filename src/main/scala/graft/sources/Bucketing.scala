@@ -30,10 +30,10 @@ object Bucketing {
 
   /** Marker file written into every bucketed table's location recording
     * the ACTUAL bucket count of the layout. Cross-JVM readers that must
-    * restate the spec in a `CREATE TABLE ... INTO n BUCKETS` DDL
-    * (LayoutBench.ensureTable) read this instead of trusting an env
-    * var: Spark trusts the DDL, so a restated count larger than the
-    * written one plans exchange-free SMJ/window over WRONG bucket
+    * restate the spec in a `CREATE TABLE ... INTO n BUCKETS` DDL read
+    * this instead of trusting a caller's count: Spark trusts the DDL, so
+    * a restated count larger than the written one plans exchange-free
+    * SMJ/window over WRONG bucket
     * placement — silently wrong rows (ADVICE r13). Underscore-prefixed,
     * so Spark's file index ignores it as a data file. */
   val BucketMarkerFile = "_graft_buckets"
@@ -46,7 +46,7 @@ object Bucketing {
     * multi-file bucket forfeits the sort metadata), and when `path` is
     * given any stale catalog entry is dropped first so reruns are
     * idempotent. `Pipeline.writeBuild(buckets = Some(n))` and
-    * `BucketBench` both write through here.
+    * `Measure ab layout` both write through here.
     *
     * `table` may be database-qualified (`db.t`); the stale-location
     * recovery resolves the managed location THROUGH the session catalog

@@ -95,19 +95,15 @@ object SizeGate {
     * default on any store the gate cannot size. */
   def cacheIfBounded(s: org.apache.spark.sql.SparkSession, df: DataFrame,
       path: String, maxBytes: Long = DEFAULT_CACHE_MAX_BYTES): DataFrame =
-    if (!noGatedCache && dirBytes(s, path) <= maxBytes) df.cache() else df
+    if (!noGatedCache(s) && dirBytes(s, path) <= maxBytes) df.cache() else df
 
-  /** Measurement-only kill switch (`GRAFT_NO_GATED_CACHE` in the env,
-    * or the `graft.noGatedCache` system property for in-process A/B
-    * mains that must interleave arms inside ONE JVM — this host's
-    * window-to-window speed swings make cross-process arms
-    * incomparable): forces every size-gated cache onto its above-gate
-    * (uncached) arm so the cache-vs-recompute crossover can be
-    * A/B-measured per query without code edits — the same sweep knob
-    * role as `SPARK_GRAFT_CONF`. Absent in production and in every
-    * driver entry point, where the measured gate bounds stay
-    * authoritative. */
-  private[graft] def noGatedCache: Boolean =
-    sys.env.contains("GRAFT_NO_GATED_CACHE") ||
-      sys.props.get("graft.noGatedCache").contains("1")
+  /** Measurement-only kill switch, a session conf (`true` to set):
+    * forces every size-gated cache onto its above-gate (uncached) arm, so
+    * the cache-vs-recompute crossover can be A/B-measured per query in one
+    * JVM (`graft.Measure ab cachegate`). Unset in production and in every
+    * driver entry point, where the measured gate bounds stay authoritative. */
+  val NoGatedCacheKey = "spark.graft.noGatedCache"
+
+  private[graft] def noGatedCache(s: org.apache.spark.sql.SparkSession)
+      : Boolean = s.conf.getOption(NoGatedCacheKey).exists(_.toBoolean)
 }

@@ -51,7 +51,7 @@ class AnnRecallSpec extends SparkSpec {
       truth.intersect(lsh.getOrElse(q, Set.empty)).size.toDouble / truth.size
     }
     val mean = recalls.sum / recalls.size
-    // 20 tables × 6 bits, chosen from the measured graft.LshSweep grid:
+    // 20 tables × 6 bits, chosen from the measured r7 LSH grid (BENCH_NOTES):
     // recall 0.68 (sf0.01) / 0.70 (sf0.1) probing ~28% of this
     // nearly-unclustered fixture — the smallest config clearing the
     // 0.5 gate floor with margin at both scales.

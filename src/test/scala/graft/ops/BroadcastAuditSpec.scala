@@ -13,16 +13,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * parameter-bounded (query sets, eval shingles, detection caps,
   * one-row scalars), or caller-controlled (a documented contract).
   *
-  * This spec greps the main source tree and fails on ANY new
-  * `broadcast(` call site: adding one requires classifying it in the
-  * SCALE.md table and updating the allowlist here — the class cannot
-  * regress silently. */
+  * This spec greps the main source tree ([[graft.SourceAudit]]) and fails
+  * on ANY new `broadcast(` call site: adding one requires classifying it
+  * in the SCALE.md table and updating the allowlist here — the class
+  * cannot regress silently. */
 class BroadcastAuditSpec extends AnyFunSuite {
 
   /** file (relative to the graft source root) → audited call-site
     * count. Keep in lockstep with SCALE.md's audit table. */
   private val audited = Map(
-    "LshDiag.scala" -> 1, // ANN query set (diagnostic main)
+    "Measure.scala" -> 1, // ANN query set (lsh_kernel experiment)
     "ops/ClassicQueries.scala" -> 4, // nation/region dims
     "ops/ClassicQueries2.scala" -> 9, // nation/region dims + 1-row scalars
     "ops/CorpusOps.scala" -> 4, // eval shingles, lang thresholds, scalars
@@ -43,53 +43,7 @@ class BroadcastAuditSpec extends AnyFunSuite {
   )
 
   test("every broadcast() call site in src/main is in the audited list") {
-    val root = new java.io.File("src/main/scala/graft")
-    assert(root.isDirectory, s"source root not found from ${
-      new java.io.File(".").getAbsolutePath}")
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).fold(Seq.empty[java.io.File])(_.toSeq.flatMap(files))
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val call = "\\bbroadcast\\(".r
-    // Drop a trailing line comment, but only at a '//' OUTSIDE string
-    // literals — a naive split("//") would also truncate at a URL or
-    // path inside a string and silently exclude a broadcast( call
-    // later on the same line (ADVICE r12). Good enough for one-line
-    // scans: tracks double-quote parity incl. \" escapes; multi-line
-    // strings spanning the '//' would need a real lexer.
-    def stripLineComment(line: String): String = {
-      var inStr = false; var i = 0
-      while (i < line.length) {
-        val c = line.charAt(i)
-        if (inStr && c == '\\') i += 1
-        // a double quote as a CHAR literal ('"' or '\"') must not
-        // toggle string state — it would leave the scanner inside a
-        // phantom string and hide a later broadcast( on the line
-        // (ADVICE r13)
-        else if (!inStr && c == '\'' && i + 2 < line.length &&
-          line.charAt(i + 2) == '\'' && line.charAt(i + 1) != '\\') i += 2
-        else if (!inStr && c == '\'' && i + 3 < line.length &&
-          line.charAt(i + 1) == '\\' && line.charAt(i + 3) == '\'') i += 3
-        else if (c == '"') inStr = !inStr
-        else if (!inStr && c == '/' && i + 1 < line.length &&
-          line.charAt(i + 1) == '/') return line.substring(0, i)
-        i += 1
-      }
-      line
-    }
-    val found = files(root).map { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      val n = try src.getLines().map { line =>
-        val t = line.trim
-        // strip doc/comment lines and trailing line comments: the audit
-        // counts CALLS, and hint-removal rationale comments legitimately
-        // name broadcast()
-        if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) 0
-        else call.findAllIn(stripLineComment(line)).length
-      }.sum finally src.close()
-      f.getPath.replace('\\', '/')
-        .stripPrefix("src/main/scala/graft/") -> n
-    }.filter(_._2 > 0).toMap
+    val found = graft.SourceAudit.calls("\\bbroadcast\\(".r)
     val unaudited = found.filterNot { case (p, n) => audited.get(p).contains(n) }
     val stale = audited.filterNot { case (p, n) => found.get(p).contains(n) }
     assert(unaudited.isEmpty && stale.isEmpty,

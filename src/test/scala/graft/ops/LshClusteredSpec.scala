@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * hard or it is pointless at 100 TB. This spec regenerates the
   * clustered fixture (DataGen `clustered`: label-centered Gaussians,
   * in-cluster cos ≈0.98 — deterministic, so the spec pins the same
-  * distribution LshSweep measured) and gates the pinned clustered
+  * distribution the LSH grid sweep measured) and gates the pinned clustered
   * config, 8 tables × 10 bits: top-10 recall ≥0.5 AND candidate
-  * fraction ≤5%. LshSweep's full grid at 2k and 20k vectors (BENCH_NOTES
+  * fraction ≤5%. The sweep's full grid at 2k and 20k vectors (BENCH_NOTES
   * round 9) shows the measured values: recall 1.000, 3.0% — stable
   * across the decade.
   */

@@ -8,13 +8,13 @@ import org.apache.spark.sql.functions._
   * query, since its fixed fan-out is a measured scale-killer at sf100;
   * SCALE.md decade 5, finding 3) and the registry's scale-safe
   * `skew_adaptive_join`, plus the salt distribution property that
-  * removes the straggler. SkewBench (main) measures the wall-clock
-  * crossover at sf0.1. */
+  * removes the straggler. `graft.Measure ab skew` measures the
+  * wall-clock crossover at sf0.1. */
 class SkewSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  // the SAME construction SkewBench measures (ScaleOps.skewedFixture):
+  // the SAME construction `Measure ab skew` times (ScaleOps.skewedFixture):
   // every even orderkey collapses onto key 1 — ~half the rows hot
   private lazy val (skewed, dim) =
     ScaleOps.skewedFixture(spark, sf, amplify = 1)

@@ -13,7 +13,7 @@ class BucketingSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     // simulate the dead session: files at the default managed location
     // with NO catalog entry — saveAsTable alone would refuse with
-    // LOCATION_ALREADY_EXISTS (hit live by JaccardBench r13: a second
+    // LOCATION_ALREADY_EXISTS (hit live by the r13 jaccard A/B: a second
     // JVM re-deriving the same dataset-keyed corpus table)
     val loc = new java.io.File(s"spark-warehouse/$t")
     loc.mkdirs()

@@ -76,13 +76,15 @@ class SizeGateSpec extends SparkSpec {
   test("measurement kill switch (graft.noGatedCache) forces the " +
     "uncached arm even below the bound") {
     val docs = s"$sf/documents.parquet"
-    sys.props("graft.noGatedCache") = "1"
+    spark.conf.set(SizeGate.NoGatedCacheKey, "true")
     try {
       val df = SizeGate.cacheIfBounded(spark,
         graft.Tables.documents(spark, sf).select("doc_id"), docs)
       assert(!df.queryExecution.withCachedData.toString
         .contains("InMemoryRelation"),
         "with the kill switch set no gated cache may be pinned")
-    } finally sys.props.remove("graft.noGatedCache")
+      assert(!graft.ops.TextOps.corpusCacheable(spark, sf),
+        "the corpus cache gate reads the same switch")
+    } finally spark.conf.unset(SizeGate.NoGatedCacheKey)
   }
 }
