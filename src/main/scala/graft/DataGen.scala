@@ -144,8 +144,8 @@ object DataGen {
       generateClusteredEmbeddings(spark, args(1).toLong, args(2))
     } else if (docsOnly) {
       // `DataGen docs <nDocs> <outDir>`: documents-only fixture — the
-      // docs-amplified knob for exercising the >2 GiB corpus-cache gate
-      // (TextOps.CORPUS_CACHE_MAX_BYTES) without a full sf300 star
+      // docs-amplified knob for exercising the >1 GiB corpus-cache gate
+      // (SizeGate.DEFAULT_CACHE_MAX_BYTES) without a full sf300 star
       // schema. Same law and SplitMix determinism as the main generator.
       generateDocuments(spark, args(1).toLong, args(2))
     } else generate(spark, sf, outDir)

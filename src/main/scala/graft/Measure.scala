@@ -217,16 +217,16 @@ object Measure {
           Arm("plain", () => DomainModels.balanceOver(DomainModels.balanceChanges(s, d))),
           Arm("bucketed", () => DomainModels.balanceOver(cb)))))
     },
-    // jaccard corpus: cached vs bucketed (rewritten per run), gated plan, routed entry
+    // jaccard corpus below the gate (cached), and with the kill switch set: the lazy
+    // query's uncached plan and the eager route's memoized bucketed table
     "jaccard" -> { (s, d, _) =>
-      val cache = () => TextOps.jaccardPairsWithRelease(s, d, cached = Some(true))
-      val bkt = () => (TextOps.jaccardPairsBucketed(s, d), () => ())
-      Seq(Group("jaccard.pairs", Seq(Arm("cache", () => cache()._1),
-          Arm("bucketed", () => bkt()._1),
-          Arm("gated", () => TextOps.jaccardPairsWithRelease(s, d)._1),
-          Arm("auto", () => TextOps.jaccardPairsAuto(s, d)._1))),
-        Group("jaccard.clusters", Seq(Arm("cache", () => CorpusOps.dupClustersFrom(cache())),
-          Arm("bucketed", () => CorpusOps.dupClustersFrom(bkt())))))
+      val off = Map(graft.util.SizeGate.NoGatedCacheKey -> "true")
+      val auto = () => TextOps.jaccardPairsAuto(s, d)
+      Seq(Group("jaccard.pairs", Seq(Arm("cached", () => TextOps.jaccardPairs(s, d)._1),
+          Arm("uncached", () => TextOps.jaccardPairs(s, d)._1, off),
+          Arm("bucketed", () => auto()._1, off))),
+        Group("jaccard.clusters", Seq(Arm("cached", () => CorpusOps.dupClustersFrom(auto())),
+          Arm("bucketed", () => CorpusOps.dupClustersFrom(auto()), off))))
     },
     // plain vs salted shuffle join on the half-hot-key fixture (×10), AQE skew join off
     // but in the reference arm; the sha2 work runs on the reducer owning the hot key

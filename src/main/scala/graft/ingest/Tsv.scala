@@ -1,7 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.input_file_name
+import org.apache.spark.sql.functions.{col, input_file_name}
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -72,30 +72,49 @@ object Tsv {
     * the parse twice). The third element RELEASES the per-file caches:
     * call it after consuming the union (unpersisting the union itself
     * cannot reach the per-file InMemoryRelations, so skipping the
-    * release leaks cache storage per call in a long-lived driver). */
+    * release leaks cache storage per call in a long-lived driver).
+    *
+    * A file is skipped only when positively identified as corrupt —
+    * malformed rows, or a whole-file read error ([[corrupt]]).
+    * Any other failure (a missing path, an infrastructure error)
+    * rethrows after releasing the caches taken so far: dropping a
+    * healthy file from the union on a transient error would silently
+    * load a partial day. */
   def readSkippingBadFiles(spark: SparkSession, files: Seq[String],
       schema: StructType): (DataFrame, Seq[String], () => Unit) = {
-    import org.apache.spark.sql.functions.col
     val cached = scala.collection.mutable.Buffer[DataFrame]()
-    val attempts = files.map(f => f -> Try {
+    val release = () => cached.foreach(_.unpersist())
+    val (good, bad) = try files.partitionMap { f =>
       val df = read(spark, f, schema, permissive = true).cache()
-      try {
-        // count() (not limit(1)) so the probe materializes whole cached
-        // partitions — a short-circuited probe would leave partitions
-        // uncached and downstream reads would re-parse.
-        if (df.filter(col("_corrupt_record").isNotNull).count() > 0)
-          throw new IllegalArgumentException(s"malformed rows in $f")
-        cached += df
-        df.drop("_corrupt_record")
-      } catch { case e: Throwable => df.unpersist(); throw e }
-    })
-    val good = attempts.collect { case (_, scala.util.Success(df)) => df }
-    val bad = attempts.collect { case (f, scala.util.Failure(_)) => f }
+      cached += df
+      if (corrupt(df)) { df.unpersist(); Right(f) }
+      else Left(df.drop("_corrupt_record"))
+    } catch { case e: Throwable => release(); throw e }
     val union = good.reduceOption(_ unionByName _)
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    (union, bad, () => cached.foreach(_.unpersist()))
+    (union, bad, release)
   }
+
+  /** The one file-corruption probe of both skip-file paths, over a
+    * cached permissive [[read]] of one file: true iff it holds malformed
+    * rows or fails with a whole-file read error. Any other failure is not
+    * data corruption and rethrows. count() (not limit(1)) so the probe
+    * materializes whole cached partitions — a short-circuited probe would
+    * leave partitions uncached and downstream reads would re-parse. */
+  private[graft] def corrupt(raw: DataFrame): Boolean =
+    try raw.filter(col("_corrupt_record").isNotNull).count() > 0
+    catch { case e: Exception if readCorruption(e) => true }
+
+  /** Spark wraps parquet/csv/gzip decode errors in FAILED_READ_FILE;
+    * malformed-record errors carry MALFORMED markers. */
+  private def readCorruption(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
+      .exists { c =>
+        val m = Option(c.getMessage).getOrElse("")
+        m.contains("FAILED_READ_FILE") || m.contains("MALFORMED") ||
+          m.contains("CorruptedGZIP") || c.isInstanceOf[java.io.EOFException]
+      }
 
   /** One landing contract (sort + load_date column) for both write
     * modes — a drifted copy would silently diverge the append and
@@ -105,7 +124,7 @@ object Tsv {
     import org.apache.spark.sql.functions.lit
     val sorted =
       if (sortCols.nonEmpty)
-        df.sortWithinPartitions(sortCols.map(org.apache.spark.sql.functions.col): _*)
+        df.sortWithinPartitions(sortCols.map(col): _*)
       else df
     val base = sorted.withColumn("load_date", lit(loadDate)).write
     val writer =

@@ -265,17 +265,6 @@ object Pipeline {
       .sortBy(_._1).lastOption.map(_._2)
   }
 
-  /** Whole-file read corruption (vs infra failure): Spark wraps parquet/
-    * csv/gzip decode errors in FAILED_READ_FILE; malformed-record errors
-    * carry MALFORMED markers. Anything else is not data corruption. */
-  private def isReadCorruption(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
-      .exists { c =>
-        val m = Option(c.getMessage).getOrElse("")
-        m.contains("FAILED_READ_FILE") || m.contains("MALFORMED") ||
-          m.contains("CorruptedGZIP") || c.isInstanceOf[java.io.EOFException]
-      }
-
   /** M7 — preflight: all five raw inputs present. Accepts BOTH dump
     * layouts: a flat directory of files and dailyRun's per-type
     * subdirectories (destinationDir/{type}/...) — the gate must be able
@@ -346,18 +335,11 @@ object Pipeline {
         val raw = Tsv.read(spark, file.toString, schemas(t)).cache()
         try {
           // Corruption must be POSITIVELY identified before the
-          // destructive quarantine: a row-level parse problem shows up
-          // as corrupt-record rows; a whole-file read error (bad gzip)
-          // carries Spark's FAILED_READ_FILE marker. Any OTHER probe
+          // destructive quarantine (Tsv.corrupt): any other probe
           // failure (infra: executor loss, disk) rethrows — renaming a
           // healthy file to .corrupt on a transient error would lose
           // the day if upstream no longer publishes the dump.
-          val badRows =
-            try raw.filter(col("_corrupt_record").isNotNull).count()
-            catch {
-              case e: Exception if isReadCorruption(e) => -1L
-            }
-          if (badRows == 0L) {
+          if (!Tsv.corrupt(raw)) {
             Tsv.landToParquetIdempotent(raw.drop("_corrupt_record"),
               dateToken, s"$parquetDir/$t", sortCols = Seq.empty)
             Right(t -> spark.read.parquet(s"$parquetDir/$t")

@@ -30,12 +30,11 @@ import graft.Tables._
   */
 object CorpusOps extends QueryModule {
 
-  /** dup_clusters' body over an injected near-dup pairs provider —
-    * `(rawPairs, releaseDocs)` as returned by any of the
-    * `TextOps.jaccardPairs*` variants. Factored out so the layout A/B
-    * (`graft.Measure ab jaccard`) can run the SAME clustering over the cache
-    * arm and the bucketed arm explicitly; the registry query routes
-    * through the size gate (`jaccardPairsAuto`).
+  /** Duplicate clusters over a near-dup pairs provider —
+    * `(rawPairs, releaseDocs)` as returned by `TextOps.jaccardPairsAuto`;
+    * the body of `dup_clusters` and `split_leakage_safe`. One row per doc
+    * in some pair: `doc_id`, `cluster_id` (min member), `cluster_size`,
+    * `is_canonical`.
     *
     * Materializes the (small) pair list ONCE, then drops every
     * corpus-sized input BEFORE the loop: ccLogStar references its
@@ -51,10 +50,9 @@ object CorpusOps extends QueryModule {
     * partially created checkpoint blocks (pairs stays null until
     * ckptTracked returns; the release is null-guarded). */
   private[graft] def dupClustersFrom(
-      provider: (org.apache.spark.sql.DataFrame, () => Unit))
-      : org.apache.spark.sql.DataFrame = {
+      provider: (DataFrame, () => Unit)): DataFrame = {
     val (rawPairs, releaseDocs) = provider
-    var pairs: org.apache.spark.sql.DataFrame = null
+    var pairs: DataFrame = null
     var pairIds: Set[Int] = Set.empty
     try {
       val cp = graft.util.Checkpoints.ckptTracked(
@@ -74,6 +72,24 @@ object CorpusOps extends QueryModule {
       if (pairs != null) graft.util.Checkpoints.release(pairs, pairIds)
     }
   }
+
+  /** DuckDB twin of the pair graph's components under [[dupClustersFrom]]:
+    * the CTE prefix `lab(doc_id, cluster_id)`, cluster id = min member,
+    * shared by the dup_clusters and split_leakage_safe oracles. */
+  private val dupLabelsSql: String =
+    s"""WITH RECURSIVE
+            pairs AS (SELECT doc_a, doc_b
+                      FROM (${TextOps.jaccardPairsSql})),
+            edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+                      UNION ALL
+                      SELECT doc_b, doc_a FROM pairs),
+            reach(doc_id, lab) AS (
+              SELECT src, src FROM edges
+              UNION
+              SELECT e.dst, r.lab
+              FROM reach r JOIN edges e ON e.src = r.doc_id),
+            lab AS (SELECT doc_id, MIN(lab) AS cluster_id
+                    FROM reach GROUP BY 1)"""
 
   def all: Seq[Q] = Seq(
 
@@ -100,21 +116,9 @@ object CorpusOps extends QueryModule {
     Q("dup_clusters",
       (s, d) =>
         // size-gated: cache plan at gate scale, bucketed-table layout past
-        // TextOps.CORPUS_CACHE_MAX_BYTES (the 100 TB corpus path)
+        // SizeGate.DEFAULT_CACHE_MAX_BYTES (the 100 TB corpus path)
         dupClustersFrom(TextOps.jaccardPairsAuto(s, d)),
-      Some(s"""WITH RECURSIVE
-            pairs AS (SELECT doc_a, doc_b
-                      FROM (${TextOps.jaccardPairsSql})),
-            edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-                      UNION ALL
-                      SELECT doc_b, doc_a FROM pairs),
-            reach(doc_id, lab) AS (
-              SELECT src, src FROM edges
-              UNION
-              SELECT e.dst, r.lab
-              FROM reach r JOIN edges e ON e.src = r.doc_id),
-            lab AS (SELECT doc_id, MIN(lab) AS cluster_id
-                    FROM reach GROUP BY 1)
+      Some(s"""$dupLabelsSql
             SELECT doc_id, cluster_id,
               CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT)
                 AS cluster_size,
@@ -427,8 +431,8 @@ object CorpusOps extends QueryModule {
     //      across train and eval is silent contamination), so the split
     //      decision hashes the cluster's canonical id — portable 60-bit
     //      hash, 90/10 — and singleton docs hash their own id. Reuses
-    //      dup_clusters' machinery end-to-end: same pair list, same
-    //      O(log n) ccLogStar, same checkpoint/release discipline. The
+    //      dup_clusters' body (dupClustersFrom) end-to-end: same pair
+    //      list, same CC, same checkpoint/release discipline. The
     //      cluster map joins back to the corpus on doc_id WITHOUT a
     //      broadcast hint: the dup-cluster side is usually orders
     //      smaller than the corpus but is data-dependent — AQE promotes
@@ -436,44 +440,16 @@ object CorpusOps extends QueryModule {
     //      safe fallback when a pathological corpus makes it large.
     Q("split_leakage_safe",
       (s, d) => {
-        // size-gated: cache plan at gate scale, bucketed-table layout past
-        // TextOps.CORPUS_CACHE_MAX_BYTES (the 100 TB corpus path)
-        val (rawPairs, releaseDocs) = TextOps.jaccardPairsAuto(s, d)
-        var pairs: org.apache.spark.sql.DataFrame = null
-        var pairIds: Set[Int] = Set.empty
-        try {
-          val cp = graft.util.Checkpoints.ckptTracked(
-            rawPairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
-          pairs = cp._1; pairIds = cp._2
-          releaseDocs()
-          // size-gated CC (r15) — same routing as dup_clusters
-          val cc = GraphOps.ccAuto(pairs)
-          val key = coalesce(col("component_id"), col("doc_id"))
-          documents(s, d).select(col("doc_id"))
-            .join(cc.select(col("node").as("doc_id"), col("component_id")),
-              Seq("doc_id"), "left")
-            .select(col("doc_id"), key.as("split_key"),
-              when(PortableHashOps.h60(
-                concat(lit("split:"), key.cast("string"))) % 100 < 90,
-                "train").otherwise("eval").as("split"))
-        } finally {
-          releaseDocs() // idempotent failure backstop
-          if (pairs != null) graft.util.Checkpoints.release(pairs, pairIds)
-        }
+        val clusters = dupClustersFrom(TextOps.jaccardPairsAuto(s, d))
+        val key = coalesce(col("cluster_id"), col("doc_id"))
+        documents(s, d).select(col("doc_id"))
+          .join(clusters.select("doc_id", "cluster_id"), Seq("doc_id"), "left")
+          .select(col("doc_id"), key.as("split_key"),
+            when(PortableHashOps.h60(
+              concat(lit("split:"), key.cast("string"))) % 100 < 90,
+              "train").otherwise("eval").as("split"))
       },
-      Some(s"""WITH RECURSIVE
-            pairs AS (SELECT doc_a, doc_b
-                      FROM (${TextOps.jaccardPairsSql})),
-            edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-                      UNION ALL
-                      SELECT doc_b, doc_a FROM pairs),
-            reach(doc_id, lab) AS (
-              SELECT src, src FROM edges
-              UNION
-              SELECT e.dst, r.lab
-              FROM reach r JOIN edges e ON e.src = r.doc_id),
-            lab AS (SELECT doc_id, MIN(lab) AS cluster_id
-                    FROM reach GROUP BY 1)
+      Some(s"""$dupLabelsSql
             SELECT d.doc_id,
               COALESCE(l.cluster_id, d.doc_id) AS split_key,
               CASE WHEN ${PortableHashOps.sqlH60(

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.util.SizeGate
 
 /** Training-data text pipeline operators over the `documents` table —
   * north-star extensions beyond the reference's surface (SURVEY.md §7.1
@@ -42,56 +43,30 @@ object TextOps extends QueryModule {
     graft.functions.TextExprs.wordShingles(toks, n)
 
   /** Near-dup pair finding (bigram-Jaccard ≥ 0.2 over inverted-index
-    * candidates), shared by the `ngram_jaccard_pairs` query and the
-    * duplicate-cluster resolution in [[CorpusOps]]. */
-  private[ops] def jaccardPairs(s: SparkSession, d: String): DataFrame =
-    jaccardPairsWithRelease(s, d)._1
-
-  /** [[jaccardPairs]] plus a thunk releasing its internal corpus cache —
-    * for callers (dup_clusters' component loop) that materialize the
-    * pairs eagerly and must not leave a corpus-sized cache pinned in a
-    * long-lived session.
+    * candidates), the lazy entry the `ngram_jaccard_pairs` query routes
+    * through, plus a thunk releasing its internal corpus cache — for
+    * callers that materialize the pairs eagerly and must not leave a
+    * corpus-sized cache pinned in a long-lived session.
     *
-    * SIZE-GATED since r14 (VERDICT r13 finding 1): the registered
-    * `ngram_jaccard_pairs` query routes here, and until r14 it pinned
-    * the shingled corpus in an UNCONDITIONAL `.cache()` — the exact
-    * plan the r13 corpus-layout sweep measured DNF-ENOSPC at a 2.8 GiB
-    * corpus (the shingled rows inflate ~10× in memory and spill >50 GB
-    * before the executor store gives up). Declared queries must stay
+    * The shingled corpus cache is size-gated ([[SizeGate.cacheable]]):
+    * until r14 it was an UNCONDITIONAL `.cache()` — the exact plan the
+    * r13 corpus-layout sweep measured DNF-ENOSPC at a 2.8 GiB corpus
+    * (the shingled rows inflate ~10× in memory and spill >50 GB before
+    * the executor store gives up). Declared queries must stay
     * analysis-only ([[Q]]'s laziness contract), so the bucketed-table
     * arm (which writes during construction) is not available here;
-    * instead, above [[corpusCacheable]] the SAME lazy plan runs with no
-    * cache at all — the shingling is re-derived for the index build and
-    * the two verify joins (bounded recompute, ~3× the corpus scan),
-    * never unbounded executor state. Eager callers get the strictly
-    * better bucketed layout through [[jaccardPairsAuto]].
-    *
-    * `cached` overrides the gate for callers that are the A/B
-    * measurement itself (`Measure ab jaccard`'s explicit cache arm) and
-    * for tests pinning the above-gate plan shape on KB fixtures. */
-  private[graft] def jaccardPairsWithRelease(
-      s: SparkSession, d: String,
-      cached: Option[Boolean] = None): (DataFrame, () => Unit) =
-    if (cached.getOrElse(corpusCacheable(s, d))) {
-      // docs feeds the index and both sides of the final array join —
-      // cache it. Gate-scale only: the cache pins a corpus-sized
-      // dataset in executor memory.
-      val docs = shingledDocs(s, d).cache()
-      (jaccardPairsFrom(docs, corpusBcastable(s, d)),
-        () => { docs.unpersist(); () })
-    } else
-      // above the gate: one lazy plan, zero corpus-sized executor state
-      (jaccardPairsFrom(shingledDocs(s, d), corpusBcastable(s, d)),
-        () => ())
-
-  /** Cache-layout gate: below it the shingled corpus rides an executor
-    * cache; above it [[jaccardPairsAuto]] lands it as a bucketed table.
-    * Fails CLOSED (SizeGate's contract): an unreadable or unknown-size
-    * corpus is treated as big, so the scale-safe bucketed arm is the
-    * default on any filesystem the gate cannot measure. */
-  private[graft] def corpusCacheable(s: SparkSession, d: String): Boolean =
-    !graft.util.SizeGate.noGatedCache(s) &&
-      dirBytes(s, s"$d/documents.parquet") <= CORPUS_CACHE_MAX_BYTES
+    * instead, above the gate the SAME lazy plan runs with no cache at
+    * all — the shingling is re-derived for the index build and the two
+    * verify joins (bounded recompute, ~3× the corpus scan), never
+    * unbounded executor state. Eager callers get the strictly better
+    * bucketed layout through [[jaccardPairsAuto]]. */
+  private[graft] def jaccardPairs(s: SparkSession,
+      d: String): (DataFrame, () => Unit) = {
+    val cache = SizeGate.cacheable(s, docsPath(d))
+    val docs = if (cache) shingledDocs(s, d).cache() else shingledDocs(s, d)
+    (jaccardPairsFrom(docs, gramDimBcast(s, d)),
+      () => { if (cache) docs.unpersist(); () })
+  }
 
   /** Gram-dim broadcast gate, deliberately SEPARATE from the cache
     * gate since r13: the r12 design used one bound for both, but the
@@ -100,29 +75,17 @@ object TextOps extends QueryModule {
     * 1 GiB, while the rare-gram broadcast (≤ corpus/2 bytes by df ≥ 2,
     * tens of MB measured at the 560 MB sf100 corpus) stays worth ~5×
     * (r12 A/B) until the corpus itself passes 2 GiB. Fails closed. */
-  private[graft] def corpusBcastable(s: SparkSession, d: String): Boolean =
-    dirBytes(s, s"$d/documents.parquet") <= CORPUS_BCAST_MAX_BYTES
+  private def gramDimBcast(s: SparkSession, d: String): Boolean =
+    SizeGate.bounded(s, docsPath(d), CORPUS_BCAST_MAX_BYTES)
+
+  private def docsPath(d: String): String = s"$d/documents.parquet"
 
   /** The shingled corpus: one row per doc with its distinct bigram set —
-    * the dataset every jaccard variant reads three times (index build +
-    * both sides of the verify join). */
+    * the dataset the pairs plan reads three times (index build + both
+    * sides of the verify join). */
   private def shingledDocs(s: SparkSession, d: String): DataFrame =
     documents(s, d).select(col("doc_id"),
       array_distinct(shingles(toksCol, 2)).as("grams"))
-
-  /** Corpus bytes (parquet on disk) above which [[jaccardPairsAuto]]
-    * stops caching the shingled corpus and persists it as a bucketed
-    * table instead. Re-tuned 2 GiB → 1 GiB from the r13 corpus-layout
-    * sweep (BENCH_NOTES, solo min-of-3, 96 GiB heap): at 1.1 GiB the
-    * cache arm already loses 1.7× to the bucketed arm (102 vs 61 s)
-    * with a 4.2× run spread from cache-spill churn, and at 2.8 GiB it
-    * cannot finish at all (the shingled corpus inflates ~10× in memory,
-    * fills >50 GB of local spill, dies ENOSPC) while the bucketed arm
-    * completes in 288 s. 560 MB (sf100) stays cache-path — ambiguous
-    * there (solo-cold favored the table 1.3×, the warm in-suite regime
-    * favors the cache), so the bound sits at the last scale where the
-    * cache is defensible, below every measured loss. */
-  private[graft] val CORPUS_CACHE_MAX_BYTES: Long = 1L << 30
 
   /** Corpus bytes above which the gram-dim broadcasts (rare-gram list,
     * bigram-LM unigram side) de-hint to shuffled joins — the r12 bound,
@@ -131,9 +94,14 @@ object TextOps extends QueryModule {
     * of a 2-3 GiB/task executor budget. */
   private[graft] val CORPUS_BCAST_MAX_BYTES: Long = 2L << 30
 
-  /** Size-gated entry: the cache plan under the threshold, the
-    * bucketed-table plan above it. The gate reads file sizes (bounded
-    * filesystem metadata), never the data.
+  /** Size-gated eager entry (`dup_clusters`, `split_leakage_safe`):
+    * below [[SizeGate.cacheable]] the cached plan of [[jaccardPairs]],
+    * above it the same pairs plan over the shingled corpus persisted as
+    * a table bucketed and sorted on doc_id — shuffle paid once at write
+    * time, both verify joins then read bucket-colocated data with no
+    * corpus-side exchange (pinned in TextBucketedSpec), and no
+    * corpus-sized executor cache exists at all. The gate reads file
+    * sizes (bounded filesystem metadata), never the data.
     *
     * The above-gate corpus-table write is memoized per (session,
     * dataset dir) since r14 (VERDICT r13 missing-item 2): the r13 sweep
@@ -144,16 +112,12 @@ object TextOps extends QueryModule {
     * corpus as of its own first routed query — same contract as the
     * cache arm below the gate, whose `.cache()` also freezes the corpus
     * at first materialization. A re-created table name (dropped behind
-    * our back) is detected by a catalog re-check and rewritten.
-    *
-    * `cached` forces the gate for tests (KB fixtures are always below
-    * the real bound). */
-  private[graft] def jaccardPairsAuto(
-      s: SparkSession, d: String,
-      cached: Option[Boolean] = None): (DataFrame, () => Unit) =
-    if (cached.getOrElse(corpusCacheable(s, d)))
-      jaccardPairsWithRelease(s, d, cached = Some(true))
-    else (jaccardPairsOverTable(s, d, ensureBucketedCorpus(s, d)), () => ())
+    * our back) is detected by a catalog re-check and rewritten. */
+  private[graft] def jaccardPairsAuto(s: SparkSession,
+      d: String): (DataFrame, () => Unit) =
+    if (SizeGate.cacheable(s, docsPath(d))) jaccardPairs(s, d)
+    else (jaccardPairsFrom(s.table(ensureBucketedCorpus(s, d)),
+      gramDimBcast(s, d)), () => ())
 
   /** (session, dataset dir) → already-written bucketed corpus table.
     * Same stopped-session eviction discipline as
@@ -167,7 +131,7 @@ object TextOps extends QueryModule {
     * table; returns its name. `compute` (not `computeIfAbsent`) so a
     * memo entry whose table has been dropped from the catalog is
     * rewritten instead of trusted. */
-  private[graft] def ensureBucketedCorpus(s: SparkSession, d: String): String = {
+  private def ensureBucketedCorpus(s: SparkSession, d: String): String = {
     writtenCorpusTables.keySet.removeIf(_._1.sparkContext.isStopped)
     writtenCorpusTables.compute((s, d), (_, prev) =>
       if (prev != null && s.catalog.tableExists(prev)) prev
@@ -179,69 +143,20 @@ object TextOps extends QueryModule {
       })
   }
 
-  /** Recursive on-disk byte count of `path` through the session's OWN
-    * Hadoop filesystem — the same resolution `spark.read.parquet`
-    * performs, so the gate measures whatever store the data layer
-    * actually reads (local, HDFS, S3A, ...). A `java.io.File` walk here
-    * was the r12 verdict's one weak finding: it returns 0 for any
-    * non-local URI, silently selecting the unbounded cache/broadcast
-    * plans on exactly the deployments the gate protects. Unknown sizes
-    * (missing path, unreachable filesystem, any resolution error) count
-    * as `Long.MaxValue` — fail closed, like [[graft.util.SizeGate]]. */
-  private def dirBytes(s: SparkSession, path: String): Long =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.getContentSummary(p).getLength
-    } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
-
-  /** Default bucketed-corpus table name for dataset dir `d` — a stable
-    * 96-bit SHA-256 prefix of the dir, so distinct datasets sharing one
+  /** Bucketed-corpus table name for dataset dir `d` — a stable 96-bit
+    * SHA-256 prefix of the dir, so distinct datasets sharing one
     * warehouse get distinct tables (collision odds ~2⁻⁹⁶ per pair —
     * negligible, though not provably zero; the r13 32-bit MurmurHash3
     * made cross-dataset aliasing merely unlikely at warehouse scale,
-    * ADVICE r13). Stable across JVMs by design: amortized readers
-    * ([[jaccardPairsOverTable]], [[jaccardPairsAuto]]) re-derive
-    * the same name in later sessions. */
+    * ADVICE r13). Stable across JVMs by design. */
   private[graft] def bucketedTableName(d: String): String = {
     val digest = java.security.MessageDigest.getInstance("SHA-256")
       .digest(d.getBytes("UTF-8"))
     s"jaccard_docs_bkt_${digest.take(12).map(b => f"$b%02x").mkString}"
   }
 
-  /** The 100 TB layout variant of [[jaccardPairsWithRelease]]: the
-    * shingled corpus is persisted ONCE as a bucketed, sorted table on
-    * doc_id (shuffle paid at write time) and the same
-    * index→candidates→verify plan runs over the table — both grams-side
-    * verify joins then read bucket-colocated data with no exchange on
-    * the corpus side (pinned in TextBucketedSpec), and no corpus-sized
-    * executor cache exists at all.
-    *
-    * The table name defaults to [[bucketedTableName]] (keyed by the
-    * dataset dir, no cross-dataset aliasing) and the table is
-    * (re)written on EVERY invocation — one shuffle + one corpus write
-    * per call, the price of always reflecting the current corpus; a
-    * caller re-querying an unchanged corpus many times can pass an
-    * explicit `table` and reuse it on its own freshness contract, and
-    * the registry's routed queries share one write per (session,
-    * dataset) through [[ensureBucketedCorpus]]. */
-  private[graft] def jaccardPairsBucketed(s: SparkSession, d: String,
-      buckets: Int = 8, table: String = ""): DataFrame = {
-    val t = if (table.nonEmpty) table else bucketedTableName(d)
-    graft.sources.Bucketing.writeBucketed(
-      shingledDocs(s, d), t, Seq("doc_id"), buckets, Seq("doc_id"))
-    jaccardPairsOverTable(s, d, t)
-  }
-
-  /** The pairs plan over an ALREADY-written bucketed corpus table —
-    * the amortized read path for a caller holding a standing table on
-    * its own freshness contract (and [[jaccardPairsAuto]]'s memo). */
-  private[graft] def jaccardPairsOverTable(s: SparkSession, d: String,
-      table: String): DataFrame =
-    jaccardPairsFrom(s.table(table), corpusBcastable(s, d))
-
   /** Inverted-index candidate generation + exact-jaccard verification
-    * over an already-materialized shingled corpus (cached or bucketed —
+    * over the shingled corpus (cached, uncached or a bucketed table —
     * the plan is layout-agnostic). */
   private def jaccardPairsFrom(docs: DataFrame,
       hintGramDim: Boolean): DataFrame = {
@@ -249,7 +164,7 @@ object TextOps extends QueryModule {
       explode(col("grams")).as("gram"))
     val rare = index.groupBy("gram").agg(count(lit(1)).as("df"))
       .filter(col("df") <= 50 && col("df") >= 2)
-    // SIZE-GATED broadcast (corpusBcastable): the rare-gram list (2 <= df
+    // SIZE-GATED broadcast (gramDimBcast): the rare-gram list (2 <= df
     // <= 50) grows roughly linearly with corpus vocabulary — under
     // Zipf, MOST distinct grams are rare — so an unconditional hint is
     // unbounded executor state at 100 TB. But an unconditional de-hint
@@ -535,11 +450,12 @@ object TextOps extends QueryModule {
     //      stay LAZY (building a Q must be analysis-only — the contract
     //      guard reads every query's schema), so this entry cannot take
     //      the bucketed arm (a construction-time table write); instead
-    //      the internal corpus cache is size-gated (corpusCacheable):
+    //      the internal corpus cache is size-gated (SizeGate.cacheable):
     //      below the gate it follows the session cache lifecycle, above
     //      it the same lazy plan runs uncached — bounded recompute, not
     //      the r13-measured ENOSPC of an unconditional corpus cache.
-    Q("ngram_jaccard_pairs", jaccardPairs, Some(jaccardPairsSql)),
+    Q("ngram_jaccard_pairs", (s, d) => jaccardPairs(s, d)._1,
+      Some(jaccardPairsSql)),
 
     // ---- MinHash + LSH near-dup candidates: shingle → 16-way minhash →
     //      8 bands of 2 → bucket join → signature-agreement estimate.
@@ -704,7 +620,7 @@ object TextOps extends QueryModule {
     //      thresholds on. Two map-side-combinable hash aggregates joined
     //      on w1 — the unigram side is the corpus vocabulary, which
     //      grows with the corpus (Heaps' law), so its broadcast is
-    //      size-gated on the same corpusBcastable bound as the jaccard gram
+    //      size-gated on the same gramDimBcast bound as the jaccard gram
     //      dims (unconditional hint = unbounded executor state at
     //      100 TB; unconditional de-hint = an extra full c12 exchange
     //      the planner cannot avoid because aggregate stats inflate).
@@ -724,10 +640,10 @@ object TextOps extends QueryModule {
         // only with the cache (same pattern as the LSH/jaccard queries).
         // SIZE-GATED since r15 (the bigram-count table is vocabulary-
         // proportional; fail-closed like every corpus gate).
-        val c12p = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n12"))
-        val c12 = if (corpusCacheable(s, d)) c12p.cache() else c12p
+        val c12 = SizeGate.cacheIfBounded(s,
+          pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n12")), docsPath(d))
         val c1 = c12.groupBy("w1").agg(sum(col("n12")).as("n1"))
-        c12.join(if (corpusBcastable(s, d)) broadcast(c1) else c1, Seq("w1"))
+        c12.join(if (gramDimBcast(s, d)) broadcast(c1) else c1, Seq("w1"))
           .select(col("w1"), col("w2"), col("n12"),
             round(col("n12") / col("n1").cast("double"), 6).as("p_cond"))
           .orderBy(desc("n12"), asc("w1"), asc("w2"))

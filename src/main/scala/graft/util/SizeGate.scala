@@ -67,9 +67,12 @@ object SizeGate {
   }
 
   /** Recursive on-disk byte count of `path` through the session's own
-    * Hadoop filesystem (the same resolution the read path performs);
-    * unknown sizes (missing path, unreachable store, any resolution
-    * error) count as `Long.MaxValue` — FAIL CLOSED. */
+    * Hadoop filesystem (the same resolution the read path performs, so
+    * local, HDFS and S3A stores all measure real bytes; a `java.io.File`
+    * walk returned 0 for every non-local URI and failed open into the
+    * unbounded plans, r12); unknown sizes (missing path, unreachable
+    * store, any resolution error) count as `Long.MaxValue` — FAIL
+    * CLOSED. */
   def dirBytes(s: org.apache.spark.sql.SparkSession, path: String): Long =
     try {
       val p = new org.apache.hadoop.fs.Path(path)
@@ -78,32 +81,50 @@ object SizeGate {
     } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
 
   /** Default bound for a gated executor cache of an input-proportional
-    * intermediate — matches TextOps' measured corpus-cache crossover
-    * (1 GiB: past it the r13 layout sweep saw the cache arm lose, then
-    * DNF). */
+    * intermediate, the measured corpus-cache crossover. Re-tuned
+    * 2 GiB → 1 GiB from the r13 corpus-layout sweep (BENCH_NOTES, solo
+    * min-of-3, 96 GiB heap): at a 1.1 GiB corpus the cached shingled
+    * corpus already loses 1.7× to the bucketed table (102 vs 61 s) with
+    * a 4.2× run spread from cache-spill churn, and at 2.8 GiB it cannot
+    * finish at all (the shingled corpus inflates ~10× in memory, fills
+    * >50 GB of local spill, dies ENOSPC) while the bucketed table
+    * completes in 288 s. 560 MB (sf100) stays cached — ambiguous there
+    * (solo-cold favored the table 1.3×, the warm in-suite regime favors
+    * the cache), so the bound sits at the last scale where the cache is
+    * defensible, below every measured loss. */
   val DEFAULT_CACHE_MAX_BYTES: Long = 1L << 30
 
-  /** `df.cache()` iff the INPUT at `path` is at most `maxBytes` on
-    * disk; `df` unchanged otherwise — for intermediates whose row count
-    * is proportional to that input (per-doc signatures, (doc, term)
+  /** True iff the input at `path` measures at most `maxBytes` on disk.
+    * FAIL-CLOSED via [[dirBytes]]: an unmeasurable input is big. */
+  def bounded(s: org.apache.spark.sql.SparkSession, path: String,
+      maxBytes: Long): Boolean =
+    dirBytes(s, path) <= maxBytes
+
+  /** The cache gate: true iff the kill switch ([[NoGatedCacheKey]]) is
+    * unset and the input at `path` is [[bounded]] by `maxBytes`. */
+  def cacheable(s: org.apache.spark.sql.SparkSession, path: String,
+      maxBytes: Long = DEFAULT_CACHE_MAX_BYTES): Boolean =
+    !s.conf.getOption(NoGatedCacheKey).exists(_.toBoolean) &&
+      bounded(s, path, maxBytes)
+
+  /** `df.cache()` iff the INPUT at `path` is [[cacheable]]; `df`
+    * unchanged otherwise — for intermediates whose row count is
+    * proportional to that input (per-doc signatures, (doc, term)
     * frequencies, scored projections). Below the gate the cache saves
     * re-deriving the intermediate for a query's second/third scan of
     * it; above the gate the SAME lazy plan runs uncached — bounded
     * recompute instead of unbounded executor state (the r13-measured
-    * ENOSPC class). FAIL-CLOSED via [[dirBytes]]: an unmeasurable
-    * input is treated as big, so the scale-safe uncached plan is the
+    * ENOSPC class). Fail-closed: the scale-safe uncached plan is the
     * default on any store the gate cannot size. */
   def cacheIfBounded(s: org.apache.spark.sql.SparkSession, df: DataFrame,
       path: String, maxBytes: Long = DEFAULT_CACHE_MAX_BYTES): DataFrame =
-    if (!noGatedCache(s) && dirBytes(s, path) <= maxBytes) df.cache() else df
+    if (cacheable(s, path, maxBytes)) df.cache() else df
 
   /** Measurement-only kill switch, a session conf (`true` to set):
-    * forces every size-gated cache onto its above-gate (uncached) arm, so
-    * the cache-vs-recompute crossover can be A/B-measured per query in one
-    * JVM (`graft.Measure ab cachegate`). Unset in production and in every
-    * driver entry point, where the measured gate bounds stay authoritative. */
+    * forces every size-gated cache onto its above-gate arm, so the
+    * cache-vs-recompute crossover can be A/B-measured per query in one
+    * JVM (`graft.Measure ab cachegate`, `ab jaccard`). Unset in
+    * production and in every driver entry point, where the measured gate
+    * bounds stay authoritative. */
   val NoGatedCacheKey = "spark.graft.noGatedCache"
-
-  private[graft] def noGatedCache(s: org.apache.spark.sql.SparkSession)
-      : Boolean = s.conf.getOption(NoGatedCacheKey).exists(_.toBoolean)
 }

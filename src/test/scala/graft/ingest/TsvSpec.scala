@@ -89,6 +89,32 @@ class TsvSpec extends SparkSpec {
     Files.delete(bad)
   }
 
+  test("S3 file-level: only corrupt files are skipped — a missing path " +
+    "rethrows instead of silently dropping out of the union") {
+    val good = dir.resolve("blockchair_bitcoin_blocks_20250820.tsv.gz")
+    val missing = dir.resolve("nosuch_blocks_20250820.tsv.gz").toString
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Exception] {
+      Tsv.readSkippingBadFiles(spark, Seq(good.toString, missing),
+        BlockchairSchemas.blocks)
+    }
+    assert(e.getMessage.contains("nosuch_blocks"), e.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.keySet
+      .subsetOf(cachedBefore), "a rethrow must release the caches taken")
+    // a truncated gzip is a whole-file read error, positively corrupt:
+    // still skipped
+    val truncated = dir.resolve("trunc_blocks_20250820.tsv.gz")
+    val bytes = Files.readAllBytes(good)
+    Files.write(truncated, bytes.take(bytes.length / 2))
+    val (df, skipped, release) = Tsv.readSkippingBadFiles(spark,
+      Seq(good.toString, truncated.toString), BlockchairSchemas.blocks)
+    try {
+      assert(skipped == Seq(truncated.toString))
+      assert(df.count() == 3)
+    } finally release()
+    Files.delete(truncated)
+  }
+
   test("S5: retention sweep deletes only files older than the cutoff") {
     val d = Files.createTempDirectory("graft-retention")
     val oldF = d.resolve("blockchair_bitcoin_blocks_20250101.tsv.gz")

@@ -34,7 +34,7 @@ class BroadcastAuditSpec extends AnyFunSuite {
     "ops/VectorOps.scala" -> 4, // ANN query sets + 1-row count +
     // quadGuard-capped BNLJ build side (emb_neardup_pairs, r15: the
     // guard bounds it at ~10k vectors at any corpus size)
-    "ops/TextOps.scala" -> 2, // corpusBcastable-gated gram dims (rare, c1)
+    "ops/TextOps.scala" -> 2, // corpus-bytes-gated gram dims (rare, c1)
     "sources/Layout.scala" -> 1, // 1-row z-order bounds
     // streaming/StreamIngest.scala: 0 since r13 — enrichWithDim's dim
     // hint moved behind SizeGate.broadcastIfSmall

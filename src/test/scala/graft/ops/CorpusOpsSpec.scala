@@ -38,7 +38,7 @@ class CorpusOpsSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
         r.getAs[Long]("cluster_size"), r.getAs[Boolean]("is_canonical")))
     val byDoc = labels.map(l => l._1 -> l._2).toMap
-    val pairs = TextOps.jaccardPairs(spark, sf)
+    val pairs = TextOps.jaccardPairs(spark, sf)._1
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty && labels.nonEmpty)
@@ -76,7 +76,7 @@ class CorpusOpsSpec extends SparkSpec {
       graft.Tables.documents(spark, sf).count().toInt)
     // the contamination contract: both ends of every near-dup pair land
     // in the SAME split
-    val pairs = TextOps.jaccardPairs(spark, sf)
+    val pairs = TextOps.jaccardPairs(spark, sf)._1
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty)

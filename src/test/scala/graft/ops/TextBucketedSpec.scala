@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.util.SizeGate
 
 /** The jaccard machinery's 100 TB corpus layout: past the cache size
   * gate the shingled corpus lives in a bucketed table on doc_id instead
@@ -9,7 +10,9 @@ import graft.SparkSpec
   * (3) the gate itself (gate-scale fixtures stay on the cache path;
   * unreadable corpora fail CLOSED onto the bucketed arm), (4) dataset
   * isolation — the table name is keyed by the dataset dir, so two
-  * corpora in one warehouse never alias. */
+  * corpora in one warehouse never alias. KB fixtures never cross the
+  * real 1 GiB bound, so the above-gate arms are forced with the
+  * measurement kill switch ([[SizeGate.NoGatedCacheKey]]). */
 class TextBucketedSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -24,12 +27,20 @@ class TextBucketedSpec extends SparkSpec {
     }
   }
 
+  /** Runs `body` on the above-gate arm of every size-gated cache. */
+  private def aboveGate[T](body: => T): T = {
+    spark.conf.set(SizeGate.NoGatedCacheKey, "true")
+    try body finally spark.conf.unset(SizeGate.NoGatedCacheKey)
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.orderBy("doc_a", "doc_b").collect().toSeq
+
   test("bucketed jaccard variant is row-identical to the cached plan") {
     dropTable(TextOps.bucketedTableName(sf))
-    val cached = TextOps.jaccardPairs(spark, sf)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    val bucketed = TextOps.jaccardPairsBucketed(spark, sf)
-      .orderBy("doc_a", "doc_b").collect().toSeq
+    val cached = rows(TextOps.jaccardPairs(spark, sf)._1)
+    val bucketed = aboveGate(rows(TextOps.jaccardPairsAuto(spark, sf)._1))
+    assert(spark.catalog.tableExists(TextOps.bucketedTableName(sf)))
     assert(cached.nonEmpty, "fixture produced no near-dup pairs")
     assert(bucketed == cached)
     spark.catalog.clearCache()
@@ -42,33 +53,33 @@ class TextBucketedSpec extends SparkSpec {
     assert(ta != tb, s"table names must differ: $ta vs $tb")
     dropTable(ta); dropTable(tb)
     // interleave constructions the way a shared warehouse would see them
-    val pairsA = TextOps.jaccardPairsBucketed(spark, sf)
-    val pairsB = TextOps.jaccardPairsBucketed(spark, sf2)
-    val a = pairsA.orderBy("doc_a", "doc_b").collect().toSeq
-    val b = pairsB.orderBy("doc_a", "doc_b").collect().toSeq
-    val cachedA = TextOps.jaccardPairs(spark, sf)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    val cachedB = TextOps.jaccardPairs(spark, sf2)
-      .orderBy("doc_a", "doc_b").collect().toSeq
+    val (a, b) = aboveGate {
+      val (pairsA, releaseA) = TextOps.jaccardPairsAuto(spark, sf)
+      val (pairsB, releaseB) = TextOps.jaccardPairsAuto(spark, sf2)
+      try (rows(pairsA), rows(pairsB))
+      finally { releaseA(); releaseB() }
+    }
+    assert(spark.catalog.tableExists(ta) && spark.catalog.tableExists(tb))
+    val cachedA = rows(TextOps.jaccardPairs(spark, sf)._1)
+    val cachedB = rows(TextOps.jaccardPairs(spark, sf2)._1)
     assert(a == cachedA, "dataset A's bucketed pairs drifted from its corpus")
     assert(b == cachedB, "dataset B's bucketed pairs drifted from its corpus")
     assert(a != b, "fixtures at different scales should differ")
     spark.catalog.clearCache()
+    dropTable(ta); dropTable(tb)
   }
 
   test("bucketed layout removes the corpus-side exchanges of the " +
     "verify joins (SMJ forced so the claim is about bucketing)") {
-    dropTable("jaccard_docs_bkt2")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       def exchanges(p: String): Int =
         "Exchange hashpartitioning".r.findAllIn(p).length
-      val cachedPlan = TextOps.jaccardPairs(spark, sf)
+      val cachedPlan = TextOps.jaccardPairs(spark, sf)._1
         .queryExecution.executedPlan.toString
-      val bucketedDf =
-        TextOps.jaccardPairsBucketed(spark, sf, table = "jaccard_docs_bkt2")
-      val bucketedPlan = bucketedDf.queryExecution.executedPlan.toString
+      val bucketedPlan = aboveGate(TextOps.jaccardPairsAuto(spark, sf)._1
+        .queryExecution.executedPlan.toString)
       // the bucketed scan must actually be bucket-aware ...
       assert(bucketedPlan.contains("SelectedBucketsCount"),
         bucketedPlan.take(1500))
@@ -83,7 +94,7 @@ class TextBucketedSpec extends SparkSpec {
 
   test("size gate: gate-scale corpora take the cache path, not the " +
     "bucketed write") {
-    // fixture documents are KBs — far under CORPUS_CACHE_MAX_BYTES, so
+    // fixture documents are KBs — far under the cache gate's bound, so
     // Auto must not create the bucketed table
     dropTable(TextOps.bucketedTableName(sf))
     val (pairs, release) = TextOps.jaccardPairsAuto(spark, sf)
@@ -100,25 +111,21 @@ class TextBucketedSpec extends SparkSpec {
     // would be substituted into ANY matching subtree by the
     // CacheManager and fake a cache in the uncached arm's plan
     spark.catalog.clearCache()
-    // cached = Some(false) forces the above-gate arm of the SAME code
-    // path the registered ngram_jaccard_pairs query routes through
-    // (jaccardPairs -> jaccardPairsWithRelease); KB fixtures can never
-    // cross the real 1 GiB bound
-    val (pairs, release) = TextOps.jaccardPairsWithRelease(
-      spark, sf, cached = Some(false))
+    // the kill switch forces the above-gate arm of the SAME entry the
+    // registered ngram_jaccard_pairs query routes through
+    val (pairs, release) = aboveGate(TextOps.jaccardPairs(spark, sf))
     try {
       assert(!pairs.queryExecution.withCachedData.toString
         .contains("InMemoryRelation"),
         "above-gate registered plan must not pin a corpus cache")
-      val lazyRows = pairs.orderBy("doc_a", "doc_b").collect().toSeq
+      val lazyRows = rows(pairs)
       assert(!pairs.queryExecution.executedPlan.toString
         .contains("InMemoryTableScan"))
-      val (cachedPairs, cachedRelease) = TextOps.jaccardPairsWithRelease(
-        spark, sf, cached = Some(true))
+      val (cachedPairs, cachedRelease) = TextOps.jaccardPairs(spark, sf)
       try {
-        val cachedRows =
-          cachedPairs.orderBy("doc_a", "doc_b").collect().toSeq
-        assert(lazyRows.nonEmpty && lazyRows == cachedRows,
+        assert(cachedPairs.queryExecution.withCachedData.toString
+          .contains("InMemoryRelation"))
+        assert(lazyRows.nonEmpty && lazyRows == rows(cachedPairs),
           "uncached arm must be row-identical to the cached plan")
       } finally cachedRelease()
     } finally release()
@@ -137,32 +144,33 @@ class TextBucketedSpec extends SparkSpec {
     val t = TextOps.bucketedTableName(sf)
     val t2 = TextOps.bucketedTableName(sf2)
     dropTable(t); dropTable(t2)
-    val (p1, r1) = TextOps.jaccardPairsAuto(spark, sf, cached = Some(false))
-    try assert(p1.count() > 0) finally r1()
-    assert(spark.catalog.tableExists(t),
-      "above-gate Auto must land the bucketed corpus table")
-    val files1 = tableFiles(t)
-    // second routed query in the same session: same table, same FILES —
-    // a rewrite would generate fresh uuid part names
-    val (p2, r2) = TextOps.jaccardPairsAuto(spark, sf, cached = Some(false))
-    try assert(p2.count() > 0) finally r2()
-    assert(tableFiles(t) == files1,
-      "second routed query must reuse the standing table, not rewrite it")
-    // dataset isolation survives the memo: a second dir gets its own
-    // table and its own rows
-    val (pb, rb) = TextOps.jaccardPairsAuto(spark, sf2, cached = Some(false))
-    try {
-      assert(spark.catalog.tableExists(t2) && t != t2)
-      val b = pb.orderBy("doc_a", "doc_b").collect().toSeq
-      val a = p1.orderBy("doc_a", "doc_b").collect().toSeq
-      assert(a != b, "fixtures at different scales should differ")
-    } finally rb()
-    // a table dropped behind the memo's back is detected and rewritten
-    dropTable(t)
-    val (p3, r3) = TextOps.jaccardPairsAuto(spark, sf, cached = Some(false))
-    try assert(p3.count() > 0) finally r3()
-    assert(spark.catalog.tableExists(t),
-      "memo must re-validate against the catalog, not trust itself")
+    aboveGate {
+      val (p1, r1) = TextOps.jaccardPairsAuto(spark, sf)
+      try assert(p1.count() > 0) finally r1()
+      assert(spark.catalog.tableExists(t),
+        "above-gate Auto must land the bucketed corpus table")
+      val files1 = tableFiles(t)
+      // second routed query in the same session: same table, same FILES —
+      // a rewrite would generate fresh uuid part names
+      val (p2, r2) = TextOps.jaccardPairsAuto(spark, sf)
+      try assert(p2.count() > 0) finally r2()
+      assert(tableFiles(t) == files1,
+        "second routed query must reuse the standing table, not rewrite it")
+      // dataset isolation survives the memo: a second dir gets its own
+      // table and its own rows
+      val (pb, rb) = TextOps.jaccardPairsAuto(spark, sf2)
+      try {
+        assert(spark.catalog.tableExists(t2) && t != t2)
+        assert(rows(p1) != rows(pb),
+          "fixtures at different scales should differ")
+      } finally rb()
+      // a table dropped behind the memo's back is detected and rewritten
+      dropTable(t)
+      val (p3, r3) = TextOps.jaccardPairsAuto(spark, sf)
+      try assert(p3.count() > 0) finally r3()
+      assert(spark.catalog.tableExists(t),
+        "memo must re-validate against the catalog, not trust itself")
+    }
     dropTable(t); dropTable(t2)
   }
 
@@ -170,16 +178,19 @@ class TextBucketedSpec extends SparkSpec {
     "treated as big (r12 verdict: java.io.File walked non-local URIs " +
     "to 0 bytes and failed OPEN into the unbounded cache/broadcast " +
     "plans)") {
+    def docs(d: String) = s"$d/documents.parquet"
+    val bcast = TextOps.CORPUS_BCAST_MAX_BYTES
     // a dir with no documents.parquet at all — getContentSummary throws,
     // dirBytes must report Long.MaxValue, both gates must say NO
-    assert(!TextOps.corpusCacheable(spark, "/nonexistent/graft-gate-probe"))
-    assert(!TextOps.corpusBcastable(spark, "/nonexistent/graft-gate-probe"))
+    val missing = docs("/nonexistent/graft-gate-probe")
+    assert(!SizeGate.cacheable(spark, missing))
+    assert(!SizeGate.bounded(spark, missing, bcast))
     // a non-local scheme the session's Hadoop conf cannot resolve —
     // the exact deployment shape the r12 gate silently mis-routed
-    assert(!TextOps.corpusCacheable(spark,
-      "hdfs://nonexistent-namenode:8020/corpora/x"))
+    assert(!SizeGate.cacheable(spark,
+      docs("hdfs://nonexistent-namenode:8020/corpora/x")))
     // sanity: a real, tiny local fixture still measures small on both
-    assert(TextOps.corpusCacheable(spark, sf))
-    assert(TextOps.corpusBcastable(spark, sf))
+    assert(SizeGate.cacheable(spark, docs(sf)))
+    assert(SizeGate.bounded(spark, docs(sf), bcast))
   }
 }

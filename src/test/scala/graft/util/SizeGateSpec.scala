@@ -73,9 +73,10 @@ class SizeGateSpec extends SparkSpec {
       == Long.MaxValue)
   }
 
-  test("measurement kill switch (graft.noGatedCache) forces the " +
+  test("measurement kill switch (spark.graft.noGatedCache) forces the " +
     "uncached arm even below the bound") {
     val docs = s"$sf/documents.parquet"
+    assert(SizeGate.cacheable(spark, docs))
     spark.conf.set(SizeGate.NoGatedCacheKey, "true")
     try {
       val df = SizeGate.cacheIfBounded(spark,
@@ -83,8 +84,23 @@ class SizeGateSpec extends SparkSpec {
       assert(!df.queryExecution.withCachedData.toString
         .contains("InMemoryRelation"),
         "with the kill switch set no gated cache may be pinned")
-      assert(!graft.ops.TextOps.corpusCacheable(spark, sf),
-        "the corpus cache gate reads the same switch")
+      assert(!SizeGate.cacheable(spark, docs),
+        "the cache gate reads the switch")
+      assert(SizeGate.bounded(spark, docs, SizeGate.DEFAULT_CACHE_MAX_BYTES),
+        "the switch leaves the input-bytes bound alone")
     } finally spark.conf.unset(SizeGate.NoGatedCacheKey)
+  }
+
+  test("corpus sizing and the kill switch live only in SizeGate: " +
+    "getContentSummary and NoGatedCacheKey reads nowhere else in src/main") {
+    val sizing = graft.SourceAudit.calls("""\bgetContentSummary\b""".r)
+    assert(sizing.keySet == Set("util/SizeGate.scala"),
+      s"input sized outside SizeGate: ${sizing - "util/SizeGate.scala"}")
+    // a read of the switch: a conf get of the key, the key's literal, or
+    // a call to a private reader of it
+    val reads = graft.SourceAudit.calls(("""conf\s*\.\s*get\w*\(\s*[\w.]*""" +
+      """NoGatedCacheKey|"spark\.graft\.noGatedCache"|\bnoGatedCache\s*\(""").r)
+    assert(reads.keySet == Set("util/SizeGate.scala"),
+      s"kill switch read outside SizeGate: ${reads - "util/SizeGate.scala"}")
   }
 }
