@@ -1,8 +1,8 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, input_file_name}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.{StringType, StructType}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
@@ -11,100 +11,61 @@ import scala.util.Try
   * create_snowflake_objects.sh:331-333,406-411 file format;
   * load_data_to_snowflake.sh:125-144 pattern routing + skip-file +
   * retention; download_blockchair_data.py:218-246 local retention).
+  * The daily batch composes it in `graft.models.Pipeline`: `readRaw`
+  * routes each table to its own files (S2) and `dailyRun` skips and
+  * quarantines a corrupt dump whole (S3, file level) through [[probe]].
   *
   * Scale notes: the TSV reader is a plain distributed text scan — gzip
   * files are non-splittable, so at 100 TB daily ingest parallelism comes
   * from many daily files, not intra-file splits (matching the reference's
   * one-file-per-table-per-day layout). Immediately landing into
-  * date-partitioned Parquet (see [[landToParquet]]) restores columnar
-  * pruning + splittability for everything downstream.
+  * date-partitioned Parquet (see [[landToParquetIdempotent]]) restores
+  * columnar pruning + splittability for everything downstream.
   */
 object Tsv {
 
-  /** S1 — gzipped-TSV scan: tab-separated, one header row, no quoting
-    * (FIELD_DELIMITER='\t', FIELD_OPTIONALLY_ENCLOSED_BY='NONE',
-    * SKIP_HEADER=1). S3 — permissive mode: malformed rows land in
-    * `_corrupt_record` instead of failing the load
-    * (ON_ERROR='skip_file' analog at row granularity). */
-  def read(spark: SparkSession, path: String, schema: StructType,
-      permissive: Boolean = true): DataFrame = {
-    val withCorrupt = if (permissive)
-      schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    else schema
-    spark.read
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("quote", "")          // no quote char — quotes are data
-      .option("mode", if (permissive) "PERMISSIVE" else "FAILFAST")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-      .schema(withCorrupt)
-      .csv(path)
-  }
+  /** Name of the column a malformed row's raw line lands in. */
+  val CorruptColumn = "_corrupt_record"
+
+  /** S1+S3 — the one dump format every reader shares, batch and stream
+    * (create_snowflake_objects.sh:331-333): tab-separated, one header row,
+    * no quote char — quotes are data (FIELD_DELIMITER='\t', SKIP_HEADER=1,
+    * FIELD_OPTIONALLY_ENCLOSED_BY='NONE'); PERMISSIVE, so a malformed row
+    * lands in [[CorruptColumn]] instead of failing the scan. */
+  private[graft] val Format: Map[String, String] = Map(
+    "sep" -> "\t",
+    "header" -> "true",
+    "quote" -> "",
+    "mode" -> "PERMISSIVE",
+    "columnNameOfCorruptRecord" -> CorruptColumn,
+    "timestampFormat" -> "yyyy-MM-dd HH:mm:ss")
+
+  /** `schema` plus the corrupt-record column [[Format]] fills. */
+  private[graft] def withCorrupt(schema: StructType): StructType =
+    schema.add(CorruptColumn, StringType)
+
+  /** S1 — gzipped-TSV scan with an explicit schema; malformed rows keep
+    * their raw line in [[CorruptColumn]] (S3 at row granularity). */
+  def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.options(Format).schema(withCorrupt(schema)).csv(path)
 
   /** S1 (inference path) — read every column as string for
     * [[graft.schema.SchemaInfer]]. */
   def readRaw(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("quote", "")
-      .option("inferSchema", "false")
-      .csv(path)
+    spark.read.options(Format).csv(path)
 
-  /** S2 — pattern-routed load: `COPY INTO <t> ... PATTERN='.*blocks.*'`
-    * becomes a glob filter on the source directory; input_file_name() is
-    * retained for provenance. */
-  def readRouted(spark: SparkSession, dir: String, tableToken: String,
-      schema: StructType): DataFrame =
-    read(spark, dir, schema)
-      // quote the token: a table name containing regex metacharacters
-      // must match literally, not as a pattern
-      .where(input_file_name()
-        .rlike(".*" + java.util.regex.Pattern.quote(tableToken) + ".*"))
-
-  /** S3 (file granularity) — a malformed file is skipped, not fatal.
-    * ON_ERROR='skip_file' skips on an error ANYWHERE in the file, so the
-    * whole file must parse before it counts as good. Single-pass: each
-    * file is parsed permissively ONCE into cache; the corrupt-row probe
-    * materializes that cache, and the returned union reads from it — no
-    * second parse of good files (r1 probed FAILFAST then re-read, paying
-    * the parse twice). The third element RELEASES the per-file caches:
-    * call it after consuming the union (unpersisting the union itself
-    * cannot reach the per-file InMemoryRelations, so skipping the
-    * release leaks cache storage per call in a long-lived driver).
-    *
-    * A file is skipped only when positively identified as corrupt —
-    * malformed rows, or a whole-file read error ([[corrupt]]).
-    * Any other failure (a missing path, an infrastructure error)
-    * rethrows after releasing the caches taken so far: dropping a
-    * healthy file from the union on a transient error would silently
-    * load a partial day. */
-  def readSkippingBadFiles(spark: SparkSession, files: Seq[String],
-      schema: StructType): (DataFrame, Seq[String], () => Unit) = {
-    val cached = scala.collection.mutable.Buffer[DataFrame]()
-    val release = () => cached.foreach(_.unpersist())
-    val (good, bad) = try files.partitionMap { f =>
-      val df = read(spark, f, schema, permissive = true).cache()
-      cached += df
-      if (corrupt(df)) { df.unpersist(); Right(f) }
-      else Left(df.drop("_corrupt_record"))
-    } catch { case e: Throwable => release(); throw e }
-    val union = good.reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    (union, bad, release)
-  }
-
-  /** The one file-corruption probe of both skip-file paths, over a
-    * cached permissive [[read]] of one file: true iff it holds malformed
-    * rows or fails with a whole-file read error. Any other failure is not
-    * data corruption and rethrows. count() (not limit(1)) so the probe
-    * materializes whole cached partitions — a short-circuited probe would
-    * leave partitions uncached and downstream reads would re-parse. */
-  private[graft] def corrupt(raw: DataFrame): Boolean =
-    try raw.filter(col("_corrupt_record").isNotNull).count() > 0
-    catch { case e: Exception if readCorruption(e) => true }
+  /** S3 (file granularity) — the skip-file probe: one aggregation over a
+    * cached [[read]] of one dump gives its row count, or None when the
+    * file is corrupt (ON_ERROR='skip_file': malformed rows anywhere, or a
+    * whole-file read error such as a truncated gzip). Any other failure
+    * is not data corruption and rethrows. The aggregation scans every
+    * row, so it materializes whole cached partitions and a landing that
+    * follows reads the cache, not the file. */
+  private[graft] def probe(raw: DataFrame): Option[Long] =
+    try {
+      val r = raw.agg(count(lit(1)), count(col(CorruptColumn))).head()
+      if (r.getLong(1) > 0) None else Some(r.getLong(0))
+    } catch { case e: Exception if readCorruption(e) => None }
 
   /** Spark wraps parquet/csv/gzip decode errors in FAILED_READ_FILE;
     * malformed-record errors carry MALFORMED markers. */
@@ -116,37 +77,21 @@ object Tsv {
           m.contains("CorruptedGZIP") || c.isInstanceOf[java.io.EOFException]
       }
 
-  /** One landing contract (sort + load_date column) for both write
-    * modes — a drifted copy would silently diverge the append and
-    * idempotent paths. */
-  private def land(df: DataFrame, loadDate: String, outDir: String,
-      sortCols: Seq[String], idempotent: Boolean): Unit = {
-    import org.apache.spark.sql.functions.lit
-    val sorted =
-      if (sortCols.nonEmpty)
-        df.sortWithinPartitions(sortCols.map(col): _*)
-      else df
-    val base = sorted.withColumn("load_date", lit(loadDate)).write
-    val writer =
-      if (idempotent)
-        base.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      else base.mode("append")
-    writer.partitionBy("load_date").parquet(outDir)
-  }
-
   /** Land a raw daily file into date-partitioned Parquet — the layout every
     * downstream model reads (cluster_by analog: partition pruning on
-    * `load_date` + sorted within partitions). */
-  def landToParquet(df: DataFrame, loadDate: String, outDir: String,
-      sortCols: Seq[String]): Unit =
-    land(df, loadDate, outDir, sortCols, idempotent = false)
-
-  /** Idempotent landing: dynamic partition overwrite replaces ONLY this
-    * load_date's partition, so re-running a day (skip-existing fetch →
-    * same input) converges instead of appending duplicates. */
+    * `load_date` + sorted within partitions). Dynamic partition overwrite
+    * replaces ONLY this load_date's partition, so re-running a day
+    * (skip-existing fetch → same input) converges instead of appending
+    * duplicates. */
   def landToParquetIdempotent(df: DataFrame, loadDate: String,
-      outDir: String, sortCols: Seq[String]): Unit =
-    land(df, loadDate, outDir, sortCols, idempotent = true)
+      outDir: String, sortCols: Seq[String]): Unit = {
+    val sorted =
+      if (sortCols.nonEmpty) df.sortWithinPartitions(sortCols.map(col): _*)
+      else df
+    sorted.withColumn("load_date", lit(loadDate)).write
+      .mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("load_date").parquet(outDir)
+  }
 
   /** The dump filename contract: `..._{YYYYMMDD}.tsv[.gz]`
     * (download_blockchair_data.py:235). Single source — retention,

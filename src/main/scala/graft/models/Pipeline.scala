@@ -232,11 +232,11 @@ object Pipeline {
   }
 
   /** Read the five raw tables from a directory of TSV files
-    * (blockchair_{coin}_{type}_{date}.tsv[.gz] naming). Routing is done
-    * with a token-specific file glob so each table parses ONLY its own
-    * files — an input_file_name() row filter (Tsv.readRouted) cannot
-    * prune the file listing and would parse the whole directory five
-    * times. */
+    * (blockchair_{coin}_{type}_{date}.tsv[.gz] naming). S2 routing
+    * (`COPY INTO <t> ... PATTERN='.*blocks.*'`) is a token-specific file
+    * glob, so each table parses ONLY its own files — an input_file_name()
+    * row filter cannot prune the file listing and would parse the whole
+    * directory five times. */
   def readRaw(spark: SparkSession, dir: String): Build = {
     // the {.tsv,.tsv.gz} alternation (Hadoop glob) deliberately
     // EXCLUDES quarantined *.tsv.gz.corrupt files — a bare *.tsv* glob
@@ -281,6 +281,8 @@ object Pipeline {
   /** What one [[dailyRun]] did, per table type. */
   final case class DailyRunReport(
       fetched: Map[String, graft.ingest.Fetch.Result],
+      /** Rows landed per type, counted by the skip-file probe over the
+        * same cached parse the landing writes. */
       landedRows: Map[String, Long],
       /** Types whose fetched file contained malformed rows — skipped
         * whole (ON_ERROR='skip_file' parity), never landed. */
@@ -304,7 +306,6 @@ object Pipeline {
       open: String => java.io.InputStream = graft.ingest.Fetch.openHttp,
       sleep: Long => Unit = Thread.sleep): DailyRunReport = {
     import graft.ingest.{Fetch, Tsv}
-    import org.apache.spark.sql.functions.col
     val schemas = Map(
       "blocks" -> BlockchairSchemas.blocks,
       "transactions" -> BlockchairSchemas.transactions,
@@ -335,23 +336,23 @@ object Pipeline {
         val raw = Tsv.read(spark, file.toString, schemas(t)).cache()
         try {
           // Corruption must be POSITIVELY identified before the
-          // destructive quarantine (Tsv.corrupt): any other probe
-          // failure (infra: executor loss, disk) rethrows — renaming a
-          // healthy file to .corrupt on a transient error would lose
-          // the day if upstream no longer publishes the dump.
-          if (!Tsv.corrupt(raw)) {
-            Tsv.landToParquetIdempotent(raw.drop("_corrupt_record"),
-              dateToken, s"$parquetDir/$t", sortCols = Seq.empty)
-            Right(t -> spark.read.parquet(s"$parquetDir/$t")
-              .where(col("load_date") === dateToken).count())
-          } else {
-            // quarantine the rejected bytes: a rerun must RE-FETCH the
-            // (republished) dump, which skip-existing would otherwise
-            // never do while the bad file sits at the contract name.
-            // retentionSweep treats .corrupt files like their originals.
-            Files.move(file, file.resolveSibling(fileName + ".corrupt"),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            Left(t)
+          // destructive quarantine (Tsv.probe): any other probe failure
+          // (infra: executor loss, disk) rethrows — renaming a healthy
+          // file to .corrupt on a transient error would lose the day if
+          // upstream no longer publishes the dump.
+          Tsv.probe(raw) match {
+            case Some(rows) =>
+              Tsv.landToParquetIdempotent(raw.drop(Tsv.CorruptColumn),
+                dateToken, s"$parquetDir/$t", sortCols = Seq.empty)
+              Right(t -> rows)
+            case None =>
+              // quarantine the rejected bytes: a rerun must RE-FETCH the
+              // (republished) dump, which skip-existing would otherwise
+              // never do while the bad file sits at the contract name.
+              // retentionSweep treats .corrupt files like their originals.
+              Files.move(file, file.resolveSibling(fileName + ".corrupt"),
+                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+              Left(t)
           }
         } finally raw.unpersist()
     }

@@ -106,16 +106,13 @@ object PipelineQueries extends QueryModule {
         val staged = s"$base/staged_tx"
         val mart = s"$base/mart"
         // static sides read exactly as Pipeline.readRaw does; the
-        // transactions side is the stream
+        // transactions side is the stream, which drops malformed lines
+        // as every other reader does
         def rd(token: String, sch: org.apache.spark.sql.types.StructType) =
           graft.ingest.Tsv.read(s, s"$fixtureDir/*$token*{.tsv,.tsv.gz}",
             sch)
-        val src = s.readStream
-          .schema(graft.schema.BlockchairSchemas.transactions)
-          .option("sep", "\t").option("header", "true").option("quote", "")
-          .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-          .option("maxFilesPerTrigger", 1)
-          .csv(arrivals.toString)
+        val src = graft.streaming.StreamIngest.readTsvStream(s,
+          arrivals.toString, graft.schema.BlockchairSchemas.transactions)
         val q = src.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
               _: Long) =>

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
+import graft.ingest.Tsv
 
 /** Structured-Streaming variant of the daily-file ingest (SURVEY.md §2.9 /
   * §7.1 step 9 — a faithful *extension*: the reference itself is strictly
@@ -23,23 +24,18 @@ import org.apache.spark.sql.Row
   */
 object StreamIngest {
 
-  /** Streaming S1: same format contract as the batch reader
-    * (ingest/Tsv.read), and the same EXCLUSION guarantee as the batch
-    * quarantine path (Tsv.readSkippingBadFiles): in permissive mode
-    * malformed rows are filtered OUT of the returned stream — a
-    * PERMISSIVE husk (null fields + populated marker) flowing into a
-    * watermarked aggregate is a silent correctness bug, not a
-    * recoverable condition. To RETAIN the rejected rows, run
+  /** Streaming S1: the batch reader's format ([[graft.ingest.Tsv.Format]])
+    * and the batch skip-file path's EXCLUSION guarantee
+    * (`Pipeline.dailyRun`): malformed rows are filtered OUT of the
+    * returned stream — a PERMISSIVE husk (null fields + populated marker)
+    * flowing into a watermarked aggregate is a silent correctness bug,
+    * not a recoverable condition. To RETAIN the rejected rows, run
     * [[corruptTsvStream]] over the same directory as a second streaming
     * query wired to a quarantine sink. */
   def readTsvStream(spark: SparkSession, dir: String, schema: StructType,
-      maxFilesPerTrigger: Int = 1, permissive: Boolean = true): DataFrame = {
-    val raw = rawTsvStream(spark, dir, schema, maxFilesPerTrigger,
-      permissive)
-    if (permissive)
-      raw.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
-    else raw
-  }
+      maxFilesPerTrigger: Int = 1): DataFrame =
+    rawTsvStream(spark, dir, schema, maxFilesPerTrigger)
+      .filter(col(Tsv.CorruptColumn).isNull).drop(Tsv.CorruptColumn)
 
   /** The rejected side of [[readTsvStream]]: rows whose parse failed,
     * with the raw line in `_corrupt_record` and every schema field its
@@ -48,27 +44,16 @@ object StreamIngest {
     * schema is ONLY the corrupt column is rejected by the CSV source. */
   def corruptTsvStream(spark: SparkSession, dir: String,
       schema: StructType, maxFilesPerTrigger: Int = 1): DataFrame =
-    rawTsvStream(spark, dir, schema, maxFilesPerTrigger,
-      permissive = true)
-      .filter(col("_corrupt_record").isNotNull)
+    rawTsvStream(spark, dir, schema, maxFilesPerTrigger)
+      .filter(col(Tsv.CorruptColumn).isNotNull)
 
   private def rawTsvStream(spark: SparkSession, dir: String,
-      schema: StructType, maxFilesPerTrigger: Int,
-      permissive: Boolean): DataFrame = {
-    val withCorrupt = if (permissive)
-      schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    else schema
+      schema: StructType, maxFilesPerTrigger: Int): DataFrame =
     spark.readStream
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("quote", "")
-      .option("mode", if (permissive) "PERMISSIVE" else "FAILFAST")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
+      .options(Tsv.Format)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(withCorrupt)
+      .schema(Tsv.withCorrupt(schema))
       .csv(dir)
-  }
 
   /** Per-block-window transaction metrics with a 1-day watermark
     * (tumbling hourly windows over tx_time). Any staging transform

@@ -1,6 +1,7 @@
 package graft.ingest
 
 import graft.{Fixtures, SparkSpec}
+import graft.models.{Models, Pipeline}
 import graft.schema.{BlockchairSchemas, SchemaInfer, SchemaMerge}
 import java.nio.file.Files
 import java.time.LocalDate
@@ -40,79 +41,22 @@ class TsvSpec extends SparkSpec {
   }
 
   test("S2: pattern routing picks only matching files from a directory") {
-    val blocks = Tsv.readRouted(spark, dir.toString + "/*.tsv*", "blocks",
-      BlockchairSchemas.blocks)
-    assert(blocks.count() == 3)
-    val tx = Tsv.readRouted(spark, dir.toString + "/*.tsv*", "transactions",
-      BlockchairSchemas.transactions)
-    assert(tx.count() == 4)
-  }
-
-  test("S3 file-level: a bad file is skipped, good files load") {
-    val bad = dir.resolve("broken_blocks_20250820.tsv")
-    Files.writeString(bad, "totally\tbroken\nno\tschema\n")
-    // relative baseline: other suites share this session and may have
-    // their own live caches
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val (df, skipped, release) = Tsv.readSkippingBadFiles(spark,
-      Seq(bad.toString,
-        dir.resolve("blockchair_bitcoin_blocks_20250820.tsv.gz").toString),
-      BlockchairSchemas.blocks)
-    assert(skipped == Seq(bad.toString))
-    assert(df.count() == 3)
-    // single-pass contract: downstream consumption reads the cached
-    // parse, not a second file scan
-    assert(df.queryExecution.optimizedPlan.toString
-      .contains("InMemoryRelation"))
-    // the release callback drops the per-file caches (unpersisting the
-    // union cannot reach them)
-    release()
-    assert(spark.sparkContext.getPersistentRDDs.keySet
-      .subsetOf(cachedBefore),
-      "release() must drop the per-file caches")
-    Files.delete(bad)
-  }
-
-  test("S3 file-level: a file malformed mid-way is also skipped") {
-    val bad = dir.resolve("midbad_blocks_20250820.tsv")
-    Files.writeString(bad,
-      Fixtures.blocksHeader + "\n" +
-        Fixtures.blocksRows.head + "\n" +
-        "garbage\trow\n")
-    val (df, skipped, release) = Tsv.readSkippingBadFiles(spark,
-      Seq(bad.toString,
-        dir.resolve("blockchair_bitcoin_blocks_20250820.tsv.gz").toString),
-      BlockchairSchemas.blocks)
-    assert(skipped == Seq(bad.toString))
-    assert(df.count() == 3)
-    release()
-    Files.delete(bad)
-  }
-
-  test("S3 file-level: only corrupt files are skipped — a missing path " +
-    "rethrows instead of silently dropping out of the union") {
-    val good = dir.resolve("blockchair_bitcoin_blocks_20250820.tsv.gz")
-    val missing = dir.resolve("nosuch_blocks_20250820.tsv.gz").toString
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val e = intercept[Exception] {
-      Tsv.readSkippingBadFiles(spark, Seq(good.toString, missing),
-        BlockchairSchemas.blocks)
-    }
-    assert(e.getMessage.contains("nosuch_blocks"), e.getMessage)
-    assert(spark.sparkContext.getPersistentRDDs.keySet
-      .subsetOf(cachedBefore), "a rethrow must release the caches taken")
-    // a truncated gzip is a whole-file read error, positively corrupt:
-    // still skipped
-    val truncated = dir.resolve("trunc_blocks_20250820.tsv.gz")
-    val bytes = Files.readAllBytes(good)
-    Files.write(truncated, bytes.take(bytes.length / 2))
-    val (df, skipped, release) = Tsv.readSkippingBadFiles(spark,
-      Seq(good.toString, truncated.toString), BlockchairSchemas.blocks)
+    // a quarantined sibling (dailyRun's .corrupt rename) holding valid
+    // blocks rows: the {.tsv,.tsv.gz} glob must not read it back
+    val blocksFile = dir.resolve("blockchair_bitcoin_blocks_20250820.tsv.gz")
+    val quarantined = dir.resolve(
+      "blockchair_bitcoin_blocks_20250819.tsv.gz.corrupt")
+    Files.copy(blocksFile, quarantined)
     try {
-      assert(skipped == Seq(truncated.toString))
-      assert(df.count() == 3)
-    } finally release()
-    Files.delete(truncated)
+      val bld = Pipeline.readRaw(spark, dir.toString)
+      assert(bld.stgBlocks.inputFiles.map(f =>
+        java.nio.file.Paths.get(new java.net.URI(f)).getFileName.toString)
+        .toSeq == Seq(blocksFile.getFileName.toString))
+      assert(bld.stgBlocks.count() == Models.stgBlocks(Tsv.read(spark,
+        blocksFile.toString, BlockchairSchemas.blocks)).count())
+      assert(bld.stgTransactions.inputFiles.map(_.split('/').last).toSeq ==
+        Seq("blockchair_bitcoin_transactions_20250820.tsv"))
+    } finally Files.delete(quarantined)
   }
 
   test("S5: retention sweep deletes only files older than the cutoff") {
@@ -153,5 +97,15 @@ class TsvSpec extends SparkSpec {
     assert(byName("INPUT_TOTAL_USD") == SchemaMerge.SfFloat)
     assert(byName("HASH") == SchemaMerge.SfVarchar(16))
     assert(byName("GUESSED_MINER") == SchemaMerge.SfVarchar(16))
+  }
+
+  test("one TSV format: the reader options are written only in Tsv.scala") {
+    // every reader, batch or stream, takes Tsv.Format; a second spelling
+    // of the options drifts (a stream reader without the corrupt-record
+    // column lets malformed lines through as null-filled rows)
+    val sites = graft.SourceAudit.calls(
+      """"sep"|"columnNameOfCorruptRecord"""".r)
+    assert(sites.keySet == Set("ingest/Tsv.scala"),
+      s"TSV options written outside Tsv: ${sites - "ingest/Tsv.scala"}")
   }
 }

@@ -107,36 +107,76 @@ class DailyRunSpec extends SparkSpec {
     val parquet = Files.createTempDirectory("graft-dailyrun-pq4").toString
     val cfg = FetchConfig.DownloadConfig(
       baseUrl = "http://stub/dumps", apiKey = None,
-      dataTypes = Seq("blocks", "transactions"), fileFormat = "tsv.gz",
-      destinationDir = dest, retentionDays = 3)
+      dataTypes = Seq("blocks", "transactions", "inputs"),
+      fileFormat = "tsv.gz", destinationDir = dest, retentionDays = 3)
+    // transactions: a malformed row after the good ones; inputs: a
+    // truncated gzip, a whole-file read error rather than a bad row
     val open: String => java.io.InputStream = { url =>
-      val t = Seq("blocks", "transactions").find(url.contains).get
-      val body =
-        if (t == "transactions") fixtureBody(t) + "garbage\trow\n"
-        else fixtureBody(t)
-      new java.io.ByteArrayInputStream(gz(body))
+      val t = cfg.dataTypes.find(url.contains).get
+      val bytes = t match {
+        case "transactions" => gz(fixtureBody(t) + "garbage\trow\n")
+        case "inputs" =>
+          val whole = gz(fixtureBody(t))
+          whole.take(whole.length / 2)
+        case _ => gz(fixtureBody(t))
+      }
+      new java.io.ByteArrayInputStream(bytes)
     }
+    // relative baseline: other suites share this session and may hold
+    // their own caches
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    def noCacheLeft(run: String) =
+      assert(spark.sparkContext.getPersistentRDDs.keySet
+        .subsetOf(cachedBefore), s"$run left the probe's parse cached")
     val report = Pipeline.dailyRun(spark, cfg, "bitcoin",
       LocalDate.of(2025, 8, 20), parquet, open = open, sleep = _ => ())
-    assert(report.skippedCorrupt == Seq("transactions"))
+    assert(report.skippedCorrupt == Seq("inputs", "transactions"))
     assert(report.landedRows.keySet == Set("blocks"))
-    assert(!Files.exists(java.nio.file.Paths.get(parquet, "transactions")))
-    // the rejected bytes are quarantined, not left at the contract name
-    val txDir = dest.resolve("transactions")
-    val contractName = "blockchair_bitcoin_transactions_20250820.tsv.gz"
-    assert(!Files.exists(txDir.resolve(contractName)))
-    assert(Files.exists(txDir.resolve(contractName + ".corrupt")))
-    // heal path: upstream republishes a clean dump; the rerun re-fetches
-    // (skip-existing no longer blocks) and lands it
+    noCacheLeft("a quarantined run")
+    // nothing of a rejected dump lands, and its bytes are quarantined,
+    // not left at the contract name
+    for (t <- Seq("transactions", "inputs")) {
+      assert(!Files.exists(java.nio.file.Paths.get(parquet, t)))
+      val contractName = s"blockchair_bitcoin_${t}_20250820.tsv.gz"
+      assert(!Files.exists(dest.resolve(t).resolve(contractName)))
+      assert(Files.exists(dest.resolve(t).resolve(contractName + ".corrupt")))
+    }
+    // heal path: upstream republishes clean dumps; the rerun re-fetches
+    // (skip-existing no longer blocks) and lands them
     val healed = Pipeline.dailyRun(spark, cfg, "bitcoin",
       LocalDate.of(2025, 8, 20), parquet,
       open = { url =>
-        val t = Seq("blocks", "transactions").find(url.contains).get
+        val t = cfg.dataTypes.find(url.contains).get
         new java.io.ByteArrayInputStream(gz(fixtureBody(t)))
       },
       sleep = _ => ())
     assert(healed.skippedCorrupt.isEmpty)
     assert(healed.landedRows("transactions") == Fixtures.txRows.size)
+    assert(healed.landedRows("inputs") == Fixtures.inputsRows.size)
+    noCacheLeft("a landed run")
+  }
+
+  test("dailyRun rethrows a non-corruption failure and quarantines nothing") {
+    val dest = Files.createTempDirectory("graft-dailyrun-raw5")
+    val parquet = Files.createTempDirectory("graft-dailyrun-pq5")
+    val cfg = FetchConfig.DownloadConfig(
+      baseUrl = "http://stub/dumps", apiKey = None,
+      dataTypes = Seq("blocks"), fileFormat = "tsv.gz",
+      destinationDir = dest, retentionDays = 3)
+    // the landing target is a plain file: the write fails on a good dump
+    Files.writeString(parquet.resolve("blocks"), "not a directory")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception] {
+      Pipeline.dailyRun(spark, cfg, "bitcoin", LocalDate.of(2025, 8, 20),
+        parquet.toString,
+        open = _ => new java.io.ByteArrayInputStream(
+          gz(fixtureBody("blocks"))),
+        sleep = _ => ())
+    }
+    assert(Files.exists(dest.resolve("blocks")
+      .resolve("blockchair_bitcoin_blocks_20250820.tsv.gz")))
+    assert(spark.sparkContext.getPersistentRDDs.keySet
+      .subsetOf(cachedBefore), "a rethrow must release the parse cache")
   }
 
   test("dailyRun: one failed type is reported, others land") {

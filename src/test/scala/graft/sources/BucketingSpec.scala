@@ -186,8 +186,8 @@ class BucketingSpec extends SparkSpec {
       d.resolve("blockchair_bitcoin_blocks_20250820.tsv.gz").toString,
       graft.schema.BlockchairSchemas.blocks).drop("_corrupt_record")
     val out = Files.createTempDirectory("graft-landed")
-    Tsv.landToParquet(blocks, "2025-08-20", out.toString, Seq("id"))
-    Tsv.landToParquet(blocks, "2025-08-21", out.toString, Seq("id"))
+    for (day <- Seq("2025-08-20", "2025-08-21"))
+      Tsv.landToParquetIdempotent(blocks, day, out.toString, Seq("id"))
     val back = spark.read.parquet(out.toString)
     assert(back.count() == 6)
     assert(back.select("load_date").distinct().count() == 2)
