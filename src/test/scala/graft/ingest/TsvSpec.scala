@@ -59,6 +59,62 @@ class TsvSpec extends SparkSpec {
     } finally Files.delete(quarantined)
   }
 
+  /** Stages one day's dumps (type -> TSV body, gzipped) at their contract
+    * names and runs [[Pipeline.dailyRun]] over them with no transport:
+    * the file-level skip is dailyRun's, per fetched file. */
+  private def dailyRunOver(bodies: Map[String, String]) = {
+    val dest = Files.createTempDirectory("graft-tsv-skip-raw")
+    val parquet = Files.createTempDirectory("graft-tsv-skip-pq").toString
+    val date = LocalDate.of(2025, 8, 20)
+    for ((t, body) <- bodies) {
+      Files.createDirectories(dest.resolve(t))
+      val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(
+        dest.resolve(t).resolve(Tsv.dailyFileName("bitcoin", t, date))))
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    val cfg = FetchConfig.DownloadConfig(
+      baseUrl = "http://stub/dumps", apiKey = None,
+      dataTypes = bodies.keys.toSeq.sorted, fileFormat = "tsv.gz",
+      destinationDir = dest, retentionDays = 3)
+    val report = Pipeline.dailyRun(spark, cfg, "bitcoin", date, parquet,
+      open = _ => fail("skip-existing: no fetch expected"), sleep = _ => ())
+    (report, dest, parquet)
+  }
+
+  private def body(header: String, rows: Seq[String]) =
+    (header +: rows).mkString("\n") + "\n"
+
+  test("S3 file-level: a bad file is skipped, good files load") {
+    // relative baseline: other suites share this session and may have
+    // their own live caches
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val (report, dest, parquet) = dailyRunOver(Map(
+      "blocks" -> body(Fixtures.blocksHeader, Fixtures.blocksRows),
+      "transactions" -> "totally\tbroken\nno\tschema\n"))
+    assert(report.skippedCorrupt == Seq("transactions"))
+    assert(report.landedRows == Map("blocks" -> Fixtures.blocksRows.size))
+    assert(spark.read.parquet(s"$parquet/blocks").count() ==
+      Fixtures.blocksRows.size)
+    assert(!Files.exists(java.nio.file.Paths.get(parquet, "transactions")))
+    assert(Files.exists(dest.resolve("transactions").resolve(
+      Tsv.dailyFileName("bitcoin", "transactions",
+        LocalDate.of(2025, 8, 20)) + ".corrupt")))
+    // the probe's cached parse is released for the good and the bad file
+    assert(spark.sparkContext.getPersistentRDDs.keySet
+      .subsetOf(cachedBefore), "dailyRun must drop the per-file caches")
+  }
+
+  test("S3 file-level: a file malformed mid-way is also skipped") {
+    // good rows first: the skip must judge the whole file, not a prefix
+    val (report, _, parquet) = dailyRunOver(Map(
+      "blocks" -> body(Fixtures.blocksHeader,
+        Fixtures.blocksRows.take(1) :+ "garbage\trow"),
+      "transactions" -> body(Fixtures.txHeader, Fixtures.txRows)))
+    assert(report.skippedCorrupt == Seq("blocks"))
+    assert(report.landedRows == Map("transactions" -> Fixtures.txRows.size))
+    assert(!Files.exists(java.nio.file.Paths.get(parquet, "blocks")))
+  }
+
   test("S5: retention sweep deletes only files older than the cutoff") {
     val d = Files.createTempDirectory("graft-retention")
     val oldF = d.resolve("blockchair_bitcoin_blocks_20250101.tsv.gz")
