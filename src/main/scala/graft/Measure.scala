@@ -268,9 +268,9 @@ object Measure {
         .select((col("id") / n).cast("long").as("src"), (col("id") % n).as("dst"))
         .repartition(s.sparkContext.defaultParallelism).localCheckpoint(true)
       val (small, big) = (complete(120), complete(300))
-      Seq(Group("trace_hub.n120_hop4", Seq(Arm("weighted", () => TraceOps.trace(small, 0L, 4)),
+      Seq(Group("trace_hub.n120_hop4", Seq(Arm("weighted", () => TraceOps.hops(small, 0L, 4)),
           Arm("row_per_path", () => rowPerPath(small, 4)))),
-        Group("trace_hub.n300_hop6", Seq(Arm("weighted", () => TraceOps.trace(big, 0L, 6)))))
+        Group("trace_hub.n300_hop6", Seq(Arm("weighted", () => TraceOps.hops(big, 0L, 6)))))
     },
     // LSH codegen cliff: fused bucket kernel vs 120 inlined dot products, same probe
     "lsh_kernel" -> { (s, d, _) =>

@@ -3,34 +3,21 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.trace.Trace
 
 /** J5/J6 — the reference's flagship recursive multi-hop fund trace
   * (app.py:339-366: `WITH RECURSIVE trace_path`, hop cap, per-hop window
-  * filter; app.py:380-383: OOM fallback to 1 hop).
+  * filter; app.py:380-383: OOM fallback to 1 hop), as oracle-gated
+  * registry queries over a synthetic (src, dst) edge set.
   *
-  * The DataFrame API has no recursive operator, so the transitive closure
-  * is a driver-side bounded loop of equi-joins — the loop count
-  * (maxHops ≤ 3) is tiny and static, while every join inside it is fully
-  * distributed. The edge set is deduplicated once up front and broadcast
-  * when small; each frontier is the previous frontier joined to the edges
-  * and re-aggregated to a WEIGHTED frontier — one (src, dst, paths) row
-  * per reached edge, path multiplicity carried as a count, not as rows.
-  * Distributive counting makes this bit-identical to UNION ALL bag
-  * semantics while bounding every hop's state by |edges|, not |paths|.
-  * `localCheckpoint` would cut lineage for deep traversals; at hop ≤ 3 the
-  * lineage is shallow enough to skip it.
-  *
-  * Spark 4's SQL engine does support `WITH RECURSIVE` (UnionLoop
-  * execution): `j9_trace_recursive_cte` runs the reference's own CTE text
-  * natively and is oracle-checked against the same DuckDB SQL — the
-  * fixed-point operator the engine drives itself, vs the loop the library
-  * drives. Both shapes are kept: the loop gives per-hop control (dedup,
-  * checkpoint, hop-1 fallback) that the black-box fixed point does not.
-  *
-  * At 100 TB the edge table does not fit in a broadcast: the same loop
-  * holds with the edges bucketed/partitioned by `src` so each hop is a
-  * co-partitioned shuffle join on the frontier only — the frontier is the
-  * small, shrinking side.
+  * j5, j6 and the Sankey readout run the served trace's own weighted-hop
+  * loop and hop-1 fallback (trace/Trace: `weightedHops`,
+  * `withHop1Fallback`), so the code the DuckDB oracle checks is the code
+  * the dashboard serves. Spark 4's SQL engine also supports
+  * `WITH RECURSIVE` (UnionLoop execution): `j9_trace_recursive_cte` runs
+  * the reference's own CTE text natively, oracle-checked against the same
+  * DuckDB SQL — the fixed point the engine drives itself, vs the loop the
+  * library drives.
   */
 object TraceOps extends QueryModule {
 
@@ -52,67 +39,20 @@ object TraceOps extends QueryModule {
         (col("user_id") % 50).as("src"),
         (col("event_id") % 50).as("dst")).distinct())
 
-  /** One weighted-frontier hop: join the frontier's dst to the edges' src,
-    * then IMMEDIATELY re-aggregate to one row per reached edge, summing the
-    * path counts that arrived there. Path counting is distributive, so this
-    * is bit-identical to enumerating paths as rows — but every hop's state
-    * is bounded by |edges|, not by |paths|. On a hub-heavy transfer graph
-    * the row-per-path frontier grows multiplicatively per hop (|edges|^h
-    * worst case — the fan-out the reference punts on with LIMIT + OOM
-    * retry, app.py:364-383); the weighted frontier never exceeds one row
-    * per edge regardless of multiplicity. TraceFrontierSpec pins the bound
-    * on a complete digraph where path multiplicity is |nodes|^hop. */
-  def step(frontier: DataFrame, edges: DataFrame): DataFrame =
-    frontier.select(col("dst").as("prev_dst"), col("paths"))
-      .join(edges, col("prev_dst") === col("src"))
-      .groupBy("src", "dst").agg(sum(col("paths")).as("paths"))
-
-  /** Bounded multi-hop trace: anchor = edges from `source` (1 path each —
-    * the edge set is distinct); each hop is `step` above, so the per-hop
-    * UNION ALL accumulates already-aggregated (src, dst, paths) rows and
-    * no terminal re-aggregation is needed: (hop, src, dst) is unique by
-    * construction.
-    *
-    * No broadcast hint on the edge side: a hard-coded `broadcast(e)` is a
-    * driver OOM at real edge cardinality. The join strategy is left to the
-    * planner — size estimation (and AQE at runtime) broadcasts small edge
-    * sets on its own, and falls back to a shuffle join when the edges
-    * outgrow the threshold, which is exactly the degradation wanted. */
-  def trace(edges: DataFrame, source: Long, maxHops: Int): DataFrame = {
-    // No .cache() on the edge plan: j5 is a LAZY query, so a pinned cache
-    // would outlive execution and accumulate across traces in a long-lived
-    // serving session (one pinned plan per window traced). The edge
-    // subtree repeats once per hop in the final plan, but every repeat is
-    // byte-identical, so physical planning dedupes it — ReuseExchange
-    // materializes the distinct's shuffle once and wires every hop join to
-    // the same exchange output. TraceSpec pins that the cache registry
-    // stays empty after executing j5/j6.
-    val e = edges
-    var frontier = e.filter(col("src") === source)
-      .withColumn("paths", lit(1L))
-    var acc = frontier.withColumn("hop", lit(1))
-    for (h <- 2 to maxHops) {
-      frontier = step(frontier, e)
-      acc = acc.unionByName(frontier.withColumn("hop", lit(h)))
-    }
-    acc.select(col("hop"), col("src"), col("dst"), col("paths"))
-  }
-
-  /** J6 — degradation retry: on failure rerun with maxHops=1
-    * (app.py:380-383, Snowflake error 100298 equivalent). The eager
-    * localCheckpoint forces execution INSIDE the try — a lazily-returned
-    * plan would defer any runtime failure (the OOM class this guards
-    * against) past the catch to the caller's first action. */
-  def traceWithFallback(edges: DataFrame, source: Long,
+  /** The one weighted-hop loop over the (src, dst) edge set, renamed at
+    * the call: (hop INT, src, dst, paths BIGINT), one row per reached
+    * edge — the edge set is distinct, so (hop, src, dst) is unique. */
+  private[graft] def hops(edges: DataFrame, source: Long,
       maxHops: Int): DataFrame =
-    try trace(edges, source, maxHops).localCheckpoint(true)
-    catch { case _: Exception =>
-      trace(edges, source, 1).localCheckpoint(true)
-    }
+    Trace.weightedHops(edges.withColumnsRenamed(Map(
+        "src" -> "source_address", "dst" -> "destination_address")),
+        source, maxHops)
+      .select(col("hop"), col("source_address").as("src"),
+        col("destination_address").as("dst"), col("paths"))
 
   def all: Seq[Q] = Seq(
     Q("j5_trace_recursive",
-      (s, d) => trace(edgeSet(s, d), source = 7L, maxHops = 3),
+      (s, d) => hops(edgeSet(s, d), source = 7L, maxHops = 3),
       Some("""WITH RECURSIVE edges AS (
                 SELECT DISTINCT user_id % 50 AS src, event_id % 50 AS dst
                 FROM events),
@@ -160,7 +100,7 @@ object TraceOps extends QueryModule {
     // (src, dst) tiebreak — (src, dst) is unique after the final group, so
     // the LIMIT is total-order deterministic.
     Q("trace_sankey_agg",
-      (s, d) => trace(edgeSet(s, d), source = 7L, maxHops = 3)
+      (s, d) => hops(edgeSet(s, d), source = 7L, maxHops = 3)
         .groupBy("src", "dst")
         .agg(sum(col("paths")).as("flow_weight"),
           count(lit(1)).as("n_hops"))
@@ -186,7 +126,8 @@ object TraceOps extends QueryModule {
     // J6: the fallback wrapper — same result as the plain trace when no
     // failure occurs (2 hops keeps the bench cost distinct from j5).
     Q("j6_trace_fallback",
-      (s, d) => traceWithFallback(edgeSet(s, d), source = 7L, maxHops = 2),
+      (s, d) => Trace.withHop1Fallback(maxHops = 2)(
+        hops(edgeSet(s, d), source = 7L, _)),
       Some("""WITH RECURSIVE edges AS (
                 SELECT DISTINCT user_id % 50 AS src, event_id % 50 AS dst
                 FROM events),

@@ -1,6 +1,6 @@
 package graft.trace
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -12,9 +12,17 @@ import java.sql.Timestamp
   * The anchor selects edges leaving `sourceAddress` inside the window;
   * each step joins the frontier's destination to the edges' source with
   * the same window predicate (app.py:353-365), accumulating with UNION
-  * ALL semantics (path multiplicity preserved). `localCheckpoint` per hop
-  * cuts the growing lineage, which is what actually prevents the
-  * reference's OOM class of failure in Spark.
+  * ALL semantics (path multiplicity preserved, carried as a count). The
+  * DataFrame API has no recursive operator, so the closure is a bounded
+  * driver-side loop of equi-joins: the loop count (maxHops ≤ 3) is tiny
+  * and static, every join inside it is distributed. The loop is lazy, so
+  * a trace is one plan; the hop cap and the weighted frontier keep it
+  * bounded.
+  *
+  * The oracle-gated registry queries (ops/TraceOps: j5, j6, the Sankey
+  * readout) run this same loop and this same hop-1 fallback over their
+  * (src, dst) edge set; Spark's native `WITH RECURSIVE` runs the
+  * reference's CTE text as j9, the fixed point the engine drives itself.
   *
   * Scale: edges pre-filtered by the time window (partition pruning when
   * traces are date-partitioned); the frontier is the small shrinking side
@@ -35,28 +43,35 @@ object Trace {
   private def orderKey: Seq[Column] = Seq(col("hop"), col("tx_time"),
     col("transaction_hash"), col("destination_address"))
 
-  /** The WEIGHTED trace accumulator: one row per (hop, reached edge)
-    * carrying `paths` = how many distinct hop-paths arrive over that
-    * edge, instead of one row PER PATH. Path counting is distributive
-    * — the count arriving at an edge is the sum of the counts that
-    * arrived at its source — so each hop joins only the DISTINCT
-    * destinations of the previous hop (with their path counts) to the
-    * edge set and never materializes multiplicity as rows. Every hop's
-    * state is bounded by |edges-in-window|, where the row-per-path
-    * frontier grows like |edges|^h on hub graphs (the blow-up the
-    * reference punts on with LIMIT + OOM retry, app.py:364-383; the
-    * gate-path twin of this rewrite lives in ops/TraceOps.step).
-    * TraceFrontierSpec pins the bound and the expansion parity on a
-    * multiplicity-heavy fixture. */
-  private[trace] def weightedHops(edges: DataFrame,
-      p: TraceParams): DataFrame = {
+  /** The WEIGHTED trace accumulator over edges carrying
+    * `source_address` and `destination_address` (any further columns
+    * ride along): one row per (hop, reached edge) carrying `paths` = how
+    * many distinct hop-paths from `anchor` arrive over that edge, instead
+    * of one row PER PATH. Path counting is distributive — the count
+    * arriving at an edge is the sum of the counts that arrived at its
+    * source — so each hop joins only the DISTINCT destinations of the
+    * previous hop (with their path counts) to the edge set and never
+    * materializes multiplicity as rows. Every hop's state is bounded by
+    * |edges|, where the row-per-path frontier grows like |edges|^h on hub
+    * graphs (the blow-up the reference punts on with LIMIT + OOM retry,
+    * app.py:364-383). TraceFrontierSpec and TraceServingFrontierSpec pin
+    * the bound and the row-per-path parity on multiplicity-heavy
+    * fixtures.
+    *
+    * No broadcast hint on the edge side: a hard-coded broadcast is a
+    * driver OOM at real edge cardinality. The planner (and AQE at runtime)
+    * broadcasts small edge sets on its own and falls back to a shuffle
+    * join when they outgrow the threshold. Each hop's plan repeats the
+    * earlier hops as subtrees; their identical exchanges run once
+    * (ReuseExchange), and the edge scan repeats once per hop join. */
+  private[graft] def weightedHops(edges: DataFrame, anchor: Any,
+      maxHops: Int): DataFrame = {
     var hopRows = edges
-      .filter(col("source_address") === p.sourceAddress)
+      .filter(col("source_address") === anchor)
       .withColumn("hop", lit(1))
       .withColumn("paths", lit(1L))
-      .localCheckpoint()
     var acc = hopRows
-    for (h <- 2 to p.maxHops) {
+    for (h <- 2 to maxHops) {
       // Weighted frontier: ONE row per distinct reached address. This
       // groupBy is the whole fix — the join input below can never
       // exceed the address domain, regardless of path multiplicity.
@@ -68,7 +83,6 @@ object Trace {
         .withColumn("hop", lit(h))
         .withColumn("paths", col("prev_paths"))
         .drop("prev_dst", "prev_paths")
-        .localCheckpoint()
       acc = acc.unionByName(hopRows)
     }
     acc
@@ -96,14 +110,10 @@ object Trace {
     *
     * Identical output to enumerate-then-limit (duplicate rows are
     * interchangeable under the sort), with memory bounded by
-    * |edges| + limit instead of |paths|. */
+    * |edges| + limit instead of |paths|. The returned plan is lazy and
+    * pins nothing: a long-lived serving session tracing many windows
+    * accumulates no cached edge plans (TraceCacheSpec). */
   def trace(traces: DataFrame, p: TraceParams): DataFrame = {
-    // The edge cache exists only for the duration of this call: each hop's
-    // eager localCheckpoint scans it, so the RETURNED plan references only
-    // checkpointed RDDs (never the cached plan), and the finally releases
-    // it — a long-lived serving session tracing many windows must not
-    // accumulate one pinned edge plan per trace. TraceSpec pins the
-    // empty-cache-registry postcondition.
     val edges = traces.select(
         col("source_address"), col("destination_address"),
         col("transaction_hash"), col("block_id"), col("tx_time"),
@@ -111,49 +121,48 @@ object Trace {
       .filter(col("tx_time").between(lit(p.startTime), lit(p.endTime)))
       .filter(col("source_address").isNotNull &&
         col("destination_address").isNotNull)
-      .cache()
-    try {
-      val topWeighted = weightedHops(edges, p)
-        .orderBy(orderKey: _*)
-        .limit(p.limit)
-      // <= limit rows from here on: the single-partition window is over
-      // the top-k slice, not the trace state.
-      val pos = Window.orderBy(orderKey: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      topWeighted
-        .withColumn("start_pos", sum(col("paths")).over(pos) - col("paths"))
-        .filter(col("start_pos") < p.limit)
-        .withColumn("n_copies",
-          least(col("paths"), lit(p.limit.toLong) - col("start_pos")))
-        .withColumn("copy_i", explode(sequence(lit(1L), col("n_copies"))))
-        .select(col("hop"), col("source_address"),
-          col("destination_address"), col("transaction_hash"),
-          col("block_id"), col("tx_time"), col("transferred_value_btc"))
-        .orderBy(orderKey: _*)
-        .limit(p.limit)
-    } finally edges.unpersist()
+    val topWeighted = weightedHops(edges, p.sourceAddress, p.maxHops)
+      .orderBy(orderKey: _*)
+      .limit(p.limit)
+    // <= limit rows from here on: the single-partition window is over
+    // the top-k slice, not the trace state.
+    val pos = Window.orderBy(orderKey: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    topWeighted
+      .withColumn("start_pos", sum(col("paths")).over(pos) - col("paths"))
+      .filter(col("start_pos") < p.limit)
+      .withColumn("n_copies",
+        least(col("paths"), lit(p.limit.toLong) - col("start_pos")))
+      .withColumn("copy_i", explode(sequence(lit(1L), col("n_copies"))))
+      .select(col("hop"), col("source_address"),
+        col("destination_address"), col("transaction_hash"),
+        col("block_id"), col("tx_time"), col("transferred_value_btc"))
+      .orderBy(orderKey: _*)
+      .limit(p.limit)
   }
 
-  /** J6 — degradation retry (app.py:380-383): any failure reruns with
-    * maxHops = 1. The eager localCheckpoint forces execution inside the
-    * try — returning the lazy plan would defer runtime failures (the OOM
-    * class this guards against) past the catch. The result is bounded by
-    * `p.limit`, so checkpointing it is cheap. */
+  /** J6 — degradation retry (app.py:380-383, Snowflake error 100298
+    * equivalent): `run(maxHops)`, and on any failure `run(1)`. The eager
+    * localCheckpoint forces execution inside the try — returning the lazy
+    * plan would defer runtime failures (the OOM class this guards
+    * against) past the catch to the caller's first action. Both the
+    * served trace and the registry's j6 go through this one wrapper. */
+  def withHop1Fallback(maxHops: Int)(run: Int => DataFrame): DataFrame =
+    try run(maxHops).localCheckpoint(true)
+    catch { case _: Exception => run(1).localCheckpoint(true) }
+
+  /** The served trace behind the hop-1 fallback. The result is bounded
+    * by `p.limit`, so checkpointing it is cheap. */
   def traceWithFallback(traces: DataFrame, p: TraceParams): DataFrame =
-    try trace(traces, p).localCheckpoint(true)
-    catch { case _: Exception =>
-      trace(traces, p.copy(maxHops = 1)).localCheckpoint(true)
-    }
+    withHop1Fallback(p.maxHops)(h => trace(traces, p.copy(maxHops = h)))
 
   /** J4 + O2/O3 — final enrichment join to dim_blocks and ordered page
     * (app.py:372-374). */
   def traceWithBlocks(traces: DataFrame, dimBlocks: DataFrame,
-      p: TraceParams): DataFrame = {
-    val t = trace(traces, p)
-    t.join(dimBlocks.select(col("block_id"), col("block_hash"),
+      p: TraceParams): DataFrame =
+    trace(traces, p)
+      .join(dimBlocks.select(col("block_id"), col("block_hash"),
         col("difficulty")), Seq("block_id"))
-      .orderBy(col("hop"), col("tx_time"), col("transaction_hash"),
-        col("destination_address"))
+      .orderBy(orderKey: _*)
       .limit(p.limit)
-  }
 }

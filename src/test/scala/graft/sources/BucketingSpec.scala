@@ -191,6 +191,15 @@ class BucketingSpec extends SparkSpec {
     val back = spark.read.parquet(out.toString)
     assert(back.count() == 6)
     assert(back.select("load_date").distinct().count() == 2)
+    // each landed file holds its rows in id order (ascending, nulls
+    // first, as Spark sorts); the fixture's null id comes last in the dump
+    val files = back.select(input_file_name(), col("id")).collect()
+      .groupBy(_.getString(0)).values.toSeq
+    assert(files.exists(_.length > 1))
+    for (rows <- files) {
+      val ids = rows.map(r => Option(r.get(1)).map(_.toString.toLong)).toSeq
+      assert(ids == ids.sorted, s"landed file out of id order: $ids")
+    }
     // partition pruning: filtering one date reads one partition directory
     val pruned = back.filter(col("load_date") === "2025-08-20")
     val plan = pruned.queryExecution.executedPlan.toString

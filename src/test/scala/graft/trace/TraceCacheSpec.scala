@@ -5,9 +5,9 @@ import graft.models.Pipeline
 import java.nio.file.Files
 import java.sql.Timestamp
 
-/** Cache-hygiene postconditions for BOTH trace implementations, in a
-  * suite with no cached fixtures of its own (TraceSpec pins behavior but
-  * caches its input, which would mask a leak from the operator under
+/** Cache-hygiene postconditions for the trace, served and registered,
+  * in a suite with no cached fixtures of its own (TraceSpec pins behavior
+  * but caches its input, which would mask a leak from the operator under
   * test). A long-lived serving session traces many windows; one pinned
   * edge plan per call is a leak, not a cache.
   */
@@ -24,8 +24,7 @@ class TraceCacheSpec extends SparkSpec {
       }
   }
 
-  test("domain Trace.trace releases its edge cache (and the returned " +
-      "plan does not depend on it)") {
+  test("domain Trace.trace pins no cached plan; its result executes") {
     spark.catalog.clearCache()
     val d = Files.createTempDirectory("graft-trace-cache")
     Fixtures.writeAll(d)
@@ -35,8 +34,7 @@ class TraceCacheSpec extends SparkSpec {
       Timestamp.valueOf("2025-08-20 23:59:59"))
     val r = Trace.trace(traces, p)
     assert(spark.sharedState.cacheManager.isEmpty,
-      "Trace.trace returned with its edge cache still pinned")
-    // the returned plan must stay executable AFTER the cache is gone
+      "Trace.trace returned with a cached plan pinned")
     assert(r.count() == 3)
   }
 }

@@ -5,13 +5,13 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Pins the r10 back-port of the weighted frontier into the SERVING
-  * trace (trace/Trace.scala, the dashboard path with full edge
-  * attributes and row-per-path output): hop state is bounded by
-  * |edges-in-window| even when path multiplicity explodes, and the
-  * end-of-plan re-expansion reproduces the row-per-path enumeration
-  * bit-identically, including a LIMIT that cuts mid-expansion. The
-  * gate-path twin of these pins is TraceFrontierSpec (ops/TraceOps).
+/** Pins the weighted frontier of the SERVING trace (trace/Trace.scala,
+  * the dashboard path with full edge attributes and row-per-path
+  * output): hop state is bounded by |edges-in-window| even when path
+  * multiplicity explodes, and the end-of-plan re-expansion reproduces the
+  * row-per-path enumeration bit-identically, including a LIMIT that cuts
+  * mid-expansion. TraceFrontierSpec pins the same loop through the
+  * registry's (src, dst) edge set.
   */
 class TraceServingFrontierSpec extends SparkSpec {
 
@@ -100,9 +100,8 @@ class TraceServingFrontierSpec extends SparkSpec {
     val complete = tracesDf(
       for { s <- 0 until n; d <- 0 until n }
         yield (s"a$s", s"a$d", s"t${s}_$d", 1L, ts, 1.0))
-    val p = Trace.TraceParams("a0", 4, from, to)
     val acc = Trace.weightedHops(
-      complete.filter(col("tx_time").between(lit(from), lit(to))), p)
+      complete.filter(col("tx_time").between(lit(from), lit(to))), "a0", 4)
       .localCheckpoint(true)
     for (h <- 1 to 4) {
       val hop = acc.filter(col("hop") === h)

@@ -71,6 +71,25 @@ class TraceSpec extends SparkSpec {
     }
   }
 
+  test("J6: a failed multi-hop attempt returns the hop-1 answer") {
+    // The multi-hop plan builds fine and fails only when executed, on its
+    // hop-2 rows — the runtime failure class the wrapper exists for. The
+    // shared wrapper must catch it inside its try and answer at 1 hop.
+    val p = Trace.TraceParams("addrA", 2, from, to)
+    val asked = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val r = Trace.withHop1Fallback(p.maxHops) { h =>
+      asked += h
+      Trace.trace(traces, p.copy(maxHops = h))
+        .filter(when(col("hop") > 1, raise_error(lit("boom")))
+          .otherwise(lit(true)))
+    }
+    assert(asked.toSeq == Seq(2, 1))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq
+    assert(rows(r) == rows(Trace.trace(traces, p.copy(maxHops = 1))))
+    assert(rows(r).size == 2)
+  }
+
   test("J4: enrichment join to dim_blocks") {
     val d = Files.createTempDirectory("graft-trace2")
     Fixtures.writeAll(d)
