@@ -73,60 +73,42 @@ object KllQuantile {
     }
   }
 
-  private def holderEncoder: Encoder[Holder] =
-    Encoders.javaSerialization[Holder]
+  /** The one Aggregator body behind the three public ones: a fresh
+    * [[Holder]] per group, `step` folds one input row into it, partial
+    * buffers merge by sketch union, and `out` reads the merged sketch.
+    * The three differ only in `step`, `out` and the output encoder. */
+  private def agg[IN, OUT](k: Int, step: (Holder, IN) => Holder,
+      out: Holder => OUT, enc: Encoder[OUT]): Aggregator[IN, Holder, OUT] =
+    new Aggregator[IN, Holder, OUT] {
+      override def zero: Holder = new Holder(k)
+      override def reduce(b: Holder, v: IN): Holder = step(b, v)
+      override def merge(a: Holder, b: Holder): Holder = a.mergeWith(b)
+      override def finish(r: Holder): OUT = out(r)
+      override def bufferEncoder: Encoder[Holder] =
+        Encoders.javaSerialization[Holder]
+      override def outputEncoder: Encoder[OUT] = enc
+    }
+
+  private def summaryEncoder: Encoder[KllSummary] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
 
   /** Values → serialized sketch (the mart-build aggregate: one BINARY
     * row per history partition, parquet-writable, unionable after
     * read-back). */
   def sketchAgg(k: Int = K): Aggregator[Double, Holder, Array[Byte]] =
-    new Aggregator[Double, Holder, Array[Byte]] {
-      override def zero: Holder = new Holder(k)
-      override def reduce(b: Holder, v: Double): Holder = b.add(v)
-      override def merge(a: Holder, b: Holder): Holder = a.mergeWith(b)
-      override def finish(r: Holder): Array[Byte] = r.sketch.toByteArray
-      override def bufferEncoder: Encoder[Holder] = holderEncoder
-      override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    }
+    agg[Double, Array[Byte]](k, _ add _, _.sketch.toByteArray,
+      Encoders.BINARY)
 
   /** Stored sketches → union → (n, min, max, quantile-at-`rank`)
     * readout (the any-window serving aggregate over the mart). */
   def unionSummaryAgg(rank: Double, k: Int = K)
       : Aggregator[Array[Byte], Holder, KllSummary] =
-    new Aggregator[Array[Byte], Holder, KllSummary] {
-      override def zero: Holder = new Holder(k)
-      override def reduce(b: Holder, v: Array[Byte]): Holder = b.addBytes(v)
-      override def merge(a: Holder, b: Holder): Holder = a.mergeWith(b)
-      override def finish(r: Holder): KllSummary = r.summary(rank)
-      override def bufferEncoder: Encoder[Holder] = holderEncoder
-      override def outputEncoder: Encoder[KllSummary] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    }
+    agg[Array[Byte], KllSummary](k, _ addBytes _, _.summary(rank),
+      summaryEncoder)
 
   /** Raw values → one direct sketch → summary (the single-pass arm the
     * gate compares the mart path against). */
   def valueSummaryAgg(rank: Double, k: Int = K)
       : Aggregator[Double, Holder, KllSummary] =
-    new Aggregator[Double, Holder, KllSummary] {
-      override def zero: Holder = new Holder(k)
-      override def reduce(b: Holder, v: Double): Holder = b.add(v)
-      override def merge(a: Holder, b: Holder): Holder = a.mergeWith(b)
-      override def finish(r: Holder): KllSummary = r.summary(rank)
-      override def bufferEncoder: Encoder[Holder] = holderEncoder
-      override def outputEncoder: Encoder[KllSummary] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    }
-
-  /** Serialized sketches → serialized union (the incremental fold:
-    * yesterday's stored union + today's sketch → today's stored
-    * union). */
-  def unionAgg(k: Int = K): Aggregator[Array[Byte], Holder, Array[Byte]] =
-    new Aggregator[Array[Byte], Holder, Array[Byte]] {
-      override def zero: Holder = new Holder(k)
-      override def reduce(b: Holder, v: Array[Byte]): Holder = b.addBytes(v)
-      override def merge(a: Holder, b: Holder): Holder = a.mergeWith(b)
-      override def finish(r: Holder): Array[Byte] = r.sketch.toByteArray
-      override def bufferEncoder: Encoder[Holder] = holderEncoder
-      override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    }
+    agg[Double, KllSummary](k, _ add _, _.summary(rank), summaryEncoder)
 }

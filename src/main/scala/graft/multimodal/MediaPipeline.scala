@@ -1,7 +1,6 @@
 package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing (north-star extension): image/audio/video
   * as opaque `binary` columns with typed metadata, and a partition-batched
@@ -41,11 +40,6 @@ object MediaPipeline {
       n_frames: Int,
       feature: Array[Float])
 
-  /** Attach the opaque payload column (here: utf-8 text bytes stand in
-    * for real media bytes). */
-  def withPayload(documents: DataFrame): DataFrame =
-    documents.select(col("doc_id"), col("text").cast("binary").as("payload"))
-
   /** DETERMINISTIC STUB for the media decode. A real deployment replaces
     * this body with the codec call; the signature — bytes in, typed
     * features out — is the contract the pipeline tests. */
@@ -81,25 +75,6 @@ object MediaPipeline {
             r.payload.length, sw, sh, frames, feat)
         }
       }
-    }
-  }
-
-  /** Resize stage: fit-within-box with aspect ratio preserved. The
-    * geometry (the part a pipeline must get right) is real; only the
-    * pixel resample is behind the stub boundary. Feature vectors are
-    * re-scaled deterministically so downstream similarity stays stable
-    * under resize — the invariant a real embedding model provides. */
-  def resize(features: Dataset[MediaFeatures], maxW: Int,
-      maxH: Int): Dataset[MediaFeatures] = {
-    val spark = features.sparkSession
-    import spark.implicits._
-    features.map { f =>
-      val scale = math.min(1.0,
-        math.min(maxW.toDouble / f.width, maxH.toDouble / f.height))
-      if (scale >= 1.0) f
-      else f.copy(
-        width = math.max(1, math.round(f.width * scale).toInt),
-        height = math.max(1, math.round(f.height * scale).toInt))
     }
   }
 
@@ -141,17 +116,6 @@ object MediaPipeline {
     }
   }
 
-  /** Frame sampling plan: deterministic every-k frame indices per row —
-    * the plumbing a video pipeline needs before decode fan-out. */
-  def sampleFrameIndices(features: Dataset[MediaFeatures],
-      everyK: Int): DataFrame = {
-    val spark = features.sparkSession
-    import spark.implicits._
-    features.toDF().select(col("doc_id"), col("n_frames"),
-      sequence(lit(0), col("n_frames") - 1, lit(everyK))
-        .as("sampled_frames"))
-  }
-
   final case class AudioStats(doc_id: Long, sample_rate: Int,
       n_samples: Int, duration_ms: Double, rms: Double, peak: Int,
       zero_crossings: Int)
@@ -184,7 +148,7 @@ object MediaPipeline {
   /** REAL video stage (round 9): multi-frame GIF payloads are fully
     * decoded — LZW code stream and all ([[GifCodec.decodeFrames]]) —
     * then every-k frame sampling runs on the REAL decoded frames
-    * (indices 0, k, 2k, … — the schedule [[sampleFrameIndices]] plans)
+    * (indices 0, k, 2k, …)
     * and mean intensity is computed per sampled frame: exact integer
     * sum, one double division, the same parity recipe as
     * [[pixelStats]]. One output row per (doc, sampled frame). The

@@ -63,14 +63,14 @@ object GraphOps extends QueryModule {
         .agg(sum(dec(col("value"))).as("w")))
 
   /** Bounded wait for an [[org.apache.spark.sql.Observation]]'s metrics:
-    * poll `getOrEmpty` up to `timeoutMs`, returning None on expiry.
+    * await its future up to `timeoutMs`, returning None on expiry.
     * `obs.get` blocks FOREVER if the SQLExecutionEnd event is dropped
     * (listener-bus overflow under load), which would hang the CC
     * convergence loops where the replaced count() action used to fail
     * loudly (ADVICE r14). Callers fall back to an explicit (exact)
     * aggregate over the already-checkpointed round output — one extra
     * bounded job on the rare dropped-event path, never a hang. */
-  private def observedOrNone(obs: org.apache.spark.sql.Observation,
+  private[ops] def observedOrNone(obs: org.apache.spark.sql.Observation,
       timeoutMs: Long = 60000L): Option[Map[String, Any]] =
     try {
       val row = scala.concurrent.Await.result(obs.future,

@@ -33,14 +33,9 @@ object VectorOps extends QueryModule {
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorExprs.dotProduct(a, b)
 
-  /** Cosine similarity, same op sequence as the DuckDB oracle:
-    * dot / (sqrt(dot_aa) * sqrt(dot_bb)). Prefer precomputing
-    * sqrt(dot(v,v)) once per vector (see the queries below) — N norms
-    * instead of N² — which keeps this exact op sequence per pair. */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-
-  /** Pair cosine from precomputed norms (normA = sqrt(dot(a,a))). */
+  /** Pair cosine, same op sequence as the DuckDB oracle:
+    * dot / (normA * normB) with normA = sqrt(dot(a, a)) precomputed once
+    * per vector — N norms instead of N² per pair. */
   def cosineWithNorms(a: Column, b: Column, normA: Column,
       normB: Column): Column =
     dot(a, b) / (normA * normB)
@@ -94,13 +89,6 @@ object VectorOps extends QueryModule {
 
   private[graft] val planes: Seq[Seq[Double]] =
     planesFor(numTables * bitsPerTable)
-
-  /** Random-hyperplane sign bucket of an array<double> vector (first 8
-    * planes — used for determinism tests and single-table demos). */
-  def lshBucket(v: Column): Column =
-    planes.take(8).zipWithIndex.map { case (w, p) =>
-      when(dot(v, typedLit(w)) > 0.0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /** Per-table bucket ids for the multi-table index: element t of the
     * result hashes with planes [t*b, (t+1)*b). Computed by the fused

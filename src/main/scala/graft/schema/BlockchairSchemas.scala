@@ -10,9 +10,9 @@ import org.apache.spark.sql.types._
   * Snowflake INTEGER ≡ NUMBER(38,0); satoshi totals routinely exceed 2³¹,
   * so every count/sats column is LongType (SURVEY.md §1.2). Boolean-ish
   * columns (IS_COINBASE …) stay 0/1 LongType for parity. VARCHAR tier
-  * lengths are carried as column metadata — advisory, never enforced at
-  * runtime (Snowflake semantics), but load-bearing for the widening
-  * lattice in [[SchemaMerge]].
+  * lengths are carried as column metadata: the reference DDL's declared
+  * lengths, advisory and never enforced at runtime (Snowflake
+  * semantics).
   */
 object BlockchairSchemas {
 
@@ -21,11 +21,6 @@ object BlockchairSchemas {
   def varchar(name: String, tier: Int, nullable: Boolean = true): StructField =
     StructField(name, StringType, nullable,
       new MetadataBuilder().putLong(TierKey, tier.toLong).build())
-
-  /** Advisory VARCHAR tier from metadata (None = untiered string). */
-  def tierOf(f: StructField): Option[Int] =
-    if (f.metadata.contains(TierKey)) Some(f.metadata.getLong(TierKey).toInt)
-    else None
 
   def long(name: String): StructField = StructField(name, LongType)
   def dbl(name: String): StructField = StructField(name, DoubleType)

@@ -144,8 +144,9 @@ object SchemaMerge {
 
   /** The reference's source-priority rule (generate_snowflake_ddl.py:
     * 221-258): a JSON dump wins over DDL text; absent both → empty (the
-    * widen() caller then treats the new schema as first-write). */
-  def parseExisting(json: Option[String], ddl: Option[String]): Schema =
+    * widen() caller then treats the new schema as first-write). `ddl` is
+    * by-name, so the DDL text is read only when the dump is missing. */
+  def parseExisting(json: Option[String], ddl: => Option[String]): Schema =
     json.map(parseJson).filter(_.nonEmpty)
       .orElse(ddl.map(parseDdl))
       .getOrElse(Nil)
@@ -160,27 +161,5 @@ object SchemaMerge {
     case VarcharPat(n) => SfVarchar(n.toInt)
     case "VARCHAR" => SfVarchar(16777216) // unbounded ≡ Snowflake max
     case other => throw new IllegalArgumentException(s"unknown type: $other")
-  }
-
-  /** Spark StructType (with the varchar-tier metadata from
-    * [[BlockchairSchemas]]) → warehouse schema, for DDL emission of the
-    * real tables. */
-  def fromStructType(st: org.apache.spark.sql.types.StructType): Schema = {
-    import org.apache.spark.sql.types._
-    st.fields.toSeq.map { f =>
-      val typ = f.dataType match {
-        case LongType | IntegerType => SfInteger
-        case DoubleType | FloatType => SfFloat
-        case BooleanType => SfBoolean
-        case DateType => SfDate
-        case TimestampType => SfTimestamp
-        case StringType =>
-          SfVarchar(BlockchairSchemas.tierOf(f).getOrElse(defaultStringLength))
-        case other =>
-          throw new IllegalArgumentException(
-            s"no warehouse mapping for ${other.simpleString}")
-      }
-      ColumnSpec(sanitize(f.name, st.fields.indexOf(f)), typ)
-    }
   }
 }

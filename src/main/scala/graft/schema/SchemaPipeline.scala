@@ -19,22 +19,23 @@ object SchemaPipeline {
   final case class Kept(reason: String) extends Outcome // narrower/mismatch
 
   /** Run inference + widening gate for one table. `schemaDir` holds the
-    * persisted `<table>.json` schema between runs. */
+    * persisted schema between runs: the `<table>.json` dump, and the
+    * `<table>.sql` DDL, which is read only when the dump is missing
+    * ([[SchemaMerge.parseExisting]]). */
   def run(spark: SparkSession, tsvPath: String, tableName: String,
       schemaDir: Path, sampleRows: Int = 1000000): Outcome = {
     val inferred = SchemaInfer.infer(Tsv.readRaw(spark, tsvPath), sampleRows)
     val jsonPath = schemaDir.resolve(s"$tableName.json")
-    val existing: SchemaMerge.Schema =
-      if (Files.exists(jsonPath))
-        SchemaMerge.parseJson(Files.readString(jsonPath))
-      else Nil
+    val ddlPath = schemaDir.resolve(s"$tableName.sql")
+    def read(p: Path) = Option.when(Files.exists(p))(Files.readString(p))
+    val existing = SchemaMerge.parseExisting(read(jsonPath), read(ddlPath))
 
     SchemaMerge.widen(existing, inferred) match {
       case SchemaMerge.Replace(next) =>
         Files.createDirectories(schemaDir)
         val ddl = SchemaMerge.renderDdl(tableName, next)
         Files.writeString(jsonPath, SchemaMerge.renderJson(next))
-        Files.writeString(schemaDir.resolve(s"$tableName.sql"), ddl)
+        Files.writeString(ddlPath, ddl)
         Updated(ddl)
       case SchemaMerge.Identical => Skipped
       case SchemaMerge.Rejected(col, reason) => Kept(s"$col: $reason")

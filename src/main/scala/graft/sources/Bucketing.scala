@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-table layout management — the "cluster_by" story at 100 TB
   * (SURVEY.md §4: clustering keys per model; reference
@@ -27,16 +27,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * calling [[writeBucketed]].
   */
 object Bucketing {
-
-  /** Marker file written into every bucketed table's location recording
-    * the ACTUAL bucket count of the layout. Cross-JVM readers that must
-    * restate the spec in a `CREATE TABLE ... INTO n BUCKETS` DDL read
-    * this instead of trusting a caller's count: Spark trusts the DDL, so
-    * a restated count larger than the written one plans exchange-free
-    * SMJ/window over WRONG bucket
-    * placement — silently wrong rows (ADVICE r13). Underscore-prefixed,
-    * so Spark's file index ignores it as a data file. */
-  val BucketMarkerFile = "_graft_buckets"
 
   /** Write `df` as a bucketed, sorted table — managed by default, or an
     * external table at `path`. The single shared implementation of the
@@ -86,43 +76,5 @@ object Bucketing {
       else w
     val located = path.fold(sorted)(p => sorted.option("path", p))
     located.format("parquet").saveAsTable(table)
-    writeBucketMarker(ss, table, buckets)
   }
-
-  /** Record the written layout's actual bucket count at the table's
-    * (catalog-resolved) location. */
-  private def writeBucketMarker(ss: SparkSession, table: String,
-      buckets: Int): Unit = {
-    val ident = ss.sessionState.sqlParser.parseTableIdentifier(table)
-    val loc = new org.apache.hadoop.fs.Path(
-      ss.sessionState.catalog.getTableMetadata(ident).location)
-    val fs = loc.getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(loc, BucketMarkerFile),
-      /* overwrite = */ true)
-    try out.write(s"$buckets\n".getBytes("UTF-8")) finally out.close()
-  }
-
-  /** The bucket count a layout at `location` was actually written with,
-    * from its [[BucketMarkerFile]] — None if the marker is absent
-    * (pre-r14 layout) or unreadable. */
-  def readBucketMarker(ss: SparkSession, location: String): Option[Int] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(location, BucketMarkerFile)
-      val fs = p.getFileSystem(ss.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try {
-          val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          Some(s.toInt)
-        } finally in.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Co-located equi-join over two tables bucketed on the join key:
-    * with matching bucket counts Spark plans SMJ with no Exchange on
-    * either side. */
-  def colocatedJoin(spark: SparkSession, left: String, right: String,
-      on: Seq[String], joinType: String = "inner"): DataFrame =
-    spark.table(left).join(spark.table(right), on, joinType)
 }

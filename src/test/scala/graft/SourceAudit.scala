@@ -1,32 +1,39 @@
 package graft
 
-/** Shared source walk for the audit specs: counts, per file under
-  * src/main/scala/graft, the calls a pattern matches outside comments. */
+/** Shared source walk for the audit specs: the code lines of every
+  * .scala file under a source root, with comments dropped. */
 object SourceAudit {
 
-  /** file (relative to the graft source root) → call count, files with
-    * none left out. Doc/comment lines and trailing line comments are
-    * skipped: the audits count CALLS, and rationale comments legitimately
-    * name the calls they forbid. */
-  def calls(call: scala.util.matching.Regex): Map[String, Int] = {
-    val root = new java.io.File("src/main/scala/graft")
-    assert(root.isDirectory, s"source root not found from ${
+  /** file path (as walked from the repo root) → its lines, in order, with
+    * doc/comment lines blanked and trailing line comments cut. The audits
+    * count CALLS, and rationale comments legitimately name the calls they
+    * forbid. Line numbers are kept (blanked, not removed). */
+  def codeLines(root: String): Seq[(String, IndexedSeq[String])] = {
+    val dir = new java.io.File(root)
+    assert(dir.isDirectory, s"source root $root not found from ${
       new java.io.File(".").getAbsolutePath}")
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory)
         Option(f.listFiles()).fold(Seq.empty[java.io.File])(_.toSeq.flatMap(files))
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    files(root).map { f =>
+    files(dir).map { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
-      val n = try src.getLines().map { line =>
+      val lines = try src.getLines().map { line =>
         val t = line.trim
-        if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) 0
-        else call.findAllIn(stripLineComment(line)).length
-      }.sum finally src.close()
-      f.getPath.replace('\\', '/')
-        .stripPrefix("src/main/scala/graft/") -> n
-    }.filter(_._2 > 0).toMap
+        if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) ""
+        else stripLineComment(line)
+      }.toIndexedSeq finally src.close()
+      f.getPath.replace('\\', '/') -> lines
+    }
   }
+
+  /** file (relative to the graft source root) → call count, files with
+    * none left out. */
+  def calls(call: scala.util.matching.Regex): Map[String, Int] =
+    codeLines("src/main/scala/graft").map { case (path, lines) =>
+      path.stripPrefix("src/main/scala/graft/") ->
+        lines.map(call.findAllIn(_).length).sum
+    }.filter(_._2 > 0).toMap
 
   /** Drop a trailing line comment, but only at a '//' OUTSIDE string
     * literals — a naive split("//") would also truncate at a URL or path

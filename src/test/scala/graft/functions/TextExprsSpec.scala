@@ -67,13 +67,15 @@ class TextExprsSpec extends SparkSpec {
     val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
-    val b1 = e.select(col("vec_id"),
-      graft.ops.VectorOps.lshBucket(col("v")).as("b")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b2 = e.select(col("vec_id"),
-      graft.ops.VectorOps.lshBucket(col("v")).as("b")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(b1 == b2)
-    assert(b1.values.toSet.size > 16, "buckets should spread over many values")
+    def buckets = e.select(col("vec_id"),
+      graft.ops.VectorOps.lshTableBuckets(col("v")).as("b")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
+    val b1 = buckets
+    assert(b1 == buckets)
+    // every table spreads the vectors over many of its 2^bits buckets
+    val perTable = b1.values.toSeq.transpose.map(_.toSet.size)
+    assert(perTable.size == graft.ops.VectorOps.numTables)
+    assert(perTable.forall(_ > 16),
+      s"buckets should spread over many values per table: $perTable")
   }
 }

@@ -5,30 +5,23 @@ import org.apache.spark.sql.functions._
 
 class MediaPipelineSpec extends SparkSpec {
 
-  private lazy val docs = {
+  // utf-8 text bytes stand in for an unrecognized media payload
+  private lazy val media = {
     import spark.implicits._
     Seq((1L, "hello media world"), (2L, "x"), (3L, "longer payload body"))
       .toDF("doc_id", "text")
-  }
-
-  test("payload column is binary with correct byte length") {
-    val media = MediaPipeline.withPayload(docs)
-    assert(media.schema("payload").dataType.typeName == "binary")
-    val lens = media.select(col("doc_id"), length(col("payload")))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(lens(1L) == 17 && lens(2L) == 1)
+      .select(col("doc_id"), col("text").cast("binary").as("payload"))
   }
 
   test("decode runs per-partition and yields deterministic features") {
-    val features = MediaPipeline.decode(spark,
-      MediaPipeline.withPayload(docs))
+    val features = MediaPipeline.decode(spark, media)
     val rows = features.collect().map(f => f.doc_id -> f).toMap
     assert(rows(1L).media_bytes == 17)
     assert(rows.values.forall(f => f.width >= 16 && f.height >= 16))
     assert(rows.values.forall(_.feature.length == 8))
     // determinism across runs
-    val again = MediaPipeline.decode(spark,
-      MediaPipeline.withPayload(docs)).collect().map(f => f.doc_id -> f).toMap
+    val again = MediaPipeline.decode(spark, media).collect()
+      .map(f => f.doc_id -> f).toMap
     assert(rows(3L).feature.toSeq == again(3L).feature.toSeq)
     assert(rows(3L).n_frames == again(3L).n_frames)
   }
@@ -50,40 +43,17 @@ class MediaPipelineSpec extends SparkSpec {
   }
 
   test("frame sampling emits every-k indices bounded by n_frames") {
-    val features = MediaPipeline.decode(spark,
-      MediaPipeline.withPayload(docs))
-    val sampled = MediaPipeline.sampleFrameIndices(features, everyK = 4)
-      .collect()
-    sampled.foreach { r =>
-      val n = r.getAs[Int]("n_frames")
-      val idx = r.getAs[scala.collection.Seq[Int]]("sampled_frames")
-      assert(idx.head == 0 && idx.forall(i => i >= 0 && i < n))
-      assert(idx.toSeq == idx.toSeq.sorted)
-    }
-  }
-
-  test("resize fits within the box, preserves aspect, never upscales") {
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val features = MediaPipeline.decode(spark,
-      MediaPipeline.withPayload(docs))
-    val before = features.collect().map(f => f.doc_id -> f).toMap
-    val resized = MediaPipeline.resize(features, maxW = 64, maxH = 64)
-      .collect()
-    assert(resized.nonEmpty)
-    resized.foreach { f =>
-      val orig = before(f.doc_id)
-      assert(f.width <= 64 && f.height <= 64)
-      assert(f.width <= orig.width && f.height <= orig.height) // no upscale
-      if (orig.width > 64 || orig.height > 64) {
-        // aspect preserved within integer rounding: the drift bound is
-        // ~half a pixel on the SMALLER output dimension
-        val ratioBefore = orig.width.toDouble / orig.height
-        val ratioAfter = f.width.toDouble / f.height
-        val tol = math.max(0.1, 1.0 / math.min(f.width, f.height))
-        assert(math.abs(ratioBefore - ratioAfter) / ratioBefore <= tol,
-          s"aspect drift for doc ${f.doc_id}: $ratioBefore -> $ratioAfter")
-      } else assert(f.width == orig.width && f.height == orig.height)
-      assert(f.feature.sameElements(orig.feature)) // features untouched
+    import spark.implicits._
+    val nFrames = Map(1L -> 1, 2L -> 5, 3L -> 9)
+    val gifs = nFrames.toSeq.map { case (id, n) =>
+      MediaPipeline.MediaRow(id, GifCodec.gifGray(4, 4, n, (f, i) => f + i))
+    }.toDF()
+    val sampled = MediaPipeline.frameStats(spark, gifs, everyK = 4)
+      .collect().groupBy(_.doc_id).map { case (id, fs) =>
+        id -> fs.map(_.frame_idx).sorted.toSeq }
+    assert(sampled.keySet == nFrames.keySet)
+    sampled.foreach { case (id, idx) =>
+      assert(idx == (0 until nFrames(id) by 4), s"doc $id: $idx")
     }
   }
 }

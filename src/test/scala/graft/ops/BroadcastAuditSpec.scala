@@ -35,9 +35,6 @@ class BroadcastAuditSpec extends AnyFunSuite {
     // quadGuard-capped BNLJ build side (emb_neardup_pairs, r15: the
     // guard bounds it at ~10k vectors at any corpus size)
     "ops/TextOps.scala" -> 2, // corpus-bytes-gated gram dims (rare, c1)
-    "sources/Layout.scala" -> 1, // 1-row z-order bounds
-    // streaming/StreamIngest.scala: 0 since r13 — enrichWithDim's dim
-    // hint moved behind SizeGate.broadcastIfSmall
     "streaming/StreamQueries.scala" -> 1, // 1-row watermark
     "util/SizeGate.scala" -> 1, // THE gate: stats-bounded hint helper
   )

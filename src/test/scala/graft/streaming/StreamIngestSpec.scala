@@ -1,40 +1,12 @@
 package graft.streaming
 
 import graft.{Fixtures, SparkSpec}
-import graft.models.Models
-import graft.schema.BlockchairSchemas
 import java.nio.file.Files
 
 class StreamIngestSpec extends SparkSpec {
 
-  test("streaming TSV ingest → staging → windowed agg via memory sink") {
-    val dir = Files.createTempDirectory("graft-stream")
-    Files.writeString(dir.resolve("blockchair_bitcoin_transactions_20250820.tsv"),
-      (Fixtures.txHeader +: Fixtures.txRows).mkString("\n") + "\n")
-
-    val stream = StreamIngest.readTsvStream(spark, dir.toString,
-      BlockchairSchemas.transactions)
-    assert(stream.isStreaming)
-    // batch staging transform composes unchanged over the stream
-    val stg = Models.stgTransactions(stream)
-    val agg = StreamIngest.txMetricsByWindow(stg)
-    val q = StreamIngest.toMemorySink(agg, "tx_metrics", "append").start()
-    q.awaitTermination(60000)
-    // Append mode only emits closed windows; with a finite file the
-    // watermark cannot advance past the last batch, so assert on the
-    // complete-mode rerun instead:
-    val q2 = StreamIngest.toMemorySink(agg, "tx_metrics_complete",
-      "complete").start()
-    q2.awaitTermination(60000)
-    val rows = spark.sql(
-      "SELECT * FROM tx_metrics_complete ORDER BY window_start").collect()
-    assert(rows.length == 1) // all three txs land in the 00:00 hour window
-    assert(rows(0).getAs[Long]("tx_count") == 3)
-    assert(rows(0).getAs[Long]("fee_sats_total") == 13100000L)
-  }
-
-  test("malformed rows are EXCLUDED from the clean stream and surface " +
-    "on the corrupt stream — no null husks reach downstream aggregates") {
+  test("malformed rows are EXCLUDED from the clean stream — no null " +
+    "husks reach downstream aggregates") {
     val dir = Files.createTempDirectory("graft-stream-corrupt")
     Files.writeString(
       dir.resolve("blockchair_bitcoin_inputs_20250820.tsv"),
@@ -43,6 +15,7 @@ class StreamIngestSpec extends SparkSpec {
         Fixtures.inputsRows.head + "\n")
     val clean = StreamIngest.readTsvStream(spark, dir.toString,
       graft.schema.BlockchairSchemas.inputs)
+    assert(clean.isStreaming)
     assert(!clean.columns.contains("_corrupt_record"),
       "clean stream must carry the batch reader's post-quarantine schema")
     val q = clean.writeStream.format("memory").queryName("clean_inputs")
@@ -52,121 +25,6 @@ class StreamIngestSpec extends SparkSpec {
     q.awaitTermination(60000)
     assert(spark.sql("SELECT COUNT(*) FROM clean_inputs")
       .collect()(0).getLong(0) == 1, "husk row leaked into the stream")
-    val corrupt = StreamIngest.corruptTsvStream(spark, dir.toString,
-      graft.schema.BlockchairSchemas.inputs)
-    val q2 = corrupt.writeStream.format("memory").queryName("bad_inputs")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q2.awaitTermination(60000)
-    val bad = spark.sql("SELECT _corrupt_record FROM bad_inputs").collect()
-    assert(bad.length == 1 && bad(0).getString(0).startsWith("not_a_number"),
-      s"quarantine stream must carry the raw line: ${bad.mkString}")
-  }
-
-  test("streaming dedup drops repeated keys within the watermark") {
-    val dir = Files.createTempDirectory("graft-stream3")
-    // the same transactions file landed twice (a re-delivered daily dump)
-    val body = (Fixtures.txHeader +: Fixtures.txRows).mkString("\n") + "\n"
-    Files.writeString(dir.resolve("blockchair_bitcoin_transactions_20250820.tsv"), body)
-    Files.writeString(dir.resolve("blockchair_bitcoin_transactions_20250820_redelivery.tsv"), body)
-    val stream = StreamIngest.readTsvStream(spark, dir.toString,
-      graft.schema.BlockchairSchemas.transactions, maxFilesPerTrigger = 2)
-    val stg = graft.models.Models.stgTransactions(stream)
-    val deduped = StreamIngest.dedupStream(stg, "tx_time", "1 day",
-      "transaction_hash", "block_id")
-    val q = deduped.writeStream.format("memory").queryName("tx_dedup")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    val n = spark.sql("SELECT COUNT(*) FROM tx_dedup").collect()(0).getLong(0)
-    assert(n == 3) // six landed rows (3 × 2 files) → 3 distinct
-  }
-
-  test("streaming session windows aggregate with bounded state") {
-    val dir = Files.createTempDirectory("graft-stream4")
-    Fixtures.writeAll(dir)
-    val inputs = StreamIngest.readTsvStream(spark, dir.toString + "/*inputs*",
-      graft.schema.BlockchairSchemas.inputs)
-    val ev = graft.models.Models.stgInputs(inputs)
-      .selectExpr("recipient AS user_id", "time AS ts")
-      .filter("user_id IS NOT NULL")
-    val sess = StreamIngest.sessionWindows(ev, "ts", "30 minutes")
-    val q = sess.writeStream.format("memory").queryName("sessions")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    val rows = spark.sql("SELECT * FROM sessions").collect()
-    assert(rows.nonEmpty)
-    assert(rows.forall(_.getAs[Long]("n_events") >= 1))
-  }
-
-  test("stream-static enrich broadcasts the dim, left keys preserved") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream5")
-    Fixtures.writeAll(dir)
-    val inputs = StreamIngest.readTsvStream(spark, dir.toString + "/*inputs*",
-      BlockchairSchemas.inputs)
-    val stream = Models.stgInputs(inputs)
-      .selectExpr("recipient", "value_sats")
-      .filter("recipient IS NOT NULL")
-    val dim = Seq(("addrA", "exchange"), ("addrC", "miner"))
-      .toDF("recipient", "label")
-    val enriched = StreamIngest.enrichWithDim(stream, dim, "recipient")
-    val q = enriched.writeStream.format("memory").queryName("enriched")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    val rows = spark.sql("SELECT recipient, label FROM enriched").collect()
-      .map(r => r.getString(0) -> Option(r.getString(1))).toMap
-    assert(rows("addrA").contains("exchange"))
-    assert(rows("addrC").contains("miner"))
-    // left join: unmatched stream rows survive with a null label
-    assert(rows.exists(_._2.isEmpty))
-  }
-
-  test("stream-stream join within an event-time band (bounded state)") {
-    val dir = Files.createTempDirectory("graft-stream6")
-    Fixtures.writeAll(dir)
-    val inputs = Models.stgInputs(StreamIngest.readTsvStream(spark,
-      dir.toString + "/*inputs*", BlockchairSchemas.inputs))
-      .selectExpr("transaction_hash", "time AS in_time",
-        "value_sats AS in_sats")
-    val outputs = Models.stgOutputs(StreamIngest.readTsvStream(spark,
-      dir.toString + "/*outputs*", BlockchairSchemas.outputs))
-      .selectExpr("transaction_hash", "time AS out_time",
-        "value_sats AS out_sats")
-    val joined = StreamIngest.joinStreamsWithinBand(
-      inputs, "in_time", outputs, "out_time", "transaction_hash",
-      watermark = "1 day", band = "1 hour")
-    // exactly one key column: downstream groupBy must not be ambiguous
-    assert(joined.columns.count(_ == "transaction_hash") == 1)
-    joined.groupBy("transaction_hash")
-    val q = joined.writeStream.format("memory").queryName("ss_join")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    val n = spark.sql("SELECT COUNT(*) FROM ss_join").collect()(0).getLong(0)
-    // batch reference: same join, same band, on the static frames
-    val bIn = graft.ingest.Tsv.read(spark,
-      dir.resolve("blockchair_bitcoin_inputs_20250820.tsv").toString,
-      BlockchairSchemas.inputs)
-    val bOut = graft.ingest.Tsv.read(spark,
-      dir.resolve("blockchair_bitcoin_outputs_20250820.tsv").toString,
-      BlockchairSchemas.outputs)
-    val expected = Models.stgInputs(bIn).selectExpr("transaction_hash",
-        "time AS in_time")
-      .join(Models.stgOutputs(bOut).selectExpr(
-        "transaction_hash AS th2", "time AS out_time"),
-        org.apache.spark.sql.functions.expr(
-          "transaction_hash = th2 AND out_time >= in_time AND " +
-            "out_time <= in_time + INTERVAL 1 hour"))
-      .count()
-    assert(n == expected && n > 0)
   }
 
   private def writeCsvFiles(prefix: String,
@@ -191,72 +49,6 @@ class StreamIngestSpec extends SparkSpec {
     spark.readStream.schema(evSchema).option("header", "true")
       .option("maxFilesPerTrigger", perTrigger)
       .csv(dir.toString)
-
-  test("dedupStreamWithinWatermark drops redeliveries that carry " +
-    "DIFFERENT event times (key-only state)") {
-    val dir = writeCsvFiles("graft-stream-wmdedup", Seq(Seq(
-      "1,2026-01-01 10:00:00",
-      "1,2026-01-01 10:03:00", // retried send, re-stamped time
-      "2,2026-01-01 10:01:00")))
-    val deduped = StreamIngest.dedupStreamWithinWatermark(
-      readEvStream(dir, 1), "ts", "1 hour", "user_id")
-    val q = deduped.writeStream.format("memory").queryName("wm_dedup")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    val n = spark.sql("SELECT COUNT(DISTINCT user_id), COUNT(*) " +
-      "FROM wm_dedup").collect()(0)
-    assert(n.getLong(0) == 2 && n.getLong(1) == 2,
-      s"time-respun redelivery survived: $n")
-    // the plain key+time dedup CANNOT drop it — that contrast is the op
-    val strict = StreamIngest.dedupStream(
-      readEvStream(dir, 1), "ts", "1 hour", "user_id")
-    val q2 = strict.writeStream.format("memory").queryName("strict_dedup")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q2.awaitTermination(60000)
-    assert(spark.sql("SELECT COUNT(*) FROM strict_dedup")
-      .collect()(0).getLong(0) == 3)
-  }
-
-  test("idempotent batch sink: replayed batch ids are skipped, " +
-    "restart with the same checkpoint adds nothing") {
-    import spark.implicits._
-    val out = Files.createTempDirectory("graft-idem-out").toString
-    // unit level: same batchId twice → second write is a no-op even
-    // with different (corrupt-replay) content
-    assert(StreamIngest.writeBatchIdempotent(
-      Seq((1L, "a")).toDF("k", "v"), out, batchId = 7L))
-    assert(!StreamIngest.writeBatchIdempotent(
-      Seq((2L, "b"), (3L, "c")).toDF("k", "v"), out, batchId = 7L))
-    val kept = spark.read.parquet(s"$out/batch_id=7")
-    assert(kept.count() == 1 && kept.select("v").head.getString(0) == "a")
-
-    // end-to-end: stream → sink, then RERUN with the same checkpoint —
-    // no new batches, no new files, same rows
-    val dir = writeCsvFiles("graft-idem-src", Seq(
-      Seq("1,2026-01-01 10:00:00", "2,2026-01-01 10:01:00"),
-      Seq("3,2026-01-01 10:02:00")))
-    val ckpt = Files.createTempDirectory("graft-idem-ckpt").toString
-    val eOut = Files.createTempDirectory("graft-idem-eout").toString
-    def runOnce(): Unit = {
-      val q = StreamIngest.toIdempotentParquetSink(
-          readEvStream(dir, 1), eOut)
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination(60000)
-    }
-    runOnce()
-    val firstRows = spark.read.parquet(s"$eOut/batch_id=*").count()
-    assert(firstRows == 3, s"expected all 3 rows, got $firstRows")
-    val firstMarkers = new java.io.File(eOut).listFiles()
-      .count(_.getName.startsWith("_committed_"))
-    runOnce() // restart: the source has nothing new
-    assert(spark.read.parquet(s"$eOut/batch_id=*").count() == 3)
-    assert(new java.io.File(eOut).listFiles()
-      .count(_.getName.startsWith("_committed_")) == firstMarkers)
-  }
 
   test("sessionizeWithState: closed sessions emit in-batch, open ones " +
     "flush on event-time timeout, state is evicted") {
@@ -426,24 +218,4 @@ class StreamIngestSpec extends SparkSpec {
       ("2026-01-01 12:00:00.0", 1L)), rows)
   }
 
-  test("stateful running flow with mapGroupsWithState") {
-    val dir = Files.createTempDirectory("graft-stream2")
-    Fixtures.writeAll(dir)
-    val inputs = StreamIngest.readTsvStream(spark, dir.toString + "/*inputs*",
-      BlockchairSchemas.inputs)
-    val changes = Models.stgInputs(inputs)
-      .selectExpr("recipient AS address",
-        "-value_sats AS value_change_sats")
-      .filter("address IS NOT NULL")
-    val flow = StreamIngest.runningAddressFlow(spark, changes)
-    val q = flow.writeStream.format("memory").queryName("flows_state")
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    val rows = spark.sql("SELECT * FROM flows_state").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(rows("addrA") == -3000000000000L)
-    assert(rows("addrC") == -2000000000L)
-  }
 }
