@@ -197,10 +197,13 @@ object Measure {
       Group(s"cachegate.$n", Seq("cached" -> "false", "uncached" -> "true").map {
         case (arm, off) => Arm(arm, q, Map(graft.util.SizeGate.NoGatedCacheKey -> off)) })
     }},
-    // plain vs bucketed tables written once: J2 self-join (SMJ), flows join, balance window
+    // plain vs bucketed tables written once: J2 self-join (SMJ), flows join, balance window;
+    // one bucket count for every table (co-bucketed joins need equal counts), sized from
+    // lineitem's bytes, the largest input
     "layout" -> { (s, d, _) =>
+      val n = graft.util.SizeGate.partitionsForBytes(s, s"$d/lineitem.parquet", 128)
       def bkt(t: String, df: DataFrame, by: String*)(sort: String*) =
-        { sources.Bucketing.writeBucketed(df, t, by, 128, by ++ sort); s.table(t) }
+        { sources.Bucketing.writeBucketed(df, t, by, n, by ++ sort); s.table(t) }
       val j2b = bkt("measure_j2_bkt", Tables.lineitem(s, d), "l_orderkey", "l_linenumber")()
       val lb = bkt("measure_lineitem_bkt", Tables.lineitem(s, d), "l_orderkey")()
       val ob = bkt("measure_orders_bkt", Tables.orders(s, d), "o_orderkey")()

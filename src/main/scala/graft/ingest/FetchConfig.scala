@@ -1,7 +1,7 @@
 package graft.ingest
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import scala.jdk.CollectionConverters._
 
 /** S4/M7 — validated fetch configuration (reference:
@@ -100,11 +100,4 @@ object FetchConfig {
     } yield DownloadConfig(baseUrl, apiKey, dataTypes, fileFormat,
       java.nio.file.Paths.get(destDir), retention)
   }
-
-  /** Load from a file — the composition [[graft.models.Pipeline]]
-    * preflight uses when a config path is supplied. */
-  def load(path: Path,
-      env: Map[String, String] = sys.env): Either[String, DownloadConfig] =
-    if (!Files.isRegularFile(path)) Left(s"config file not found: $path")
-    else parse(new String(Files.readAllBytes(path), "UTF-8"), env)
 }

@@ -55,46 +55,18 @@ object Pipeline {
 
   /** S7 — table sinks with the reference's clustering keys
     * (cluster_by → repartition + sortWithinPartitions; at 100 TB these
-    * writes would also partitionBy a date column for pruning).
-    *
-    * `buckets = Some(n)` additionally lands the two join-heavy
-    * intermediates as BUCKETED external tables (hive-style layout +
-    * catalog entries `<prefix>_int_transaction_flows` /
-    * `<prefix>_int_address_balances_with_history`): flows bucketed by
-    * `transaction_hash`, balances by `address` — the keys every
-    * downstream join/window clusters on (reference cluster_by intent:
-    * int_transaction_flows.sql:3-5,
-    * int_address_balances_with_history.sql:3-5). The shuffle is paid
-    * ONCE here; every later equi-join on transaction_hash and every
-    * per-address window then plans with zero Exchange
-    * (BucketingSpec pins both shapes). Each side is pre-repartitioned
-    * into exactly `n` bucket-hash partitions so every bucket lands as
-    * one file — the layout Spark also trusts for bucket-sorted reads. */
-  def writeBuild(bld: Build, outDir: String, buckets: Option[Int] = None,
-      tablePrefix: String = "graft"): Unit = {
+    * writes would also partitionBy a date column for pruning). */
+  def writeBuild(bld: Build, outDir: String): Unit = {
     import org.apache.spark.sql.functions.col
     def write(df: DataFrame, name: String, cluster: Seq[String]): Unit =
       df.repartition(cluster.map(col): _*)
         .sortWithinPartitions(cluster.map(col): _*)
         .write.mode("overwrite").parquet(s"$outDir/$name")
-    def writeBkt(df: DataFrame, name: String, n: Int, bucketCol: String,
-        sortCols: Seq[String]): Unit =
-      graft.sources.Bucketing.writeBucketed(df, s"${tablePrefix}_$name",
-        Seq(bucketCol), n, sortCols, path = Some(s"$outDir/$name"))
     // cluster_by keys from the model configs:
-    buckets match {
-      case Some(n) =>
-        writeBkt(bld.intTransactionFlows, "int_transaction_flows", n,
-          "transaction_hash", Seq("transaction_hash", "tx_time"))
-        writeBkt(bld.intAddressBalances,
-          "int_address_balances_with_history", n,
-          "address", Seq("address", "time"))
-      case None =>
-        write(bld.intTransactionFlows, "int_transaction_flows",
-          Seq("transaction_hash", "tx_time"))
-        write(bld.intAddressBalances, "int_address_balances_with_history",
-          Seq("address", "time"))
-    }
+    write(bld.intTransactionFlows, "int_transaction_flows",
+      Seq("transaction_hash", "tx_time"))
+    write(bld.intAddressBalances, "int_address_balances_with_history",
+      Seq("address", "time"))
     write(bld.fctTransactionTraces, "fct_transaction_traces",
       Seq("source_address", "destination_address", "tx_time"))
     write(bld.dimAddresses, "dim_addresses", Seq("address"))

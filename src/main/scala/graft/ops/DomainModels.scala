@@ -43,8 +43,8 @@ object DomainModels extends QueryModule {
 
   /** balance_history's debit∪credit change stream — the frame a 100 TB
     * deployment materializes ONCE bucketed by entity (the layout
-    * `Pipeline.writeBuild(buckets)` lands for the blockchair balances
-    * mart); [[balanceOver]] then windows over it exchange-free. */
+    * `Measure ab layout` writes through `Bucketing.writeBucketed`);
+    * [[balanceOver]] then windows over it exchange-free. */
   private[graft] def balanceChanges(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     val o = orders(s, d)

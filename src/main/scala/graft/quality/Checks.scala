@@ -28,13 +28,6 @@ object Checks {
       .agg(count(lit(1)).as("occurrences"))
       .filter(col("occurrences") > 1)
 
-  /** Referential check: rows of `child` whose `childKey` has no match in
-    * `parent.parentKey` (dbt relationships-test analog). */
-  def orphans(child: DataFrame, childKey: String, parent: DataFrame,
-      parentKey: String): DataFrame =
-    child.join(parent.select(col(parentKey).as(childKey)).distinct(),
-      Seq(childKey), "left_anti")
-
   /** The reference's exact staging-layer suite
     * (models/staged/schema.yml:9-78). */
   def stagingSuite(stgAddresses: DataFrame, stgBlocks: DataFrame,

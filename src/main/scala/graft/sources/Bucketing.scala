@@ -28,14 +28,12 @@ import org.apache.spark.sql.DataFrame
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed, sorted table — managed by default, or an
-    * external table at `path`. The single shared implementation of the
-    * bucketed-layout contract: the input is pre-repartitioned into
-    * exactly `buckets` bucket-hash partitions so each bucket lands as
-    * ONE file (the layout Spark trusts for bucket-sorted reads; a
-    * multi-file bucket forfeits the sort metadata), and when `path` is
-    * given any stale catalog entry is dropped first so reruns are
-    * idempotent. `Pipeline.writeBuild(buckets = Some(n))` and
+  /** Write `df` as a bucketed, sorted managed table. The single shared
+    * implementation of the bucketed-layout contract: the input is
+    * pre-repartitioned into exactly `buckets` bucket-hash partitions so
+    * each bucket lands as ONE file (the layout Spark trusts for
+    * bucket-sorted reads; a multi-file bucket forfeits the sort
+    * metadata). The shingled-corpus table (`TextOps`) and
     * `Measure ab layout` both write through here.
     *
     * `table` may be database-qualified (`db.t`); the stale-location
@@ -47,13 +45,11 @@ object Bucketing {
     * still exists (ADVICE r13). The delete still assumes the
     * single-writer contract above. */
   def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-      buckets: Int, sortCols: Seq[String] = Nil,
-      path: Option[String] = None): Unit = {
+      buckets: Int, sortCols: Seq[String] = Nil): Unit = {
     import org.apache.spark.sql.functions.col
     val ss = df.sparkSession
     val ident = ss.sessionState.sqlParser.parseTableIdentifier(table)
-    if (path.isDefined) ss.sql(s"DROP TABLE IF EXISTS $table")
-    else if (!ss.sessionState.catalog.tableExists(ident)) {
+    if (!ss.sessionState.catalog.tableExists(ident)) {
       // Managed-table rerun across sessions: with a non-persistent
       // catalog a dead session's files still occupy the managed
       // location while the table entry is gone — saveAsTable then
@@ -74,7 +70,6 @@ object Bucketing {
     val sorted =
       if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*)
       else w
-    val located = path.fold(sorted)(p => sorted.option("path", p))
-    located.format("parquet").saveAsTable(table)
+    sorted.format("parquet").saveAsTable(table)
   }
 }

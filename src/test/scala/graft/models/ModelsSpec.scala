@@ -113,9 +113,6 @@ class ModelsSpec extends SparkSpec {
     val withNull = Seq((null.asInstanceOf[String], 1L), ("b", 2L))
       .toDF("address", "balance_sats")
     assert(Checks.notNull(withNull, "address").count() == 1)
-    val child = Seq(1L, 2L, 99L).toDF("block_id")
-    val parent = Seq(1L, 2L).toDF("block_id")
-    assert(Checks.orphans(child, "block_id", parent, "block_id").count() == 1)
   }
 
   test("S7: writeBuild lands clustered parquet marts") {

@@ -7,8 +7,8 @@ import SchemaMerge._
 /** Reference for [[SchemaInfer.infer]]: one aggregation that counts the
   * failures of every candidate-type probe on every sampled value, then
   * classifies in the reference order. `SchemaInfer` must return exactly
-  * this schema for every input; it only skips counting probes whose
-  * outcome its witnesses already decide. Column references are quoted so
+  * this schema for every input; it only stops running a probe on a
+  * column once the probe has failed there. Column references are quoted so
   * the reference also runs on header names holding `.`.
   */
 object SchemaInferReference {

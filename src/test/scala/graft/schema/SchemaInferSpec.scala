@@ -3,10 +3,8 @@ package graft.schema
 import graft.{Fixtures, SparkSpec}
 import graft.ingest.Tsv
 import graft.schema.SchemaMerge._
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
@@ -27,8 +25,8 @@ class SchemaInferSpec extends SparkSpec {
   private def raw(path: String) = Tsv.readRaw(spark, path)
 
   /** Adversarial table (320 rows, a few KB): every date format, columns
-    * whose only refuting value sits past the witness prefix, nulls
-    * throughout the prefix, and a refuting value just past row 280. */
+    * whose only refuting value sits late in the file, nulls throughout the
+    * leading rows, and a refuting value just past row 280. */
   private lazy val adversarial: String = {
     val header = Seq("d_iso", "d_slash", "d_dmy", "ts_sec", "ts_micro",
       "ts_then_date", "flag", "flag_odd", "empty", "late", "padded", "expo",
@@ -88,7 +86,7 @@ class SchemaInferSpec extends SparkSpec {
     val limited = assertMatchesReference(adversarial, 280).map(c =>
       c.name -> c.typ).toMap
     assert(limited("BEYOND_LIMIT") == SfInteger)
-    // a sample shorter than the witness prefix
+    // a sample shorter than the rows before LATE's first value
     assertMatchesReference(adversarial, 100)
   }
 
@@ -99,44 +97,48 @@ class SchemaInferSpec extends SparkSpec {
       Seq(ColumnSpec("ID", SfInteger), ColumnSpec("FEE_USD", SfFloat)))
   }
 
-  test("probes the witnesses refute never reach the counting query") {
-    val path = writeGz("guard.tsv.gz", "guard_hex_a\tguard_hex_b\tguard_num",
-      (0 until 40).map(i => f"ab$i%04x\tf${i * 977}%06x\t${i * 3}"))
-    val aggregates = new java.util.concurrent.ConcurrentLinkedQueue[Aggregate]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit =
-        qe.optimizedPlan.foreach {
-          case a: Aggregate if a.references.exists(_.name == "guard_num") =>
-            aggregates.add(a)
-          case _ =>
-        }
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
+  test("one job after the header read, and no shuffle") {
+    val df = raw(adversarial) // the header read runs here, at construction
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m =>
+          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
-    spark.listenerManager.register(listener)
-    val inferred = try {
-      val s = SchemaInfer.infer(raw(path))
-      // listener events arrive asynchronously
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      SchemaInfer.infer(df)
+      // The listener bus is async and FIFO: once the sentinel job's start
+      // event arrived, every event of the inference has too.
+      spark.sparkContext.parallelize(Seq(1), 1).count()
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (aggregates.isEmpty && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      s
-    } finally spark.listenerManager.unregister(listener)
-    assert(inferred.map(_.typ) ==
-      Seq(SfVarchar(16), SfVarchar(16), SfInteger))
-    assert(aggregates.size == 1, "expected one counting query")
-    val agg = aggregates.peek()
-    def probesOn(column: String): Seq[Expression] =
-      agg.aggregateExpressions.flatMap(_.collect {
-        case e @ (_: Cast) if e.references.exists(_.name == column) => e
-        case e if e.nodeName.toLowerCase.contains("timestamp") &&
-          e.references.exists(_.name == column) => e
-      })
-    for (c <- Seq("guard_hex_a", "guard_hex_b"))
-      assert(probesOn(c).isEmpty, s"$c still probed in:\n$agg")
-    // the numeric column's witnesses parse as BIGINT and DOUBLE, so those
-    // two probes are still counted, and no date format is
-    assert(probesOn("guard_num").size == 2, s"guard_num probes in:\n$agg")
+      while (jobs.get() < 2 && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      var last = -1
+      while (jobs.get() != last && System.nanoTime() < deadline) {
+        last = jobs.get()
+        Thread.sleep(300)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() == 2, s"inference ran ${jobs.get() - 1} jobs")
+    assert(shuffleBytes.get() == 0L)
+  }
+
+  test("a two-file dump reads an even share of the sample from each file") {
+    val path = Files.createDirectories(dir.resolve("two-files")).toString
+    // 40 integers per file; row 25 of each (the first row past a 50-row
+    // sample's 25-row share) refutes the integer type
+    val rows = (0 until 40).map(i => if (i == 25) "x" else i.toString)
+    for (f <- Seq("a", "b")) writeGz(s"two-files/$f.tsv.gz", "n", rows)
+    assert(raw(path).queryExecution.toRdd.getNumPartitions == 2)
+    assert(assertMatchesReference(path, 1000000) ==
+      Seq(ColumnSpec("N", SfVarchar(16))))
+    assert(SchemaInfer.infer(raw(path), 50) == Seq(ColumnSpec("N", SfInteger)))
+    assert(SchemaInfer.infer(raw(path), 51) ==
+      Seq(ColumnSpec("N", SfVarchar(16))))
   }
 }

@@ -135,49 +135,6 @@ class BucketingSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("bucketed writeBuild: tx-hash join and address window plan with zero exchanges") {
-    import graft.models.Pipeline
-    val d = Files.createTempDirectory("graft-bktbuild")
-    graft.Fixtures.writeAll(d)
-    val bld = Pipeline.readRaw(spark, d.toString)
-    val out = Files.createTempDirectory("graft-bktout")
-    Pipeline.writeBuild(bld, out.toString, buckets = Some(4),
-      tablePrefix = "bkt")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // J2 shape: equi-join on the bucket key (composite keys whose
-      // prefix is the bucket key co-locate the same way)
-      val flows = spark.table("bkt_int_transaction_flows")
-      val joined = flows.as("a").select("transaction_hash", "input_value_sats")
-        .join(flows.as("b").select(col("transaction_hash"),
-          col("output_value_sats").as("flow_b")), Seq("transaction_hash"))
-      val jplan = joined.queryExecution.executedPlan.toString
-      assert(jplan.contains("SortMergeJoin"), jplan.take(800))
-      assert(!jplan.contains("Exchange"), jplan.take(1500))
-      // t1: 1 flow, t2: 4, t3: 1 → self-join fan-out 1+16+1
-      assert(joined.count() == 18)
-      // W1 shape: per-address window over the bucketed balances
-      import org.apache.spark.sql.expressions.Window
-      val bal = spark.table("bkt_int_address_balances_with_history")
-      val w = Window.partitionBy("address").orderBy("time")
-      val win = bal.select(col("address"), col("time"),
-        sum(col("value_change_sats")).over(w).as("rb"))
-      val wplan = win.queryExecution.executedPlan.toString
-      assert(wplan.contains("Window"), wplan.take(800))
-      assert(!wplan.contains("Exchange"), wplan.take(1500))
-      // and the window result matches the model's own running balance
-      val got = win.filter(col("address") === "addrC")
-        .orderBy(col("time")).collect().map(_.getAs[Long]("rb")).toSeq
-      assert(got == Seq(3000000000000L, 2998000000000L))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      for (t <- Seq("bkt_int_transaction_flows",
-          "bkt_int_address_balances_with_history"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
-  }
-
   test("landToParquet partitions by load_date and sorts within partitions") {
     val d = Files.createTempDirectory("graft-land")
     graft.Fixtures.writeAll(d)
