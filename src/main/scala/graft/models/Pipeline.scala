@@ -55,22 +55,26 @@ object Pipeline {
 
   /** S7 — table sinks with the reference's clustering keys
     * (cluster_by → repartition + sortWithinPartitions; at 100 TB these
-    * writes would also partitionBy a date column for pruning). */
+    * writes would also partitionBy a date column for pruning). The five
+    * marts are written concurrently ([[graft.util.Overlap]]); a failed
+    * write is rethrown once the other four have finished. */
   def writeBuild(bld: Build, outDir: String): Unit = {
     import org.apache.spark.sql.functions.col
     def write(df: DataFrame, name: String, cluster: Seq[String]): Unit =
       df.repartition(cluster.map(col): _*)
         .sortWithinPartitions(cluster.map(col): _*)
         .write.mode("overwrite").parquet(s"$outDir/$name")
-    // cluster_by keys from the model configs:
-    write(bld.intTransactionFlows, "int_transaction_flows",
-      Seq("transaction_hash", "tx_time"))
-    write(bld.intAddressBalances, "int_address_balances_with_history",
-      Seq("address", "time"))
-    write(bld.fctTransactionTraces, "fct_transaction_traces",
-      Seq("source_address", "destination_address", "tx_time"))
-    write(bld.dimAddresses, "dim_addresses", Seq("address"))
-    write(bld.dimBlocks, "dim_blocks", Seq("block_id"))
+    // cluster_by keys from the model configs; the five writes are
+    // independent and run concurrently
+    graft.util.Overlap.all(Seq(
+      () => write(bld.intTransactionFlows, "int_transaction_flows",
+        Seq("transaction_hash", "tx_time")),
+      () => write(bld.intAddressBalances, "int_address_balances_with_history",
+        Seq("address", "time")),
+      () => write(bld.fctTransactionTraces, "fct_transaction_traces",
+        Seq("source_address", "destination_address", "tx_time")),
+      () => write(bld.dimAddresses, "dim_addresses", Seq("address")),
+      () => write(bld.dimBlocks, "dim_blocks", Seq("block_id"))))
   }
 
   /** Incremental materialization of the date-closed model tables (the
@@ -102,7 +106,10 @@ object Pipeline {
     * never silently dropped by the date filter. A restricted run also
     * widens its scope to the destination dates of every transaction that
     * previously lived in the sentinel (see below) — callers never need to
-    * anticipate which dates a late block re-dates. */
+    * anticipate which dates a late block re-dates.
+    *
+    * The two marts are written concurrently ([[graft.util.Overlap]]),
+    * each with its own cache, sentinel snapshot and cleanup. */
   def writeBuildIncremental(bld: Build, outDir: String,
       loadDates: Option[Seq[String]] = None): Unit = {
     import org.apache.spark.sql.functions.{coalesce, col, date_format, lit}
@@ -197,10 +204,12 @@ object Pipeline {
         orphanRelease()
       }
     }
-    writeInc(bld.intTransactionFlows, "int_transaction_flows", "tx_time",
-      Seq("transaction_hash", "tx_time"))
-    writeInc(bld.fctTransactionTraces, "fct_transaction_traces", "tx_time",
-      Seq("source_address", "destination_address", "tx_time"))
+    // the two marts share no files or caches, so they write concurrently
+    graft.util.Overlap.all(Seq(
+      () => writeInc(bld.intTransactionFlows, "int_transaction_flows",
+        "tx_time", Seq("transaction_hash", "tx_time")),
+      () => writeInc(bld.fctTransactionTraces, "fct_transaction_traces",
+        "tx_time", Seq("source_address", "destination_address", "tx_time"))))
   }
 
   /** Read the five raw tables from a directory of TSV files
@@ -270,6 +279,12 @@ object Pipeline {
     * decides whether a partial day blocks the model build (M7 preflight
     * does exactly that check).
     *
+    * The fetched dumps land concurrently, one [[graft.util.Overlap]] task
+    * per dump; each task parses, probes and then lands or quarantines its
+    * own dump. A landing that fails for any reason other than corruption
+    * is rethrown after the other dumps' tasks have finished, and the
+    * sweep does not run.
+    *
     * Transport and clock are injectable so the whole flow tests offline.
     */
   def dailyRun(spark: SparkSession,
@@ -289,9 +304,12 @@ object Pipeline {
       apiKey = cfg.apiKey)
     val dateToken = date.format(
       java.time.format.DateTimeFormatter.BASIC_ISO_DATE)
-    val attempts = fetched.toSeq.collect {
+    // one task per fetched dump, run concurrently: each task's chain
+    // (parse, probe, land or quarantine) stays sequential, so nothing of
+    // a dump lands before that whole dump is known good
+    val landings = fetched.toSeq.collect {
       case (t, Fetch.Downloaded | Fetch.SkippedExisting)
-          if schemas.contains(t) =>
+          if schemas.contains(t) => () => {
         // land THIS date's file, by its contract name — not latestFile:
         // a backfill/rerun of a past day must not land a newer dump
         // under the old load_date
@@ -327,7 +345,9 @@ object Pipeline {
               Left(t)
           }
         } finally raw.unpersist()
+      }
     }
+    val attempts = graft.util.Overlap.all(landings)
     val landed = attempts.collect { case Right(kv) => kv }.toMap
     val corrupt = attempts.collect { case Left(t) => t }.sorted
     val swept = cfg.dataTypes.flatMap { t =>

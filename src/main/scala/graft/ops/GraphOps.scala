@@ -547,20 +547,10 @@ object GraphOps extends QueryModule {
           val nodesE = eCkpt
             .select(explode(array(col("src"), col("dst"))).as("node"))
             .distinct()
-          val pool = java.util.concurrent.Executors
-            .newSingleThreadExecutor(r => {
-              val t = new Thread(r, "pr-ewd-ckpt")
-              t.setDaemon(true)
-              t
-            })
-          try {
-            val fEwd = pool.submit(
-              new java.util.concurrent.Callable[DataFrame] {
-                def call(): DataFrame = Checkpoints.ckptTracked(ewdE)._1
-              })
-            val n = Checkpoints.ckptTracked(nodesE)._1
-            (fEwd.get(20, java.util.concurrent.TimeUnit.MINUTES), n)
-          } finally pool.shutdown()
+          val Seq(ewdC, nodesC) = graft.util.Overlap.all(Seq(
+            () => Checkpoints.ckptTracked(ewdE)._1,
+            () => Checkpoints.ckptTracked(nodesE)._1))
+          (ewdC, nodesC)
         } finally Checkpoints.release(eCkpt, eIds)
       } else (ewd0, nodes0)
     val n = nodes.agg(count(lit(1)).as("n_nodes"))
@@ -980,30 +970,14 @@ object GraphOps extends QueryModule {
           // same checkpointed edge list, but ran sequentially until r15 —
           // half the twin's wall was one loop's driver gaps while the other
           // loop had runnable work (r15 `Measure bench`: 91 jobs, 2.4 s of
-          // gaps in a 5.7 s wall). Run the min-label loop on its own
-          // driver thread and the log-star loop on this one (guide §2.6:
-          // actions are only sequential because the driver calls them
-          // sequentially); Checkpoints.ckptTracked serializes just the
-          // checkpoint materializations under its lock (r15), so each
-          // loop's planning overlaps the other's jobs. Results are
-          // unchanged — the loops share nothing but the read-only edge
-          // snapshot. Bounded wait: both loops cap at 64 rounds, and a
-          // hung job must fail the gate loudly rather than block forever.
-          val minLabelPool = java.util.concurrent.Executors
-            .newSingleThreadExecutor(r => {
-              val t = new Thread(r, "cc-twin-minlabel")
-              t.setDaemon(true)
-              t
-            })
-          val (minLabel, logStar) =
-            try {
-              val fa = minLabelPool.submit(
-                new java.util.concurrent.Callable[DataFrame] {
-                  def call(): DataFrame = connectedComponents(edges)
-                })
-              val ls = ccLogStar(edges)
-              (fa.get(20, java.util.concurrent.TimeUnit.MINUTES), ls)
-            } finally minLabelPool.shutdown()
+          // gaps in a 5.7 s wall). Run them on two driver threads (guide
+          // §2.6: actions are only sequential because the driver calls
+          // them sequentially); Checkpoints.ckptTracked is exact under
+          // concurrent callers, so each loop's planning overlaps the
+          // other's jobs. Results are unchanged — the loops share nothing
+          // but the read-only edge snapshot.
+          val Seq(minLabel, logStar) = graft.util.Overlap.all(Seq(
+            () => connectedComponents(edges), () => ccLogStar(edges)))
           val a = minLabel
             .select(col("node"), col("component_id").as("cid_minlabel"))
           val b = logStar

@@ -44,6 +44,9 @@ object Checks {
     "inputs_hash_not_null" -> notNull(stgInputs, "transaction_hash"),
     "outputs_hash_not_null" -> notNull(stgOutputs, "transaction_hash"))
 
+  /** One `count()` per check, the checks run concurrently
+    * ([[graft.util.Overlap]]); results come back in suite order. */
   def runAll(checks: Seq[(String, DataFrame)]): Seq[CheckResult] =
-    checks.map { case (name, df) => CheckResult(name, df.count()) }
+    graft.util.Overlap.all(checks.map { case (name, df) =>
+      () => CheckResult(name, df.count()) })
 }

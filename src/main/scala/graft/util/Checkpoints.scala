@@ -13,15 +13,19 @@ import org.apache.spark.sql.DataFrame
   * THREAD-SAFE since r15 (success path): the returned ids are read
   * directly off the checkpointed Dataset's own LogicalRDD leaf instead
   * of a global persistent-RDD diff, so concurrent callers' checkpoint
-  * materializations run fully overlapped and are never mis-attributed —
-  * which is what lets graph_cc_scale_twin run its two independent CC
-  * loops on two driver threads (guide §2.6, overlap independent jobs).
+  * materializations run fully overlapped and are never mis-attributed.
+  * The concurrent callers are the [[graft.util.Overlap]] tasks of one
+  * call: the two halves of graph_cc_scale_twin and of the eager
+  * PageRank's edge checkpoints, and the two sentinel snapshots of
+  * `Pipeline.writeBuildIncremental`'s concurrent mart writes.
   * The FAILURE path still falls back to a global diff (a failed
   * materialization returns no Dataset to read ids from); under
-  * concurrency that cleanup may also unpersist a sibling caller's
-  * in-flight checkpoint — acceptable collateral, since today's only
-  * concurrent callers are the two halves of one gate query that the
-  * failure is already failing.
+  * concurrency that cleanup may also unpersist a sibling task's
+  * in-flight checkpoint or cache. That collateral is acceptable: the
+  * failed task already fails the whole `Overlap.all` call, so a sibling
+  * that loses its blocks at worst fails or recomputes inside a call that
+  * is failing anyway, and the call rethrows only after every sibling has
+  * finished.
   */
 object Checkpoints {
 

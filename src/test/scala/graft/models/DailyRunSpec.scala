@@ -179,6 +179,40 @@ class DailyRunSpec extends SparkSpec {
       .subsetOf(cachedBefore), "a rethrow must release the parse cache")
   }
 
+  test("dailyRun: a failed landing is rethrown after the other dumps " +
+    "land whole") {
+    val dest = Files.createTempDirectory("graft-dailyrun-raw6")
+    val parquet = Files.createTempDirectory("graft-dailyrun-pq6")
+    // the failing type comes first, so a run that stopped at the first
+    // failure would land nothing of the other two
+    val cfg = FetchConfig.DownloadConfig(
+      baseUrl = "http://stub/dumps", apiKey = None,
+      dataTypes = Seq("inputs", "blocks", "transactions"),
+      fileFormat = "tsv.gz", destinationDir = dest, retentionDays = 3)
+    Files.writeString(parquet.resolve("inputs"), "not a directory")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception] {
+      Pipeline.dailyRun(spark, cfg, "bitcoin", LocalDate.of(2025, 8, 20),
+        parquet.toString,
+        open = { url =>
+          val t = cfg.dataTypes.find(url.contains).get
+          new java.io.ByteArrayInputStream(gz(fixtureBody(t)))
+        },
+        sleep = _ => ())
+    }
+    import org.apache.spark.sql.functions.col
+    for ((t, rows) <- Seq("blocks" -> Fixtures.blocksRows.size,
+        "transactions" -> Fixtures.txRows.size))
+      assert(spark.read.parquet(parquet.resolve(t).toString)
+        .where(col("load_date") === "20250820").count() == rows,
+        s"$t did not land whole")
+    assert(Files.exists(dest.resolve("inputs")
+      .resolve("blockchair_bitcoin_inputs_20250820.tsv.gz")),
+      "a failed landing must not quarantine its dump")
+    assert(spark.sparkContext.getPersistentRDDs.keySet
+      .subsetOf(cachedBefore), "a failed run left a parse cached")
+  }
+
   test("dailyRun: one failed type is reported, others land") {
     val dest = Files.createTempDirectory("graft-dailyrun-raw2")
     val parquet = Files.createTempDirectory("graft-dailyrun-pq2").toString
