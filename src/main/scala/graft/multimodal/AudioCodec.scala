@@ -1,114 +1,64 @@
 package graft.multimodal
 
-/** Pure-JVM WAV/PCM audio codec — the audio half of the multimodal
-  * tier. Like [[MediaCodec]]'s PNG path, both directions are REAL:
-  * [[wavPcm16]] emits a spec-conformant RIFF/WAVE container (fmt +
-  * data chunks, little-endian, even-padded) and [[decodeWavPcm16]]
-  * walks the chunk stream back to (sampleRate, samples), so gates can
-  * round-trip real bytes and a parser regression (offset slip,
-  * endianness, chunk-walk bug, pad handling) breaks a hash gate, not
-  * just a unit test.
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.nio.{ByteBuffer, ByteOrder}
+import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
+import scala.util.control.NonFatal
+
+/** WAV/PCM audio codec of the multimodal tier over the JDK's own
+  * `javax.sound.sampled` WAV writer and reader, plus the signal features
+  * [[MediaPipeline.audioStats]] computes on decoded samples. The
+  * `audio_signal_stats` gate encodes formula samples with [[wavPcm16]]
+  * and decodes them back with [[decodeWavPcm16]].
   *
-  * Supported subset: RIFF/WAVE, PCM (format tag 1), mono, 16-bit.
-  * Anything else — compressed formats, multi-channel, other bit
-  * depths, truncated streams — decodes to None and callers keep the
-  * metadata-only path, mirroring how [[MediaCodec.decodeGray]] treats
-  * non-grayscale PNGs. The reference has no audio surface (its widest
-  * binary column is the inputs dump's SPENDING_WITNESS varchar,
+  * Accept/reject contract: mono, 16-bit, signed, little-endian PCM at a
+  * positive rate, with every declared sample present. Anything else —
+  * compressed formats, multi-channel, other bit depths, truncated or
+  * non-WAV streams — decodes to None and callers drop the row. The
+  * reference has no audio surface (its widest binary column is the
+  * inputs dump's SPENDING_WITNESS varchar,
   * sql/ddl/create_inputs_raw.sql:20); this is north-star scope: the
   * decode kernel a 100 TB training-data pipeline runs per partition
   * inside [[MediaPipeline]]'s typed mapPartitions stage.
   */
 object AudioCodec {
 
-  private val riff = "RIFF".getBytes("US-ASCII")
-  private val wave = "WAVE".getBytes("US-ASCII")
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xFF
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def le32(b: Array[Byte], i: Int): Long =
-    u8(b, i).toLong | (u8(b, i + 1).toLong << 8) |
-      (u8(b, i + 2).toLong << 16) | (u8(b, i + 3).toLong << 24)
-
-  private def writeLe16(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    out.write(v & 0xFF); out.write((v >>> 8) & 0xFF)
-  }
-  private def writeLe32(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    out.write(v & 0xFF); out.write((v >>> 8) & 0xFF)
-    out.write((v >>> 16) & 0xFF); out.write((v >>> 24) & 0xFF)
-  }
-
-  /** Spec-conformant mono 16-bit PCM WAV: RIFF header, canonical
-    * 16-byte fmt chunk, data chunk. Data length is always even here
-    * (2 bytes/sample) so no pad byte is ever needed on write — but the
-    * decoder still honors odd-length chunk padding, since real files
-    * carry odd-sized LIST/INFO chunks. */
+  /** Canonical 44-byte-header mono 16-bit PCM WAV. */
   def wavPcm16(sampleRate: Int, samples: Array[Short]): Array[Byte] = {
     require(sampleRate > 0, s"bad sample rate $sampleRate")
-    val dataLen = samples.length * 2
-    val out = new java.io.ByteArrayOutputStream(44 + dataLen)
-    out.write(riff)
-    writeLe32(out, 36 + dataLen) // riff size = total - 8
-    out.write(wave)
-    out.write("fmt ".getBytes("US-ASCII"))
-    writeLe32(out, 16) // canonical PCM fmt chunk length
-    writeLe16(out, 1) // format tag: PCM
-    writeLe16(out, 1) // channels: mono
-    writeLe32(out, sampleRate)
-    writeLe32(out, sampleRate * 2) // byte rate = rate * block align
-    writeLe16(out, 2) // block align = channels * bytes/sample
-    writeLe16(out, 16) // bits per sample
-    out.write("data".getBytes("US-ASCII"))
-    writeLe32(out, dataLen)
-    var i = 0
-    while (i < samples.length) { writeLe16(out, samples(i) & 0xFFFF); i += 1 }
+    val pcm = ByteBuffer.allocate(2 * samples.length)
+      .order(ByteOrder.LITTLE_ENDIAN)
+    pcm.asShortBuffer.put(samples)
+    val out = new ByteArrayOutputStream(44 + pcm.capacity)
+    AudioSystem.write(new AudioInputStream(new ByteArrayInputStream(pcm.array),
+      new AudioFormat(sampleRate.toFloat, 16, 1, true, false),
+      samples.length), AudioFileFormat.Type.WAVE, out)
     out.toByteArray
   }
 
-  /** Decode a mono 16-bit PCM WAV to (sampleRate, samples); None for
-    * any other flavor or a malformed stream. Walks the chunk sequence
-    * (skipping LIST/fact/unknown chunks, honoring the odd-length pad
-    * byte), requires the fmt chunk BEFORE data per the RIFF spec, and
-    * bounds every read against the buffer — a truncated data chunk is
-    * a decode failure, not a partial result. */
-  def decodeWavPcm16(b: Array[Byte]): Option[(Int, Array[Short])] = {
-    if (b.length < 44) return None
-    if (!b.startsWith(riff)) return None
-    if (!(b(8) == wave(0) && b(9) == wave(1) && b(10) == wave(2) &&
-        b(11) == wave(3))) return None
-    var i = 12
-    var rate = -1
-    while (i + 8 <= b.length) {
-      val tag = new String(b, i, 4, "US-ASCII")
-      val len = le32(b, i + 4)
-      if (len < 0 || len > Int.MaxValue - 8 || i + 8 + len > b.length)
-        return None
-      tag match {
-        case "fmt " =>
-          if (len < 16) return None
-          val fmtTag = le16(b, i + 8)
-          val channels = le16(b, i + 10)
-          val bits = le16(b, i + 22)
-          if (fmtTag != 1 || channels != 1 || bits != 16) return None
-          rate = le32(b, i + 12).toInt
-          if (rate <= 0) return None
-        case "data" =>
-          if (rate < 0) return None // fmt must precede data
-          if (len % 2 != 0) return None // 16-bit samples
-          val n = (len / 2).toInt
-          val samples = new Array[Short](n)
-          var j = 0
-          while (j < n) {
-            samples(j) = le16(b, i + 8 + 2 * j).toShort
-            j += 1
+  /** (sampleRate, samples) of a WAV inside the contract above. The JDK
+    * reader reports the data chunk's declared frame count but returns
+    * fewer bytes for a short chunk, so a short read means rejection. */
+  def decodeWavPcm16(b: Array[Byte]): Option[(Int, Array[Short])] =
+    try {
+      val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(b))
+      try {
+        val f = in.getFormat
+        if (f.getEncoding != AudioFormat.Encoding.PCM_SIGNED ||
+          f.getChannels != 1 || f.getSampleSizeInBits != 16 || f.isBigEndian ||
+          f.getSampleRate < 1) None
+        else {
+          val pcm = in.readAllBytes()
+          if (pcm.length != 2 * in.getFrameLength) None
+          else {
+            val samples = new Array[Short](pcm.length / 2)
+            ByteBuffer.wrap(pcm).order(ByteOrder.LITTLE_ENDIAN).asShortBuffer
+              .get(samples)
+            Some((f.getSampleRate.toInt, samples))
           }
-          return Some((rate, samples))
-        case _ => () // LIST / fact / ancillary — skip
-      }
-      i += 8 + len.toInt + (len % 2).toInt // chunks are even-aligned
-    }
-    None
-  }
+        }
+      } finally in.close()
+    } catch { case NonFatal(_) => None }
 
   final case class SignalStats(
       nSamples: Int,

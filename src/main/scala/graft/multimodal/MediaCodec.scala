@@ -1,18 +1,14 @@
 package graft.multimodal
 
-/** Pure-JVM media codec: real container parsing for the formats whose
-  * dimensions live in a fixed header layout — PNG (IHDR), JPEG (SOF
-  * segment walk), GIF (logical screen descriptor) — plus, since round
-  * 9, REAL pixel decode for 8-bit grayscale PNG ([[decodeGray]]: chunk
-  * walk, zlib inflate via java.util.zip, all five scanline filters)
-  * and a matching spec-conformant encoder ([[pngGray]]) so gates can
-  * round-trip real bytes. JPEG/GIF pixel decode stays out of scope (no
-  * DCT codec in the container) — those formats keep the metadata-only
-  * path.
-  *
-  * Builders ([[pngBytes]], [[jpegBytes]]) emit spec-conformant headers
-  * (PNG chunk CRCs included) so tests and gates can round-trip REAL
-  * bytes: build at a known size → parse → compare against the formula.
+/** Container headers of the multimodal tier: dimension parsers for
+  * the formats whose width and height sit in a fixed header layout —
+  * PNG (IHDR), JPEG (SOF segment walk), GIF (logical screen
+  * descriptor) — and header builders ([[pngBytes]], [[jpegBytes]]) that
+  * emit spec-conformant headers (PNG chunk CRCs included) before an
+  * arbitrary body. `media_decode_dims` builds headers plus text bytes,
+  * which no pixel decoder accepts, and parses them back: build at a
+  * known size → parse → compare against the formula. Pixel decode is
+  * [[ImageCodec]]'s, which also uses [[parseDims]] to pick a reader.
   */
 object MediaCodec {
 
@@ -140,152 +136,9 @@ object MediaCodec {
     out.write((v >>> 8) & 0xFF); out.write(v & 0xFF)
   }
 
-  // ---------------------------------------------------------------------
-  // Real pixel codec for the PNG subset the fixtures ship: 8-bit
-  // grayscale (color type 0), non-interlaced, all five scanline filters.
-  // Pure JVM — zlib via java.util.zip, defilter per the PNG spec §9.
-  // This closes the round-8 "pixel decode is a stub" gap for PNG; JPEG
-  // entropy decode stays out of scope (no DCT codec in the container)
-  // and keeps the documented stub path.
-  // ---------------------------------------------------------------------
-
-  /** Paeth predictor (PNG spec §9.4) — shared by encoder and decoder. */
-  private def paeth(a: Int, b: Int, c: Int): Int = {
-    val p = a + b - c
-    val pa = math.abs(p - a); val pb = math.abs(p - b)
-    val pc = math.abs(p - c)
-    if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-  }
-
-  private def chunk(out: java.io.ByteArrayOutputStream, tag: String,
-      data: Array[Byte]): Unit = {
-    writeBe32(out, data.length)
-    val body = tag.getBytes("US-ASCII") ++ data
-    out.write(body)
-    val crc = new java.util.zip.CRC32()
-    crc.update(body)
-    writeBe32(out, crc.getValue.toInt)
-  }
-
-  /** COMPLETE 8-bit grayscale PNG: signature, IHDR, one zlib IDAT, IEND.
-    * Row y is encoded with filter `y % 5`, so a decoder must implement
-    * every filter type to reconstruct the image — the round-trip gate
-    * covers the whole §9 surface, not just the trivial filter. */
-  def pngGray(width: Int, height: Int, pixel: Int => Int): Array[Byte] = {
-    require(width > 0 && height > 0, s"bad dims ${width}x$height")
-    val raw = Array.tabulate(height, width)((y, x) =>
-      (pixel(y * width + x) & 0xFF).toByte)
-    val filtered = new java.io.ByteArrayOutputStream()
-    for (y <- 0 until height) {
-      val f = y % 5
-      filtered.write(f)
-      val row = raw(y)
-      val prior = if (y == 0) new Array[Byte](width) else raw(y - 1)
-      for (x <- 0 until width) {
-        val r = row(x) & 0xFF
-        val left = if (x == 0) 0 else row(x - 1) & 0xFF
-        val up = prior(x) & 0xFF
-        val upLeft = if (x == 0) 0 else prior(x - 1) & 0xFF
-        val enc = f match {
-          case 0 => r
-          case 1 => r - left
-          case 2 => r - up
-          case 3 => r - (left + up) / 2
-          case 4 => r - paeth(left, up, upLeft)
-        }
-        filtered.write(enc & 0xFF)
-      }
-    }
-    val deflater = new java.util.zip.Deflater()
-    deflater.setInput(filtered.toByteArray)
-    deflater.finish()
-    val idat = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    while (!deflater.finished())
-      idat.write(buf, 0, deflater.deflate(buf))
-    deflater.end()
-    val ihdr = new java.io.ByteArrayOutputStream()
-    writeBe32(ihdr, width); writeBe32(ihdr, height)
-    ihdr.write(8) // bit depth
-    ihdr.write(0) // color type: grayscale
-    ihdr.write(0); ihdr.write(0); ihdr.write(0)
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(pngSig)
-    chunk(out, "IHDR", ihdr.toByteArray)
-    chunk(out, "IDAT", idat.toByteArray)
-    chunk(out, "IEND", Array.emptyByteArray)
-    out.toByteArray
-  }
-
-  /** Decode an 8-bit grayscale non-interlaced PNG to (width, height,
-    * row-major pixels). None for any other PNG flavor or a non-PNG
-    * payload — callers keep the metadata-only path for those. Walks the
-    * chunk stream (multi-IDAT supported, ancillary chunks skipped),
-    * inflates, and reverses all five scanline filters. */
-  def decodeGray(b: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
-    if (!startsWith(b, pngSig) || b.length < 33) return None
-    val w = be32(b, 16).toInt
-    val h = be32(b, 20).toInt
-    // bit depth 8, grayscale, deflate, filter method 0, non-interlaced
-    if (u8(b, 24) != 8 || u8(b, 25) != 0 || u8(b, 26) != 0 ||
-      u8(b, 27) != 0 || u8(b, 28) != 0 || w <= 0 || h <= 0) return None
-    val idat = new java.io.ByteArrayOutputStream()
-    var i = 8
-    var sawEnd = false
-    while (!sawEnd && i + 8 <= b.length) {
-      val len = be32(b, i).toInt
-      val tag = new String(b, i + 4, 4, "US-ASCII")
-      if (len < 0 || i + 8 + len > b.length) return None
-      tag match {
-        case "IDAT" => idat.write(b, i + 8, len)
-        case "IEND" => sawEnd = true
-        case _      => ()
-      }
-      i += 12 + len // length + tag + data + crc
-    }
-    if (idat.size() == 0) return None
-    val inflater = new java.util.zip.Inflater()
-    inflater.setInput(idat.toByteArray)
-    val expected = h * (w + 1)
-    val scan = new Array[Byte](expected)
-    var got = 0
-    try {
-      while (got < expected && !inflater.finished()) {
-        val n = inflater.inflate(scan, got, expected - got)
-        if (n == 0 && inflater.needsInput()) return None // truncated
-        got += n
-      }
-    } catch { case _: java.util.zip.DataFormatException => return None }
-    finally inflater.end()
-    if (got < expected) return None
-    val px = new Array[Byte](w * h)
-    for (y <- 0 until h) {
-      val f = scan(y * (w + 1)) & 0xFF
-      if (f > 4) return None
-      val off = y * (w + 1) + 1
-      for (x <- 0 until w) {
-        val enc = scan(off + x) & 0xFF
-        val left = if (x == 0) 0 else px(y * w + x - 1) & 0xFF
-        val up = if (y == 0) 0 else px((y - 1) * w + x) & 0xFF
-        val upLeft =
-          if (x == 0 || y == 0) 0 else px((y - 1) * w + x - 1) & 0xFF
-        val dec = f match {
-          case 0 => enc
-          case 1 => enc + left
-          case 2 => enc + up
-          case 3 => enc + (left + up) / 2
-          case 4 => enc + paeth(left, up, upLeft)
-        }
-        px(y * w + x) = (dec & 0xFF).toByte
-      }
-    }
-    Some((w, h, px))
-  }
-
-  /** Nearest-neighbor resample of a row-major grayscale image — the
-    * pixel half of the resize stage (the geometry half lives in
-    * MediaPipeline.resize). Source index = floor(dst * src / dstDim),
-    * the formula the DuckDB oracle mirrors. */
+  /** Nearest-neighbor resample of a row-major grayscale image, the
+    * resize step of [[MediaPipeline.pixelStats]]. Source index =
+    * floor(dst * src / dstDim), the formula the DuckDB oracle mirrors. */
   def resizeGrayNearest(px: Array[Byte], w: Int, h: Int, nw: Int,
       nh: Int): Array[Byte] =
     Array.tabulate(nh * nw) { i =>

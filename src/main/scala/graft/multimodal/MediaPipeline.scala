@@ -6,27 +6,25 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * as opaque `binary` columns with typed metadata, and a partition-batched
   * decode / feature-extract stage.
   *
-  * The metadata half of the decode is REAL since round 7: payloads whose
-  * bytes carry a PNG/JPEG/GIF container header get their dimensions
-  * parsed by [[MediaCodec]] (pure JVM — IHDR / SOF walk / screen
-  * descriptor). Since round 9 the PIXEL half is real too for the PNG
-  * subset the fixtures ship ([[pixelStats]]: zlib IDAT inflate, all
-  * five scanline filters, nearest-neighbor resample — all pure JVM),
-  * plus GIF frames (LZW) and WAV samples (PCM16); round 10 adds
-  * baseline JPEG ([[JpegCodec]]: DCT/Huffman both directions), so all
-  * four container formats decode real pixels/samples. Only the feature
-  * kernel remains a clearly-marked DETERMINISTIC STUB (`decodeStub` —
-  * no embedding model in the container); the Spark-side plumbing is
-  * real and tested: the
+  * The metadata half of the decode parses container headers
+  * ([[MediaCodec.parseDims]]: PNG IHDR, JPEG SOF walk, GIF screen
+  * descriptor). The pixel and sample half decodes with the JDK's own
+  * codecs: gray PNG and JPEG pixels and GIF frames through
+  * `javax.imageio` ([[ImageCodec]]), PCM16 WAV samples through
+  * `javax.sound.sampled` ([[AudioCodec]]), as Spark's image data source
+  * does with `ImageIO`. Only the feature kernel remains a clearly-marked
+  * DETERMINISTIC STUB (`decodeStub` — no embedding model in the
+  * container); the Spark-side plumbing is real and tested: the
   * binary column schema, the typed mapPartitions batch shape (the Scala
   * analog of mapInPandas: one iterator per partition, amortizing
   * per-batch decoder init), partition sizing, and the downstream
   * feature schema.
   *
-  * Scale: decode is embarrassingly parallel per partition; the expensive
-  * decoder handle is created once per partition, not per row — the exact
-  * pattern a real codec (JNI / FFI) needs. Output features are fixed-width
-  * arrays, so downstream similarity ops reuse the VectorOps path.
+  * Scale: decode is embarrassingly parallel per partition; the feature
+  * kernel is set up once per partition, not per row — the pattern a
+  * JNI / FFI model needs. A JDK reader is cheap enough to make and
+  * dispose per payload. Output features are fixed-width arrays, so
+  * downstream similarity ops reuse the VectorOps path.
   */
 object MediaPipeline {
 
@@ -81,22 +79,16 @@ object MediaPipeline {
   final case class PixelStats(doc_id: Long, width: Int, height: Int,
       mean_intensity: Double, resized_mean: Double)
 
-  /** REAL pixel stage (round 9; JPEG added round 10): payloads that are
-    * 8-bit grayscale PNGs are fully decoded — zlib inflate + all five
-    * scanline filters reversed ([[MediaCodec.decodeGray]]) — and
-    * baseline grayscale JPEGs likewise (Huffman entropy decode +
-    * dequantize + IDCT, [[JpegCodec.decodeGray]]); the stats are
-    * computed on the RECONSTRUCTED pixels: mean intensity over the full
-    * image, and mean intensity after a real nearest-neighbor resample
-    * to 16×16 ([[MediaCodec.resizeGrayNearest]]). Rows whose payload is
-    * neither are dropped (flatMap) — this stage is the pixel path; the
-    * metadata path ([[decode]]) keeps every row. The
-    * `media_pixel_stats` / `jpeg_pixel_stats` gates build
-    * spec-conformant containers from a formula, so a decode bug
-    * anywhere (chunk walk, inflate, any filter, the Huffman tables,
-    * the IDCT, the resample arithmetic) breaks the DuckDB hash. Same
-    * mapPartitions batch shape as [[decode]]: decoder state per
-    * partition, pure iterator map, no collect. */
+  /** REAL pixel stage: payloads that are 8-bit gray PNGs or JPEGs are
+    * fully decoded ([[ImageCodec.decodeGray]]) and the stats computed on
+    * the RECONSTRUCTED pixels: mean intensity over the full image, and
+    * mean intensity after a real nearest-neighbor resample to 16×16
+    * ([[MediaCodec.resizeGrayNearest]]). Rows whose payload is neither
+    * are dropped (flatMap) — this stage is the pixel path; the metadata
+    * path ([[decode]]) keeps every row. The `media_pixel_stats` /
+    * `jpeg_pixel_stats` gates encode images from a formula, so a decode
+    * or resample bug breaks the DuckDB hash. Same mapPartitions batch
+    * shape as [[decode]]: pure iterator map, no collect. */
   def pixelStats(spark: SparkSession, media: DataFrame): Dataset[PixelStats] = {
     import spark.implicits._
     media.as[MediaRow].mapPartitions { rows =>
@@ -106,12 +98,10 @@ object MediaPipeline {
         s.toDouble / p.length
       }
       rows.flatMap { r =>
-        MediaCodec.decodeGray(r.payload)
-          .orElse(JpegCodec.decodeGray(r.payload))
-          .map { case (w, h, px) =>
-            PixelStats(r.doc_id, w, h, mean(px),
-              mean(MediaCodec.resizeGrayNearest(px, w, h, 16, 16)))
-          }
+        ImageCodec.decodeGray(r.payload).map { case (w, h, px) =>
+          PixelStats(r.doc_id, w, h, mean(px),
+            mean(MediaCodec.resizeGrayNearest(px, w, h, 16, 16)))
+        }
       }
     }
   }
@@ -120,11 +110,10 @@ object MediaPipeline {
       n_samples: Int, duration_ms: Double, rms: Double, peak: Int,
       zero_crossings: Int)
 
-  /** REAL audio stage (round 9): payloads that are mono 16-bit PCM WAV
-    * are fully decoded — RIFF chunk walk, little-endian samples
-    * ([[AudioCodec.decodeWavPcm16]]) — and signal features computed on
-    * the RECONSTRUCTED samples (duration, RMS, peak, zero crossings;
-    * exact-parity arithmetic documented at
+  /** REAL audio stage: payloads that are mono 16-bit PCM WAV are fully
+    * decoded ([[AudioCodec.decodeWavPcm16]]) and signal features
+    * computed on the RECONSTRUCTED samples (duration, RMS, peak, zero
+    * crossings; exact-parity arithmetic documented at
     * [[AudioCodec.signalStats]]). Non-decodable payloads are dropped
     * (flatMap), same contract as [[pixelStats]]. Scale: per-partition
     * decode, no per-row setup, no collect — features are fixed-width,
@@ -145,11 +134,10 @@ object MediaPipeline {
   final case class FrameStats(doc_id: Long, frame_idx: Int, width: Int,
       height: Int, mean_intensity: Double)
 
-  /** REAL video stage (round 9): multi-frame GIF payloads are fully
-    * decoded — LZW code stream and all ([[GifCodec.decodeFrames]]) —
-    * then every-k frame sampling runs on the REAL decoded frames
-    * (indices 0, k, 2k, …)
-    * and mean intensity is computed per sampled frame: exact integer
+  /** REAL video stage: multi-frame GIF payloads are fully decoded
+    * ([[ImageCodec.decodeFrames]]), then every-k frame sampling runs on
+    * the REAL decoded frames (indices 0, k, 2k, …) and mean intensity
+    * is computed per sampled frame: exact integer
     * sum, one double division, the same parity recipe as
     * [[pixelStats]]. One output row per (doc, sampled frame). The
     * frame fan-out happens AFTER decode inside the partition, so the
@@ -165,7 +153,7 @@ object MediaPipeline {
         s.toDouble / p.length
       }
       rows.flatMap { r =>
-        GifCodec.decodeFrames(r.payload).toSeq.flatMap {
+        ImageCodec.decodeFrames(r.payload).toSeq.flatMap {
           case (w, h, frames) =>
             (0 until frames.length by everyK).map(f =>
               FrameStats(r.doc_id, f, w, h, mean(frames(f))))

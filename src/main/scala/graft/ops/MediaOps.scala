@@ -2,18 +2,18 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.multimodal.{AudioCodec, GifCodec, JpegCodec, MediaPipeline}
+import graft.multimodal.{AudioCodec, ImageCodec, MediaPipeline}
 
-/** Audio + video multimodal queries (north-star extensions; the image
-  * tier lives in [[VectorOps]]). Both tiers follow the round-8/9
-  * "real codec under the hash gate" recipe proven by
-  * `media_pixel_stats`: each doc's payload is REAL container bytes
-  * built from a formula, the query runs the FULL decode path inside
-  * the typed mapPartitions stage, and the DuckDB oracle recomputes
-  * the expected features directly from the generating formula — so a
-  * regression anywhere in the codec (RIFF chunk walk, sample
-  * endianness, LZW width sync, the KwKwK case, frame sampling, or the
-  * stats arithmetic) breaks the hash, not just a unit test.
+/** Audio, video and JPEG multimodal queries (north-star extensions;
+  * the PNG tier lives in [[VectorOps]]). All follow the "real codec
+  * under the hash gate" recipe of `media_pixel_stats`: each doc's
+  * payload is REAL container bytes encoded from a formula by the JDK's
+  * own codecs ([[ImageCodec]], [[AudioCodec]]), the query runs the FULL
+  * decode path inside the typed mapPartitions stage, and the DuckDB
+  * oracle recomputes the expected features directly from the
+  * generating formula — so a regression in the decode wiring (format
+  * and accept checks, sample order, frame sampling, or the stats
+  * arithmetic) breaks the hash, not just a unit test.
   *
   * Exact-parity notes (the recipe that keeps both engines
   * IEEE-identical before ROUND(6)): every accumulated quantity is an
@@ -30,8 +30,8 @@ object MediaOps extends QueryModule {
     //      doc_id % 193 PCM samples from sample(i) = (doc_id·131 +
     //      i²·17 + i·7919) mod 4001 − 2000 (a sign-alternating
     //      waveform, so the zero-crossing counter is actually
-    //      exercised), packed into a spec-conformant mono 16-bit WAV
-    //      and decoded back through the full RIFF path. Features:
+    //      exercised), packed into a mono 16-bit WAV and decoded back
+    //      through the JDK's WAV reader. Features:
     //      duration (one double division), RMS (exact Long Σs² — max
     //      256·2000² ≈ 2^30 — then one division + sqrt), peak
     //      (integer max), zero crossings (strict sign-bit change,
@@ -82,10 +82,8 @@ object MediaOps extends QueryModule {
     // ---- REAL multi-frame video decode + frame sampling under the
     //      hash gate: per doc, an animated grayscale GIF at w = 8 +
     //      doc_id % 9, h = 8 + (doc_id·3) % 9, 2 + doc_id % 7 frames,
-    //      pixel(f, i) = (doc_id·13 + f·101 + i·7) mod 256 — real LZW
-    //      all the way down (≥2 frames and 64–256 px/frame keep the
-    //      code stream in the 9-bit regime here; the dictionary-reset
-    //      and width-growth regimes are pinned by GifCodecSpec's
+    //      pixel(f, i) = (doc_id·13 + f·101 + i·7) mod 256, written
+    //      and read back by the JDK's GIF codec (GifCodecSpec pins
     //      larger round-trips). Every-2 frame sampling runs on the
     //      DECODED frames; mean intensity per sampled frame is the
     //      exact-sum recipe. The oracle enumerates (doc, sampled
@@ -99,7 +97,7 @@ object MediaOps extends QueryModule {
             val w = (8 + id % 9).toInt
             val h = (8 + (id * 3) % 9).toInt
             val nf = (2 + id % 7).toInt
-            MediaPipeline.MediaRow(id, GifCodec.gifGray(w, h, nf,
+            MediaPipeline.MediaRow(id, ImageCodec.gifGray(w, h, nf,
               (f, i) => ((id * 13 + f * 101L + i * 7L) % 256).toInt))
           }.toDF()
         MediaPipeline.frameStats(s, payloads, everyK = 2).toDF()
@@ -128,23 +126,18 @@ object MediaOps extends QueryModule {
                 h AS height, ROUND(mi, 6) AS mean_intensity
               FROM px""")),
 
-    // ---- REAL baseline-JPEG decode under the hash gate (round 10 —
-    //      the last header-only format goes real). JPEG is LOSSY, so
+    // ---- REAL baseline-JPEG decode under the hash gate. JPEG is LOSSY, so
     //      the formula-oracle recipe needs images whose decode is
     //      bit-exact by construction: each image is CONSTANT per 8×8
     //      block (w = 8·(1 + doc_id % 4), h = 8·(1 + (doc_id·3) % 4),
     //      block value v(bx,by) = (doc_id·37 + bx·17 + by·29) mod 256).
     //      A constant block carries only its DC coefficient 8·(v−128);
     //      with the DC quant entry at 8 it quantizes losslessly and the
-    //      DC-only IDCT is the exact constant v−128 in IEEE double —
-    //      so the decoded pixels equal the formula and DuckDB can
-    //      recompute both means. The encode still rides the full
-    //      baseline pipeline (per-block DC diffs span the Huffman size
-    //      categories, EOB coding, zigzag, both transforms, byte
-    //      stuffing); the LOSSY general path is cross-checked against
-    //      the JDK's ImageIO codec in JpegCodecSpec. Resample mirror:
-    //      src index = dst·src/16 integer division, then block index =
-    //      src/8 — same recipe as `media_pixel_stats`.
+    //      DC-only IDCT is the constant v−128 — so the decoded pixels
+    //      equal the formula and DuckDB can recompute both means (the
+    //      JDK codec's lossy general path is bounded in JpegCodecSpec).
+    //      Resample mirror: src index = dst·src/16 integer division,
+    //      then block index = src/8 — same recipe as `media_pixel_stats`.
     Q("jpeg_pixel_stats",
       (s, d) => {
         import s.implicits._
@@ -152,7 +145,7 @@ object MediaOps extends QueryModule {
           .map { id =>
             val w = 8 * (1 + (id % 4)).toInt
             val h = 8 * (1 + ((id * 3) % 4)).toInt
-            MediaPipeline.MediaRow(id, JpegCodec.encodeGray(w, h, { i =>
+            MediaPipeline.MediaRow(id, ImageCodec.jpegGray(w, h, { i =>
               val bx = (i % w) / 8; val by = (i / w) / 8
               ((id * 37 + bx * 17L + by * 29L) % 256).toInt
             }))

@@ -300,10 +300,9 @@ object VectorOps extends QueryModule {
     Q("ann_lsh_topk", (s, d) => lshTopK(s, d), None),
 
     // ---- Multimodal columns: opaque binary payload + typed metadata.
-    //      The payload here is the utf-8 text bytes (the container has no
-    //      image/audio libs — the decode step is stubbed deterministically
-    //      in graft.multimodal.MediaPipeline); byte-length and checksum
-    //      are real and oracle-checked.
+    //      The payload here is the utf-8 text bytes (no media container,
+    //      so nothing is decoded); byte-length and checksum are real and
+    //      oracle-checked.
     Q("media_metadata",
       (s, d) => documents(s, d)
         .select(col("doc_id"), col("text").cast("binary").as("payload"))
@@ -348,12 +347,11 @@ object VectorOps extends QueryModule {
                 + octet_length(CAST(text AS BLOB)) AS INT) AS media_bytes
               FROM documents""")),
 
-    // ---- REAL pixel decode under the hash gate: build a
-    //      spec-conformant 8-bit grayscale PNG per doc from a pixel
-    //      formula (pixel i = (doc_id·31 + i·7) mod 256; row y carries
-    //      scanline filter y mod 5, so every filter type is exercised),
-    //      run it through the FULL decode path — chunk walk, zlib
-    //      inflate, defilter — then compute mean intensity on the
+    // ---- REAL pixel decode under the hash gate: encode an 8-bit
+    //      grayscale PNG per doc from a pixel formula (pixel i =
+    //      (doc_id·31 + i·7) mod 256) with the JDK's PNG writer, run it
+    //      through the FULL decode path (the JDK's PNG reader and the
+    //      8-bit gray check), then compute mean intensity on the
     //      reconstructed pixels and again after a real 16×16
     //      nearest-neighbor resample. The oracle recomputes both means
     //      from the generating formula (src index = dst·src/16 integer
@@ -370,7 +368,7 @@ object VectorOps extends QueryModule {
             val w = 8 + (id % 25).toInt
             val h = 8 + ((id * 3) % 25).toInt
             graft.multimodal.MediaPipeline.MediaRow(id,
-              graft.multimodal.MediaCodec.pngGray(w, h,
+              graft.multimodal.ImageCodec.pngGray(w, h,
                 i => ((id * 31 + i.toLong * 7) % 256).toInt))
           }.toDF()
         graft.multimodal.MediaPipeline.pixelStats(s, payloads).toDF()

@@ -2,11 +2,11 @@ package graft.multimodal
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the WAV/PCM codec: builder→decoder round-trips (sample-exact),
+/** Pins the WAV/PCM codec: encoder→decoder round-trips (sample-exact),
   * byte-level layout against the RIFF spec, chunk-walk robustness
-  * (unknown chunks, odd-length padding, fmt-after-data), the rejection
-  * contract for unsupported flavors, and the signal-stats arithmetic
-  * against brute-force recomputation. */
+  * (unknown chunks, odd-length padding), the rejection contract for
+  * unsupported flavors and short data chunks, and the signal-stats
+  * arithmetic against brute-force recomputation. */
 class AudioCodecSpec extends AnyFunSuite {
 
   private def sine(n: Int, period: Double, amp: Int): Array[Short] =
@@ -84,6 +84,17 @@ class AudioCodecSpec extends AnyFunSuite {
     val lying = good.clone()
     lying(40) = (lying(40) + 64).toByte
     assert(AudioCodec.decodeWavPcm16(lying).isEmpty)
+  }
+
+  test("a WAV whose data chunk is shorter than declared gives None") {
+    val good = AudioCodec.wavPcm16(8000, sine(100, 7.0, 3000))
+    val short = good.dropRight(10)
+    // the JDK reader reports the declared 100 frames, then reads fewer
+    val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(short))
+    assert(in.getFrameLength == 100 && in.readAllBytes().length == 190)
+    in.close()
+    assert(AudioCodec.decodeWavPcm16(short).isEmpty)
   }
 
   test("signal stats match brute-force recomputation") {

@@ -2,17 +2,15 @@ package graft.multimodal
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the baseline grayscale JPEG codec: exact round-trip for the
+/** Pins the JPEG path of [[ImageCodec]]: exact round-trip for the
   * constant-block construction the `jpeg_pixel_stats` oracle relies on,
-  * lossy-bounded round-trip for arbitrary images, and independent
-  * cross-checks in BOTH directions against the JDK's ImageIO codec
-  * (our encoder → their decoder, their encoder → our decoder) so the
-  * bitstream is validated against a third-party implementation, not
-  * just itself. */
+  * lossy-bounded round-trip for arbitrary images, and the rejection
+  * contract, including the JDK reader's habit of returning a full-size
+  * image plus a warning for a truncated stream. */
 class JpegCodecSpec extends AnyFunSuite {
 
   private def decodeOrFail(b: Array[Byte]): (Int, Int, Array[Byte]) = {
-    val r = JpegCodec.decodeGray(b)
+    val r = ImageCodec.decodeGray(b)
     assert(r.isDefined, "decode failed")
     r.get
   }
@@ -25,7 +23,7 @@ class JpegCodecSpec extends AnyFunSuite {
         val bx = (i % w) / 8; val by = (i / w) / 8
         ((id * 37 + bx * 17L + by * 29L) % 256).toInt
       }
-      val (dw, dh, px) = decodeOrFail(JpegCodec.encodeGray(w, h, pix))
+      val (dw, dh, px) = decodeOrFail(ImageCodec.jpegGray(w, h, pix))
       assert(dw == w && dh == h)
       for (i <- 0 until w * h)
         assert((px(i) & 0xFF) == pix(i), s"id=$id pixel $i")
@@ -37,7 +35,7 @@ class JpegCodecSpec extends AnyFunSuite {
     // the first block's DC itself exercises the full signed range
     val w = 32; val h = 8
     def pix(i: Int): Int = if ((i % w) / 8 % 2 == 0) 0 else 255
-    val (_, _, px) = decodeOrFail(JpegCodec.encodeGray(w, h, pix))
+    val (_, _, px) = decodeOrFail(ImageCodec.jpegGray(w, h, pix))
     for (i <- 0 until w * h) assert((px(i) & 0xFF) == pix(i))
   }
 
@@ -57,7 +55,7 @@ class JpegCodecSpec extends AnyFunSuite {
             math.min(w - 1, math.max(0, x + dx)))
         (at(-1, 0) + 2 * at(0, 0) + at(1, 0) + at(0, -1) + at(0, 1)) / 6
       }
-      val (dw, dh, px) = decodeOrFail(JpegCodec.encodeGray(w, h, smooth))
+      val (dw, dh, px) = decodeOrFail(ImageCodec.jpegGray(w, h, smooth))
       assert(dw == w && dh == h)
       val errs = (0 until w * h).map(i => math.abs((px(i) & 0xFF) - smooth(i)))
       assert(errs.max <= 96, s"max err ${errs.max}") // lossy but sane
@@ -72,104 +70,52 @@ class JpegCodecSpec extends AnyFunSuite {
       val bx = (i % w) / 8; val by = (i / w) / 8
       (40 + bx * 90 + by * 35) % 256
     }
-    val (dw, dh, px) = decodeOrFail(JpegCodec.encodeGray(w, h, pix))
+    val (dw, dh, px) = decodeOrFail(ImageCodec.jpegGray(w, h, pix))
     assert(dw == w && dh == h && px.length == w * h)
     // edge-replicated padding keeps edge blocks constant too → exact
     for (i <- 0 until w * h) assert((px(i) & 0xFF) == pix(i), s"pixel $i")
   }
 
   test("rejection contract: truncated, non-JPEG, progressive-marked") {
-    assert(JpegCodec.decodeGray(Array.emptyByteArray).isEmpty)
-    assert(JpegCodec.decodeGray("not a jpeg".getBytes).isEmpty)
-    val ok = JpegCodec.encodeGray(8, 8, _ => 128)
-    assert(JpegCodec.decodeGray(ok.take(ok.length / 2)).isEmpty)
-    // flip SOF0 to SOF2 (progressive): must refuse, not mis-decode
+    assert(ImageCodec.decodeGray(Array.emptyByteArray).isEmpty)
+    assert(ImageCodec.decodeGray("not a jpeg".getBytes).isEmpty)
+    val ok = ImageCodec.jpegGray(8, 8, _ => 128)
+    assert(ImageCodec.decodeGray(ok.take(ok.length / 2)).isEmpty)
+    // flip a baseline SOF0 to SOF2 (progressive) without progressive
+    // scans: must refuse, not mis-decode
     val prog = ok.clone()
     val sof = prog.indices.find(i =>
       (prog(i) & 0xFF) == 0xFF && (prog(i + 1) & 0xFF) == 0xC0).get
     prog(sof + 1) = 0xC2.toByte
-    assert(JpegCodec.decodeGray(prog).isEmpty)
+    assert(ImageCodec.decodeGray(prog).isEmpty)
   }
 
-  test("cross-check: our encoder's bytes decode identically in ImageIO") {
-    val id = 97L
-    val w = 24; val h = 32
-    def pix(i: Int): Int = {
-      val bx = (i % w) / 8; val by = (i / w) / 8
-      ((id * 37 + bx * 17L + by * 29L) % 256).toInt
-    }
-    val bytes = JpegCodec.encodeGray(w, h, pix)
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(bytes))
-    assume(img != null, "JDK ImageIO JPEG reader unavailable")
-    assert(img.getWidth == w && img.getHeight == h)
-    val (_, _, ours) = decodeOrFail(bytes)
-    val raster = img.getRaster
-    var maxDiff = 0
-    for (y <- 0 until h; x <- 0 until w) {
-      val theirs = raster.getSample(x, y, 0)
-      maxDiff = math.max(maxDiff, math.abs(theirs - (ours(y * w + x) & 0xFF)))
-    }
-    // T.81 Annex A allows small IDCT implementation variance; constant
-    // blocks should agree exactly, allow 1 for safety
-    assert(maxDiff <= 1, s"max ImageIO disagreement $maxDiff")
+  test("a truncated JPEG gives None: the JDK reader warns, it does not throw") {
+    val w = 64; val h = 64
+    val ok = ImageCodec.jpegGray(w, h, i => (i * 31 + i / w * 7) % 256)
+    val cut = ok.dropRight(30) // inside the entropy-coded data
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(cut))
+    assert(img != null && img.getWidth == w && img.getHeight == h)
+    assert(ImageCodec.decodeGray(cut).isEmpty)
   }
 
-  test("cross-check: ImageIO-encoded JPEGs decode in our decoder") {
-    val w = 40; val h = 28
+  test("a progressive gray JPEG decodes") {
+    val w = 24; val h = 16
     val img = new java.awt.image.BufferedImage(w, h,
       java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val r = new scala.util.Random(0xF00D)
-    val src = Array.tabulate(w * h)(i =>
-      (96 + 64 * math.sin(i * 0.05) + r.nextInt(8)).toInt)
     for (y <- 0 until h; x <- 0 until w)
-      img.getRaster.setSample(x, y, 0, src(y * w + x))
-    val out = new java.io.ByteArrayOutputStream()
-    val wrote = javax.imageio.ImageIO.write(img, "jpeg", out)
-    assume(wrote, "JDK ImageIO JPEG writer unavailable")
-    val decoded = JpegCodec.decodeGray(out.toByteArray)
-    assert(decoded.isDefined,
-      "our decoder must accept a third-party baseline grayscale stream")
-    val (dw, dh, px) = decoded.get
+      img.getRaster.setSample(x, y, 0, 40 + (x / 8) * 60 + (y / 8) * 20)
+    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
+    val param = writer.getDefaultWriteParam
+    param.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bytes)
+    writer.setOutput(out)
+    writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
+    out.close(); writer.dispose()
+    val (dw, dh, px) = decodeOrFail(bytes.toByteArray)
     assert(dw == w && dh == h)
-    // both decoders see the same lossy stream: compare against ImageIO's
-    // own re-decode, where only IDCT rounding can differ
-    val back = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(out.toByteArray))
-    var maxDiff = 0
     for (y <- 0 until h; x <- 0 until w)
-      maxDiff = math.max(maxDiff,
-        math.abs(back.getRaster.getSample(x, y, 0) - (px(y * w + x) & 0xFF)))
-    assert(maxDiff <= 2, s"max cross-decoder disagreement $maxDiff")
-  }
-
-  test("restart markers: DRI stream round-trips exactly, incl. RSTn cycling") {
-    // 40x24 constant-block image = 15 MCUs; interval 2 emits 7 RSTn
-    // markers (RST0..RST6 — cycling not yet wrapped; use a longer image
-    // below for the modulo-8 wrap), with DC predictors reset at each
-    for ((w, h, interval) <- Seq((40, 24, 2), (32, 80, 1), (64, 32, 3))) {
-      def pix(i: Int): Int = {
-        val bx = (i % w) / 8; val by = (i / w) / 8
-        (31 + bx * 53 + by * 11) % 256
-      }
-      val bytes = JpegCodec.encodeGray(w, h, pix, restartInterval = interval)
-      val decoded = JpegCodec.decodeGray(bytes)
-      assert(decoded.isDefined, s"DRI=$interval decode failed")
-      val (dw, dh, px) = decoded.get
-      assert(dw == w && dh == h)
-      for (i <- 0 until w * h)
-        assert((px(i) & 0xFF) == pix(i), s"DRI=$interval pixel $i")
-      // (32,80,1): 40 MCUs at interval 1 → 39 RSTn markers, wrapping
-      // the RST0..RST7 cycle four times
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      if (img != null) { // third-party agreement on the DRI stream too
-        var maxDiff = 0
-        for (y <- 0 until h; x <- 0 until w)
-          maxDiff = math.max(maxDiff, math.abs(
-            img.getRaster.getSample(x, y, 0) - (px(y * w + x) & 0xFF)))
-        assert(maxDiff <= 1, s"DRI=$interval ImageIO disagreement $maxDiff")
-      }
-    }
+      assert(math.abs((px(y * w + x) & 0xFF) - img.getRaster.getSample(x, y, 0)) <= 2)
   }
 }

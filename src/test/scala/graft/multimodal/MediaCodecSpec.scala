@@ -2,12 +2,14 @@ package graft.multimodal
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the pure-JVM header parsers against spec-built byte layouts:
+/** Pins the header parsers against spec-built byte layouts:
   * builder→parser round-trips at boundary dimensions, hand-crafted
   * streams the builders don't emit (APP0-prefixed JPEG, fill bytes,
   * GIF), and the rejection contract (truncated / desynchronized /
   * zero-dim payloads fall back to None so the pipeline keeps its
-  * "unknown" stub path instead of decoding garbage). */
+  * "unknown" stub path instead of decoding garbage); and the PNG path
+  * of [[ImageCodec]]: gray round-trip and rejection of what is not
+  * 8-bit gray. */
 class MediaCodecSpec extends AnyFunSuite {
 
   private val body = "payload-body".getBytes("UTF-8")
@@ -100,17 +102,14 @@ class MediaCodecSpec extends AnyFunSuite {
     assert(MediaCodec.parseDims(Array[Byte](0x00, 0x01, 0x02)).isEmpty)
   }
 
-  test("grayscale PNG pixel round-trip: every scanline filter decodes " +
-    "back to the exact source pixels") {
-    // heights ≥ 5 force all five filters (encoder assigns y % 5); the
-    // gradient+noise pixel function makes each filter's delta nontrivial
+  test("grayscale PNG pixel round-trip: decoded pixels equal the source") {
     for ((w, h) <- Seq((1, 1), (3, 7), (16, 16), (25, 32), (128, 5))) {
       def pixel(i: Int): Int = (i * 31 + (i * i) % 97) % 256
-      val bytes = MediaCodec.pngGray(w, h, pixel)
-      // builder output is also a valid header for the metadata path
+      val bytes = ImageCodec.pngGray(w, h, pixel)
+      // encoder output is also a valid header for the metadata path
       assert(MediaCodec.parseDims(bytes)
         .contains(MediaCodec.Dims("png", w, h)))
-      val Some((dw, dh, px)) = MediaCodec.decodeGray(bytes)
+      val Some((dw, dh, px)) = ImageCodec.decodeGray(bytes)
       assert((dw, dh) == (w, h))
       assert(px.length == w * h)
       assert((0 until w * h).forall(i => (px(i) & 0xFF) == pixel(i)),
@@ -120,11 +119,34 @@ class MediaCodecSpec extends AnyFunSuite {
 
   test("decodeGray rejects what it cannot faithfully decode") {
     // truecolor header (the pngBytes builder) is NOT grayscale
-    assert(MediaCodec.decodeGray(MediaCodec.pngBytes(4, 4, body)).isEmpty)
+    assert(ImageCodec.decodeGray(MediaCodec.pngBytes(4, 4, body)).isEmpty)
     // truncated IDAT: drop the tail of a valid image
-    val ok = MediaCodec.pngGray(16, 16, i => i % 256)
-    assert(MediaCodec.decodeGray(ok.dropRight(20)).isEmpty)
-    assert(MediaCodec.decodeGray("not a png".getBytes("UTF-8")).isEmpty)
+    val ok = ImageCodec.pngGray(16, 16, i => i % 256)
+    assert(ImageCodec.decodeGray(ok.dropRight(20)).isEmpty)
+    assert(ImageCodec.decodeGray("not a png".getBytes("UTF-8")).isEmpty)
+  }
+
+  test("an RGB PNG gives None: the JDK reader decodes it, it is not gray") {
+    val img = new java.awt.image.BufferedImage(5, 4,
+      java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+    for (y <- 0 until 4; x <- 0 until 5) img.setRGB(x, y, 0x010101 * (x * 40 + y))
+    val out = new java.io.ByteArrayOutputStream()
+    assert(javax.imageio.ImageIO.write(img, "png", out))
+    val rgb = out.toByteArray
+    assert(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(rgb)) != null)
+    assert(ImageCodec.decodeGray(rgb).isEmpty)
+  }
+
+  test("one codec home: javax.imageio and javax.sound appear in src/main " +
+    "only in the codec files") {
+    // a second decode path beside the codec objects would bypass their
+    // accept/reject contract (gray only, warnings and short reads reject)
+    val image = graft.SourceAudit.calls("""\bjavax\.imageio\b""".r)
+    val sound = graft.SourceAudit.calls("""\bjavax\.sound\b""".r)
+    assert(image.keySet == Set("multimodal/ImageCodec.scala"),
+      s"javax.imageio outside ImageCodec: $image")
+    assert(sound.keySet == Set("multimodal/AudioCodec.scala"),
+      s"javax.sound outside AudioCodec: $sound")
   }
 
   test("nearest-neighbor resample matches the index formula (and is " +

@@ -46,7 +46,7 @@ class MediaPipelineSpec extends SparkSpec {
     import spark.implicits._
     val nFrames = Map(1L -> 1, 2L -> 5, 3L -> 9)
     val gifs = nFrames.toSeq.map { case (id, n) =>
-      MediaPipeline.MediaRow(id, GifCodec.gifGray(4, 4, n, (f, i) => f + i))
+      MediaPipeline.MediaRow(id, ImageCodec.gifGray(4, 4, n, (f, i) => f + i))
     }.toDF()
     val sampled = MediaPipeline.frameStats(spark, gifs, everyK = 4)
       .collect().groupBy(_.doc_id).map { case (id, fs) =>
