@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables._
+import graft.util.SizeGate
 import Parity._
 
 /** Graph analytics over the events-derived transfer graph — the natural
@@ -372,30 +373,23 @@ object GraphOps extends QueryModule {
     }
   }
 
-  /** Edge count at or below which [[ccAuto]] resolves components with a
-    * DRIVER-LOCAL union-find instead of the distributed star loop.
-    * 2¹⁶ edges of two longs ≈ 1 MiB collected — the same bounded-
-    * metadata class as the IVF centroids and hot-key collects, far
-    * under any driver budget — while the distributed loop at that size
-    * pays ~5 rounds × 3 exchanges of pure scheduling over a KB-scale
-    * edge list (measured r15: dup_clusters spent ~1 s of its 1.9 s in
-    * the star loop over 25 pairs). */
-  private[ops] val CC_LOCAL_MAX_EDGES = 1L << 16
-
   /** Connected components with a size-gated LOCAL fast path: a
     * MATERIALIZED edge list (callers pass a checkpoint; the count is
     * bounded metadata they can afford) at or below
-    * [[CC_LOCAL_MAX_EDGES]] collects to the driver and resolves via
+    * `SizeGate.DRIVER_MAX_ROWS` collects to the driver and resolves via
     * union-find with min-member canonical labels — identical output to
     * [[ccLogStar]] by construction (CcLocalEquivalenceSpec pins it on
     * randomized graphs); above the gate the O(log n) distributed loop
-    * runs unchanged. Used by the corpus-curation consumers
+    * runs unchanged (the distributed loop at that size pays ~5 rounds ×
+    * 3 exchanges of pure scheduling over a KB-scale edge list:
+    * dup_clusters measured ~1 s of its 1.9 s in the star loop over 25
+    * pairs). Used by the corpus-curation consumers
     * (dup_clusters, split_leakage_safe), whose near-dup pair graphs are
     * KB-scale until the corpus is enormous; the graph-tier queries call
     * the distributed bodies directly so the algorithms themselves stay
     * oracle-exercised at every scale. */
   def ccAuto(edges: DataFrame,
-      localMaxEdges: Long = CC_LOCAL_MAX_EDGES): DataFrame = {
+      localMaxEdges: Long = SizeGate.DRIVER_MAX_ROWS): DataFrame = {
     val n = edges.count()
     if (n <= localMaxEdges) ccLocal(edges) else ccLogStar(edges)
   }

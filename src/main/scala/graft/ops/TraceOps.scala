@@ -12,8 +12,12 @@ import graft.trace.Trace
   *
   * j5, j6 and the Sankey readout run the served trace's own weighted-hop
   * loop and hop-1 fallback (trace/Trace: `weightedHops`,
-  * `withHop1Fallback`), so the code the DuckDB oracle checks is the code
-  * the dashboard serves. Spark 4's SQL engine also supports
+  * `withHop1Fallback`), so the DuckDB oracle checks the code of the
+  * served trace's distributed arm, which serves windows above 2¹⁶
+  * edges. Windows at or below that bound are served by its driver arm,
+  * which TraceArmSpec checks against the distributed arm and the
+  * benchmark's trace check against a path expansion and DuckDB's
+  * recursive CTE. Spark 4's SQL engine also supports
   * `WITH RECURSIVE` (UnionLoop execution): `j9_trace_recursive_cte` runs
   * the reference's own CTE text natively, oracle-checked against the same
   * DuckDB SQL — the fixed point the engine drives itself, vs the loop the

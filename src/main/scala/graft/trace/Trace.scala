@@ -1,9 +1,14 @@
 package graft.trace
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.util.SizeGate
 import java.sql.Timestamp
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** The flagship recursive fund trace (reference: app.py:339-383 —
   * `WITH RECURSIVE trace_path` over fct_transaction_traces, hop cap ≤ 3,
@@ -15,12 +20,19 @@ import java.sql.Timestamp
   * ALL semantics (path multiplicity preserved, carried as a count). The
   * DataFrame API has no recursive operator, so the closure is a bounded
   * driver-side loop of equi-joins: the loop count (maxHops ≤ 3) is tiny
-  * and static, every join inside it is distributed. The loop is lazy, so
-  * a trace is one plan; the hop cap and the weighted frontier keep it
-  * bounded.
+  * and static, every join inside it is distributed. `trace` is lazy, so
+  * a distributed trace is one plan; the hop cap and the weighted
+  * frontier keep it bounded.
+  *
+  * The served trace (`traceWithFallback`) is size-gated: a window of at
+  * most `SizeGate.DRIVER_MAX_ROWS` edges is fetched once and traced on
+  * the driver under the same weighted expansion, total order and
+  * re-expansion, because on KB-scale windows job scheduling, not data,
+  * is the cost of the distributed plan. Larger windows run the lazy plan
+  * behind the hop-1 fallback.
   *
   * The oracle-gated registry queries (ops/TraceOps: j5, j6, the Sankey
-  * readout) run this same loop and this same hop-1 fallback over their
+  * readout) run the distributed loop and the hop-1 fallback over their
   * (src, dst) edge set; Spark's native `WITH RECURSIVE` runs the
   * reference's CTE text as j9, the fixed point the engine drives itself.
   *
@@ -42,6 +54,17 @@ object Trace {
     * deterministic with the hash/destination tiebreak). */
   private def orderKey: Seq[Column] = Seq(col("hop"), col("tx_time"),
     col("transaction_hash"), col("destination_address"))
+
+  /** The trace's edges: the six edge columns in the time window, with
+    * both endpoints present. Both arms of the served trace read this. */
+  private def window(traces: DataFrame, p: TraceParams): DataFrame =
+    traces.select(
+        col("source_address"), col("destination_address"),
+        col("transaction_hash"), col("block_id"), col("tx_time"),
+        col("transferred_value_btc"))
+      .filter(col("tx_time").between(lit(p.startTime), lit(p.endTime)))
+      .filter(col("source_address").isNotNull &&
+        col("destination_address").isNotNull)
 
   /** The WEIGHTED trace accumulator over edges carrying
     * `source_address` and `destination_address` (any further columns
@@ -114,14 +137,8 @@ object Trace {
     * pins nothing: a long-lived serving session tracing many windows
     * accumulates no cached edge plans (TraceCacheSpec). */
   def trace(traces: DataFrame, p: TraceParams): DataFrame = {
-    val edges = traces.select(
-        col("source_address"), col("destination_address"),
-        col("transaction_hash"), col("block_id"), col("tx_time"),
-        col("transferred_value_btc"))
-      .filter(col("tx_time").between(lit(p.startTime), lit(p.endTime)))
-      .filter(col("source_address").isNotNull &&
-        col("destination_address").isNotNull)
-    val topWeighted = weightedHops(edges, p.sourceAddress, p.maxHops)
+    val topWeighted = weightedHops(window(traces, p), p.sourceAddress,
+        p.maxHops)
       .orderBy(orderKey: _*)
       .limit(p.limit)
     // <= limit rows from here on: the single-partition window is over
@@ -151,10 +168,86 @@ object Trace {
     try run(maxHops).localCheckpoint(true)
     catch { case _: Exception => run(1).localCheckpoint(true) }
 
-  /** The served trace behind the hop-1 fallback. The result is bounded
-    * by `p.limit`, so checkpointing it is cheap. */
+  /** The served trace, size-gated on the window's edge count. One
+    * bounded fetch, `limit(bound + 1).collect()`, reads the window's
+    * edges. If at most `bound` (`SizeGate.DRIVER_MAX_ROWS`) come back,
+    * [[onDriver]] answers from them and the result is a local relation:
+    * collecting it runs no job and checkpoints nothing. Otherwise the
+    * fetch is discarded and the lazy plan runs behind the hop-1 fallback,
+    * whose result (bounded by `p.limit`) is cheap to checkpoint. The
+    * decision is exact and the driver never holds more than `bound + 1`
+    * edges. A failure of the fetch itself throws from the call, as the
+    * distributed arm does when its hop-1 retry fails too. */
   def traceWithFallback(traces: DataFrame, p: TraceParams): DataFrame =
-    withHop1Fallback(p.maxHops)(h => trace(traces, p.copy(maxHops = h)))
+    traceWithFallback(traces, p, SizeGate.DRIVER_MAX_ROWS)
+
+  /** [[traceWithFallback]] with the gate's bound as a parameter, so
+    * tests can force either arm (a bound of -1 forces the distributed
+    * arm). */
+  private[trace] def traceWithFallback(traces: DataFrame, p: TraceParams,
+      bound: Int): DataFrame = {
+    val edges = window(traces, p)
+    val fetched = edges.limit(bound + 1).collect()
+    if (fetched.length > bound)
+      withHop1Fallback(p.maxHops)(h => trace(traces, p.copy(maxHops = h)))
+    else {
+      val rows =
+        try onDriver(fetched, p)
+        catch { case _: ArithmeticException =>
+          onDriver(fetched, p.copy(maxHops = 1)) }
+      traces.sparkSession.createDataFrame(rows.asJava,
+        StructType(StructField("hop", IntegerType, nullable = false) +:
+          edges.schema.fields))
+    }
+  }
+
+  /** [[trace]] on the driver over the window's fetched edges (the six
+    * [[window]] columns, in order), row for row the distributed plan's
+    * answer:
+    *  - the weighted expansion: the frontier holds one entry per
+    *    distinct reached address with its path count, so each hop's
+    *    state is bounded by |edges|, as in [[weightedHops]];
+    *  - the top-`limit` weighted rows under [[orderKey]]'s total order,
+    *    ascending with nulls first and strings compared by UTF-8 bytes,
+    *    as Spark sorts;
+    *  - the re-expansion, each row repeated for its paths until `limit`
+    *    rows are out.
+    * Path counts and the running path total add with `Math.addExact`,
+    * so an overflow throws `ArithmeticException` where the distributed
+    * plan's ANSI sums fail; the caller then answers at hop 1. */
+  private def onDriver(edges: Array[Row], p: TraceParams): Seq[Row] = {
+    val bySrc = edges.groupBy(_.getString(0))
+    val weighted = ArrayBuffer.empty[(Int, Row, Long)]
+    var frontier = Map(p.sourceAddress -> 1L)
+    for (h <- 1 to p.maxHops) {
+      val hop = for {
+        (addr, paths) <- frontier.toSeq
+        e <- bySrc.getOrElse(addr, Array.empty[Row])
+      } yield (h, e, paths)
+      weighted ++= hop
+      if (h < p.maxHops) frontier =
+        hop.groupMapReduce(_._2.getString(1))(_._3)(Math.addExact)
+    }
+    def key(w: (Int, Row, Long)) = (w._1, w._2.getTimestamp(4),
+      Option(w._2.getString(2)).map(UTF8String.fromString),
+      UTF8String.fromString(w._2.getString(1)))
+    val byKey = Ordering.Tuple4(Ordering.Int,
+      Ordering.fromLessThan[Timestamp](_.before(_)),
+      Ordering.Option(Ordering.ordered[UTF8String]),
+      Ordering.ordered[UTF8String])
+    val top = weighted.map(w => (key(w), w)).sortBy(_._1)(byKey)
+      .take(p.limit).map(_._2)
+    val out = ArrayBuffer.empty[Row]
+    var total = 0L
+    for ((h, e, paths) <- top) {
+      val start = total
+      total = Math.addExact(total, paths)
+      if (start < p.limit)
+        for (_ <- 1L to math.min(paths, p.limit - start))
+          out += Row.fromSeq(h +: e.toSeq)
+    }
+    out.toSeq
+  }
 
   /** J4 + O2/O3 — final enrichment join to dim_blocks and ordered page
     * (app.py:372-374). */

@@ -20,6 +20,19 @@ import org.apache.spark.sql.functions.broadcast
   */
 object SizeGate {
 
+  /** Fail-closed row bound for collecting an input to the driver and
+    * answering there instead of planning distributed jobs: 2¹⁶ rows.
+    * Callers fetch at most one row past it (a bounded `limit(n + 1)`
+    * collect, or a count of a materialized input) and take the driver
+    * arm only when the bound holds. At 2¹⁶ rows the collect is about
+    * 1 MiB of two-long edges for CC and tens of MiB of six-column trace
+    * edges, the same bounded-metadata class as the IVF centroids and
+    * hot-key collects, far under any driver budget, while the
+    * distributed plans at that size pay job scheduling over KB-scale
+    * data. Used by `GraphOps.ccAuto` (driver union-find) and
+    * `Trace.traceWithFallback` (driver trace). */
+  val DRIVER_MAX_ROWS: Int = 1 << 16
+
   /** Default per-executor bound for a gated broadcast: comfortably
     * inside a 2-3 GiB/task-budgeted executor, far above the 10 MB
     * planner default. */

@@ -37,4 +37,29 @@ class TraceCacheSpec extends SparkSpec {
       "Trace.trace returned with a cached plan pinned")
     assert(r.count() == 3)
   }
+
+  test("driver-arm traceWithFallback leaves no persisted RDD and no " +
+    "checkpoint block behind") {
+    spark.catalog.clearCache()
+    val d = Files.createTempDirectory("graft-trace-cache-driver")
+    Fixtures.writeAll(d)
+    val traces = Pipeline.readRaw(spark, d.toString).fctTransactionTraces
+    val p = Trace.TraceParams("addrA", 2,
+      Timestamp.valueOf("2025-08-20 00:00:00"),
+      Timestamp.valueOf("2025-08-20 23:59:59"))
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet.toSet
+    def stored = sc.getRDDStorageInfo.map(_.id).toSet
+    val (rdds, blocks) = (persisted, stored)
+    val r = Trace.traceWithFallback(traces, p)
+    assert(r.queryExecution.logical.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(r.collect().length == 3)
+    assert((persisted -- rdds).isEmpty, "driver arm left a persisted RDD")
+    assert((stored -- blocks).isEmpty, "driver arm left checkpoint blocks")
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // the probe sees the distributed arm's checkpoint of its result
+    Trace.traceWithFallback(traces, p, bound = -1).collect()
+    assert((stored -- blocks).nonEmpty)
+  }
 }
