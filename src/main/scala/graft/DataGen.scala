@@ -145,7 +145,7 @@ object DataGen {
     } else if (docsOnly) {
       // `DataGen docs <nDocs> <outDir>`: documents-only fixture — the
       // docs-amplified knob for exercising the >1 GiB corpus-cache gate
-      // (SizeGate.DEFAULT_CACHE_MAX_BYTES) without a full sf300 star
+      // (SizeGate.CorpusCache) without a full sf300 star
       // schema. Same law and SplitMix determinism as the main generator.
       generateDocuments(spark, args(1).toLong, args(2))
     } else generate(spark, sf, outDir)

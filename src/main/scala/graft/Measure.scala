@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType}
 import graft.ops._
+import graft.util.SizeGate
 
 /** The one measurement and plan-inspection main, on the library's own
   * session ([[Sessions.builder]]). A timed run is `queryExecution.toRdd
@@ -191,17 +192,17 @@ object Measure {
         Arm("union", () => raw().transform(r => r.union(r.select(col("dst"), col("src"))))),
         Arm("explode", () => GraphOps.symmetrize(raw())))))
     },
-    // size-gated executor caches per registry query: below-gate vs switched off
+    // size-gated executor caches per registry query: below-gate vs forced above
     "cachegate" -> { (s, d, names) => names.map { n =>
       val q = () => SparkEntry.queries(n)(s, d)
-      Group(s"cachegate.$n", Seq("cached" -> "false", "uncached" -> "true").map {
-        case (arm, off) => Arm(arm, q, Map(graft.util.SizeGate.NoGatedCacheKey -> off)) })
+      Group(s"cachegate.$n", Seq("cached" -> "", "uncached" -> SizeGate.CorpusCache.name).map {
+        case (arm, force) => Arm(arm, q, Map(SizeGate.ForceAboveKey -> force)) })
     }},
     // plain vs bucketed tables written once: J2 self-join (SMJ), flows join, balance window;
     // one bucket count for every table (co-bucketed joins need equal counts), sized from
     // lineitem's bytes, the largest input
     "layout" -> { (s, d, _) =>
-      val n = graft.util.SizeGate.partitionsForBytes(s, s"$d/lineitem.parquet", 128)
+      val n = SizeGate.partitionsForBytes(s, s"$d/lineitem.parquet", 128)
       def bkt(t: String, df: DataFrame, by: String*)(sort: String*) =
         { sources.Bucketing.writeBucketed(df, t, by, n, by ++ sort); s.table(t) }
       val j2b = bkt("measure_j2_bkt", Tables.lineitem(s, d), "l_orderkey", "l_linenumber")()
@@ -220,10 +221,10 @@ object Measure {
           Arm("plain", () => DomainModels.balanceOver(DomainModels.balanceChanges(s, d))),
           Arm("bucketed", () => DomainModels.balanceOver(cb)))))
     },
-    // jaccard corpus below the gate (cached), and with the kill switch set: the lazy
+    // jaccard corpus below the gate (cached), and with the cache gate forced above: the lazy
     // query's uncached plan and the eager route's memoized bucketed table
     "jaccard" -> { (s, d, _) =>
-      val off = Map(graft.util.SizeGate.NoGatedCacheKey -> "true")
+      val off = Map(SizeGate.ForceAboveKey -> SizeGate.CorpusCache.name)
       val auto = () => TextOps.jaccardPairsAuto(s, d)
       Seq(Group("jaccard.pairs", Seq(Arm("cached", () => TextOps.jaccardPairs(s, d)._1),
           Arm("uncached", () => TextOps.jaccardPairs(s, d)._1, off),

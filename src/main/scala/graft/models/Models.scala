@@ -136,18 +136,12 @@ object Models {
     * the composite (transaction_hash, block_id) — the N×M per-tx edge
     * fan-out) + P5 coinbase categorization.
     *
-    * Scale: the blocks dim rides a SIZE-GATED broadcast
-    * ([[graft.util.SizeGate.broadcastIfSmall]], 256 MiB). An
-    * unconditional hint is the per-executor OOM class r10-r12 removed —
-    * "blocks ≈ 1/2000th of tx" is linear in the fact, tens of GB at
-    * 100 TB — while an unconditional de-hint shuffles the entire fact
-    * wherever blocks exceeds the planner's conservative 10 MB default
-    * (r12 measured the class at sf100: a few-hundred-MB dim forced a
-    * fact shuffle costing 2-5× end-to-end). The gate broadcasts while
-    * the dim's estimated bytes are bounded by a constant (gate-scale
-    * plan pinned in PlanSpec via `pipeline_e2e_trace_mart`) and falls
-    * back to the scale-safe shuffled join past it. inputs/outputs/tx
-    * all shuffle on the same composite key, so the two fan-out joins
+    * Scale: the blocks dim ("≈ 1/2000th of tx", linear in the fact)
+    * rides a SIZE-GATED broadcast ([[graft.util.SizeGate.BlocksBroadcast]],
+    * 256 MiB estimated; gate-scale plan pinned in PlanSpec via
+    * `pipeline_e2e_trace_mart`) and falls back to the scale-safe
+    * shuffled join past it. inputs/outputs/tx all shuffle on the same
+    * composite key, so the two fan-out joins
     * reuse one exchange per side; at 100 TB these three tables should
     * be bucketed by transaction_hash to make the exchanges vanish. */
   def intTransactionFlows(stgTx: DataFrame, stgBlocks: DataFrame,

@@ -116,7 +116,7 @@ object CorpusOps extends QueryModule {
     Q("dup_clusters",
       (s, d) =>
         // size-gated: cache plan at gate scale, bucketed-table layout past
-        // SizeGate.DEFAULT_CACHE_MAX_BYTES (the 100 TB corpus path)
+        // SizeGate.CorpusCache's bound (the 100 TB corpus path)
         dupClustersFrom(TextOps.jaccardPairsAuto(s, d)),
       Some(s"""$dupLabelsSql
             SELECT doc_id, cluster_id,

@@ -81,16 +81,6 @@ object GraphOps extends QueryModule {
         .map(n => n -> row.getAs[Any](n)).toMap)
     } catch { case _: java.util.concurrent.TimeoutException => None }
 
-  /** Max materialized edge count at which the min-label loop may
-    * broadcast the label table into the per-round propagation join.
-    * Labels ≤ distinct endpoints ≤ 2·edges rows of two longs, so 1M
-    * edges bounds the broadcast at a few tens of MB — far under the
-    * executor budget; above it every round keeps the co-partitioned
-    * shuffle join. Tuned for safety, not the crossover (a broadcast
-    * stays profitable well past this), so the gate can only forgo wins,
-    * never OOM. */
-  private[ops] val CC_LABEL_BCAST_MAX_EDGES = 1L << 20
-
   /** Connected components by min-label propagation over an undirected
     * edge list. Convergence-driven round count → EAGER (same contract
     * as dup_clusters): every cache is released before returning and the
@@ -114,18 +104,13 @@ object GraphOps extends QueryModule {
     var cur: DataFrame = null
     var curIds: Set[Int] = Set.empty
     try {
-      val edgeCount = edges.count()
-      // Label-side join strategy, decided ONCE from the materialized
-      // edge count (bounded metadata — the count the loop already pays
-      // for): the label table has at most one row per distinct
-      // endpoint, so edgeCount bounds it. Below the bound a broadcast
-      // hint removes the per-round label exchange + sort; above it (or
-      // on any doubt) the hint is withheld and the round keeps the
-      // scale-safe co-partitioned shuffle join — the same fail-closed
-      // size-gate discipline as graft.util.SizeGate (a forced broadcast
-      // on a node-proportional side is the OOM class the r10-r12
-      // broadcast audit removed everywhere else).
-      val bcastLabels = edgeCount <= CC_LABEL_BCAST_MAX_EDGES
+      // Label-side join strategy, decided ONCE from the edge count
+      // (which also fills the edge cache): below the gate a broadcast
+      // hint removes the per-round label exchange + sort; above it the
+      // round keeps the scale-safe co-partitioned shuffle join.
+      val bcastLabels =
+        SizeGate.below(edges.sparkSession, SizeGate.CcLabelBroadcast)(
+          edges.count())
       val init = Checkpoints.ckptTracked(
         edges.select(col("src").as("node")).distinct()
           .withColumn("lab", col("node"))
@@ -376,7 +361,7 @@ object GraphOps extends QueryModule {
   /** Connected components with a size-gated LOCAL fast path: a
     * MATERIALIZED edge list (callers pass a checkpoint; the count is
     * bounded metadata they can afford) at or below
-    * `SizeGate.DRIVER_MAX_ROWS` collects to the driver and resolves via
+    * `SizeGate.CcDriver`'s bound collects to the driver and resolves via
     * union-find with min-member canonical labels — identical output to
     * [[ccLogStar]] by construction (CcLocalEquivalenceSpec pins it on
     * randomized graphs); above the gate the O(log n) distributed loop
@@ -388,11 +373,10 @@ object GraphOps extends QueryModule {
     * KB-scale until the corpus is enormous; the graph-tier queries call
     * the distributed bodies directly so the algorithms themselves stay
     * oracle-exercised at every scale. */
-  def ccAuto(edges: DataFrame,
-      localMaxEdges: Long = SizeGate.DRIVER_MAX_ROWS): DataFrame = {
-    val n = edges.count()
-    if (n <= localMaxEdges) ccLocal(edges) else ccLogStar(edges)
-  }
+  def ccAuto(edges: DataFrame): DataFrame =
+    if (SizeGate.below(edges.sparkSession, SizeGate.CcDriver)(edges.count()))
+      ccLocal(edges)
+    else ccLogStar(edges)
 
   /** Driver union-find over a BOUNDED edge list — gate via [[ccAuto]],
     * never call on an unbounded input. Output contract identical to

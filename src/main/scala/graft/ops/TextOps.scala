@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.util.SizeGate
+import graft.util.SizeGate.{below, CorpusCache, GramDimBroadcast}
 
 /** Training-data text pipeline operators over the `documents` table —
   * north-star extensions beyond the reference's surface (SURVEY.md §7.1
@@ -48,7 +49,7 @@ object TextOps extends QueryModule {
     * callers that materialize the pairs eagerly and must not leave a
     * corpus-sized cache pinned in a long-lived session.
     *
-    * The shingled corpus cache is size-gated ([[SizeGate.cacheable]]):
+    * The shingled corpus cache is size-gated ([[SizeGate.CorpusCache]]):
     * until r14 it was an UNCONDITIONAL `.cache()` — the exact plan the
     * r13 corpus-layout sweep measured DNF-ENOSPC at a 2.8 GiB corpus
     * (the shingled rows inflate ~10× in memory and spill >50 GB before
@@ -62,21 +63,15 @@ object TextOps extends QueryModule {
     * bucketed layout through [[jaccardPairsAuto]]. */
   private[graft] def jaccardPairs(s: SparkSession,
       d: String): (DataFrame, () => Unit) = {
-    val cache = SizeGate.cacheable(s, docsPath(d))
+    val cache = below(s, CorpusCache)(corpusBytes(s, d))
     val docs = if (cache) shingledDocs(s, d).cache() else shingledDocs(s, d)
-    (jaccardPairsFrom(docs, gramDimBcast(s, d)),
+    (jaccardPairsFrom(docs, below(s, GramDimBroadcast)(corpusBytes(s, d))),
       () => { if (cache) docs.unpersist(); () })
   }
 
-  /** Gram-dim broadcast gate, deliberately SEPARATE from the cache
-    * gate since r13: the r12 design used one bound for both, but the
-    * measured crossovers differ by ~4× (BENCH_NOTES r13 corpus-layout
-    * sweep) — the cache starts losing to the bucketed table around
-    * 1 GiB, while the rare-gram broadcast (≤ corpus/2 bytes by df ≥ 2,
-    * tens of MB measured at the 560 MB sf100 corpus) stays worth ~5×
-    * (r12 A/B) until the corpus itself passes 2 GiB. Fails closed. */
-  private def gramDimBcast(s: SparkSession, d: String): Boolean =
-    SizeGate.bounded(s, docsPath(d), CORPUS_BCAST_MAX_BYTES)
+  /** The corpus gates' measurement: `d`'s documents' on-disk bytes. */
+  private def corpusBytes(s: SparkSession, d: String): Long =
+    SizeGate.dirBytes(s, docsPath(d))
 
   private def docsPath(d: String): String = s"$d/documents.parquet"
 
@@ -87,15 +82,8 @@ object TextOps extends QueryModule {
     documents(s, d).select(col("doc_id"),
       array_distinct(shingles(toksCol, 2)).as("grams"))
 
-  /** Corpus bytes above which the gram-dim broadcasts (rare-gram list,
-    * bigram-LM unigram side) de-hint to shuffled joins — the r12 bound,
-    * now scoped to broadcasts only: each dim is ≤ corpus/2 bytes by
-    * construction, so 2 GiB corpus ⇒ ≤ 1 GiB worst-case dim, the edge
-    * of a 2-3 GiB/task executor budget. */
-  private[graft] val CORPUS_BCAST_MAX_BYTES: Long = 2L << 30
-
   /** Size-gated eager entry (`dup_clusters`, `split_leakage_safe`):
-    * below [[SizeGate.cacheable]] the cached plan of [[jaccardPairs]],
+    * below [[SizeGate.CorpusCache]] the cached plan of [[jaccardPairs]],
     * above it the same pairs plan over the shingled corpus persisted as
     * a table bucketed and sorted on doc_id — shuffle paid once at write
     * time, both verify joins then read bucket-colocated data with no
@@ -115,9 +103,9 @@ object TextOps extends QueryModule {
     * our back) is detected by a catalog re-check and rewritten. */
   private[graft] def jaccardPairsAuto(s: SparkSession,
       d: String): (DataFrame, () => Unit) =
-    if (SizeGate.cacheable(s, docsPath(d))) jaccardPairs(s, d)
+    if (below(s, CorpusCache)(corpusBytes(s, d))) jaccardPairs(s, d)
     else (jaccardPairsFrom(s.table(ensureBucketedCorpus(s, d)),
-      gramDimBcast(s, d)), () => ())
+      below(s, GramDimBroadcast)(corpusBytes(s, d))), () => ())
 
   /** (session, dataset dir) → already-written bucketed corpus table.
     * Same stopped-session eviction discipline as
@@ -164,17 +152,12 @@ object TextOps extends QueryModule {
       explode(col("grams")).as("gram"))
     val rare = index.groupBy("gram").agg(count(lit(1)).as("df"))
       .filter(col("df") <= 50 && col("df") >= 2)
-    // SIZE-GATED broadcast (gramDimBcast): the rare-gram list (2 <= df
-    // <= 50) grows roughly linearly with corpus vocabulary — under
-    // Zipf, MOST distinct grams are rare — so an unconditional hint is
-    // unbounded executor state at 100 TB. But an unconditional de-hint
-    // shuffles the ENTIRE exploded index on gram (the aggregate-shaped
-    // rare exceeds the planner's 10 MB default and its stats estimate
-    // inflates to its child's size, so the planner never broadcasts it
-    // unaided — measured r12: ngram_jaccard_pairs 12 s -> 62 s solo at
-    // sf100). Below the corpus gate the list is bounded (<= corpus/2
-    // bytes by df >= 2; tens of MB measured) and rides a broadcast;
-    // past the gate the shuffled equi-join is the scale-safe plan.
+    // SIZE-GATED broadcast (SizeGate.GramDimBroadcast): the rare-gram
+    // list (2 <= df <= 50) grows with corpus vocabulary — under Zipf,
+    // MOST distinct grams are rare — but the planner never broadcasts
+    // it unaided (aggregate stats inflate to the child's size), and the
+    // de-hint shuffles the ENTIRE exploded index on gram (measured r12:
+    // ngram_jaccard_pairs 12 s -> 62 s solo at sf100).
     val pruned = index.join(
       if (hintGramDim) broadcast(rare) else rare, Seq("gram"))
     val a = pruned.select(col("gram"), col("doc_id").as("doc_a"))
@@ -359,12 +342,11 @@ object TextOps extends QueryModule {
     //      executes: quality + repetition thresholds, then exact dedup
     //      keeping the first doc per content hash. Per-row scoring (no
     //      shuffle) → one window exchange for keep-first, pre-reduced
-    //      map-side to one row per hash per task (the derived md5
-    //      partition key puts a Project between Filter and Window when
-    //      our LocalTopK rule runs, so here the reduction comes from
-    //      Spark's own partial WindowGroupLimit — same shape, asserted
-    //      in PlanSpec). Per-row double thresholds are safe: identical
-    //      op sequence on both engines.
+    //      map-side to one row per hash per task by LocalTopK below the
+    //      exchange; the WindowGroupLimit Spark's InferWindowGroupLimit
+    //      stacks above it is planned away by GraftStrategies, and
+    //      PlanSpec pins LocalTopK alone. Per-row double thresholds are
+    //      safe: identical op sequence on both engines.
     Q("pipeline_clean_docs",
       (s, d) => {
         val scored = documents(s, d)
@@ -450,7 +432,7 @@ object TextOps extends QueryModule {
     //      stay LAZY (building a Q must be analysis-only — the contract
     //      guard reads every query's schema), so this entry cannot take
     //      the bucketed arm (a construction-time table write); instead
-    //      the internal corpus cache is size-gated (SizeGate.cacheable):
+    //      the internal corpus cache is size-gated (SizeGate.CorpusCache):
     //      below the gate it follows the session cache lifecycle, above
     //      it the same lazy plan runs uncached — bounded recompute, not
     //      the r13-measured ENOSPC of an unconditional corpus cache.
@@ -620,7 +602,7 @@ object TextOps extends QueryModule {
     //      thresholds on. Two map-side-combinable hash aggregates joined
     //      on w1 — the unigram side is the corpus vocabulary, which
     //      grows with the corpus (Heaps' law), so its broadcast is
-    //      size-gated on the same gramDimBcast bound as the jaccard gram
+    //      size-gated on the same GramDimBroadcast gate as the jaccard gram
     //      dims (unconditional hint = unbounded executor state at
     //      100 TB; unconditional de-hint = an extra full c12 exchange
     //      the planner cannot avoid because aggregate stats inflate).
@@ -643,7 +625,8 @@ object TextOps extends QueryModule {
         val c12 = SizeGate.cacheIfBounded(s,
           pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n12")), docsPath(d))
         val c1 = c12.groupBy("w1").agg(sum(col("n12")).as("n1"))
-        c12.join(if (gramDimBcast(s, d)) broadcast(c1) else c1, Seq("w1"))
+        val hintC1 = below(s, GramDimBroadcast)(corpusBytes(s, d))
+        c12.join(if (hintC1) broadcast(c1) else c1, Seq("w1"))
           .select(col("w1"), col("w2"), col("n12"),
             round(col("n12") / col("n1").cast("double"), 6).as("p_cond"))
           .orderBy(desc("n12"), asc("w1"), asc("w2"))

@@ -246,13 +246,15 @@ object PushLocalTopK extends Rule[LogicalPlan] {
     case f @ Filter(cond,
         w @ Window(exprs, partSpec, ordSpec, child0, _))
       if ordSpec.nonEmpty =>
-      // Spark's own InferWindowGroupLimit may already have inserted a
-      // WindowGroupLimit for the same bound (it runs in the main
-      // optimizer batches, before injected rules). SUBSUME it rather
-      // than stack under it: both nodes reduce to the same retained-row
-      // superset and the downstream Window recomputes exact ranks, so
-      // keeping both pays two per-partition reducers plus the builtin's
-      // mandatory local sort for rows LocalTopK already bounded.
+      // Spark's own InferWindowGroupLimit runs in a later optimizer
+      // batch than injected rules, so it stacks its WindowGroupLimit
+      // ABOVE a LocalTopK, and GraftStrategies plans that node away. A
+      // plan that reaches this rule already carrying a WindowGroupLimit
+      // for the same bound is SUBSUMED rather than stacked under: both
+      // nodes reduce to the same retained-row superset and the
+      // downstream Window recomputes exact ranks, so keeping both pays
+      // two per-partition reducers plus the builtin's mandatory local
+      // sort for rows LocalTopK already bounded.
       val child = child0 match {
         case wgl: WindowGroupLimit
           if wgl.partitionSpec == partSpec && wgl.orderSpec == ordSpec =>

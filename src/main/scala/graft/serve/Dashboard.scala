@@ -80,7 +80,10 @@ object Dashboard {
   }
 
   /** M6 — (key → result) memo with TTL, the st.cache_data analog. Callers
-    * collect bounded results (all dashboard queries are LIMITed). */
+    * collect bounded results (all dashboard queries are LIMITed). Storing
+    * a result drops every expired entry, as `st.cache_data(ttl=...)` does,
+    * so a long-lived session whose keys rarely repeat (request windows)
+    * holds only the last TTL's worth of results. */
   final class ResultCache[K, V](ttlMillis: Long,
       now: () => Long = () => System.currentTimeMillis()) {
     private val store = TrieMap.empty[K, (Long, V)]
@@ -89,7 +92,10 @@ object Dashboard {
         case Some((t, v)) if now() - t < ttlMillis => v
         case _ =>
           val v = compute
-          store.put(key, (now(), v))
+          val t = now()
+          store.foreach { case (k, e) =>
+            if (t - e._1 >= ttlMillis) store.remove(k, e) }
+          store.put(key, (t, v))
           v
       }
     }

@@ -24,8 +24,8 @@ import scala.jdk.CollectionConverters._
   * a distributed trace is one plan; the hop cap and the weighted
   * frontier keep it bounded.
   *
-  * The served trace (`traceWithFallback`) is size-gated: a window of at
-  * most `SizeGate.DRIVER_MAX_ROWS` edges is fetched once and traced on
+  * The served trace (`traceWithFallback`) is size-gated: a window within
+  * `SizeGate.TraceDriver`'s edge bound is fetched once and traced on
   * the driver under the same weighted expansion, total order and
   * re-expansion, because on KB-scale windows job scheduling, not data,
   * is the cost of the distributed plan. Larger windows run the lazy plan
@@ -168,27 +168,22 @@ object Trace {
     try run(maxHops).localCheckpoint(true)
     catch { case _: Exception => run(1).localCheckpoint(true) }
 
-  /** The served trace, size-gated on the window's edge count. One
-    * bounded fetch, `limit(bound + 1).collect()`, reads the window's
-    * edges. If at most `bound` (`SizeGate.DRIVER_MAX_ROWS`) come back,
-    * [[onDriver]] answers from them and the result is a local relation:
-    * collecting it runs no job and checkpoints nothing. Otherwise the
-    * fetch is discarded and the lazy plan runs behind the hop-1 fallback,
-    * whose result (bounded by `p.limit`) is cheap to checkpoint. The
-    * decision is exact and the driver never holds more than `bound + 1`
-    * edges. A failure of the fetch itself throws from the call, as the
-    * distributed arm does when its hop-1 retry fails too. */
-  def traceWithFallback(traces: DataFrame, p: TraceParams): DataFrame =
-    traceWithFallback(traces, p, SizeGate.DRIVER_MAX_ROWS)
-
-  /** [[traceWithFallback]] with the gate's bound as a parameter, so
-    * tests can force either arm (a bound of -1 forces the distributed
-    * arm). */
-  private[trace] def traceWithFallback(traces: DataFrame, p: TraceParams,
-      bound: Int): DataFrame = {
+  /** The served trace, size-gated ([[SizeGate.TraceDriver]]) on the
+    * window's edge count. One bounded fetch, `limit(bound + 1)
+    * .collect()`, reads the window's edges. If at most the bound come
+    * back, [[onDriver]] answers from them and the result is a local
+    * relation: collecting it runs no job and checkpoints nothing.
+    * Otherwise the fetch is discarded and the lazy plan runs behind the
+    * hop-1 fallback, whose result (bounded by `p.limit`) is cheap to
+    * checkpoint. The decision is exact and the driver never holds more
+    * than `bound + 1` edges. A failed fetch counts as above the bound,
+    * and a forced gate runs no fetch. */
+  def traceWithFallback(traces: DataFrame, p: TraceParams): DataFrame = {
     val edges = window(traces, p)
-    val fetched = edges.limit(bound + 1).collect()
-    if (fetched.length > bound)
+    lazy val fetched =
+      edges.limit(SizeGate.TraceDriver.bound.toInt + 1).collect()
+    if (!SizeGate.below(traces.sparkSession, SizeGate.TraceDriver)(
+        fetched.length))
       withHop1Fallback(p.maxHops)(h => trace(traces, p.copy(maxHops = h)))
     else {
       val rows =

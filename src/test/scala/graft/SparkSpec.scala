@@ -8,6 +8,14 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** Runs `body` with `gates` forced onto their above-bound arm through
+    * the one force switch, [[graft.util.SizeGate.ForceAboveKey]]. */
+  def forcedAbove[T](gates: graft.util.SizeGate.Gate*)(body: => T): T = {
+    spark.conf.set(graft.util.SizeGate.ForceAboveKey,
+      gates.map(_.name).mkString(","))
+    try body finally spark.conf.unset(graft.util.SizeGate.ForceAboveKey)
+  }
+
   override def afterAll(): Unit = {
     spark.catalog.clearCache()
     super.afterAll()

@@ -52,8 +52,7 @@ class CcLocalSpec extends SparkSpec {
       (9L, 9L, 1L)))
   }
 
-  test("ccAuto routes by the gate: local below (no star-loop " +
-    "checkpoints), distributed above (localMaxEdges = 0)") {
+  test("ccAuto routes by the gate: local below, distributed forced above") {
     val df = edgesDf(Seq((1L, 2L), (2L, 3L))).localCheckpoint(true)
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet.toSet
@@ -62,7 +61,8 @@ class CcLocalSpec extends SparkSpec {
     // checkpoints beyond the caller's own input
     assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty,
       "local path must not leave star-loop checkpoints behind")
-    val dist = canonical(GraphOps.ccAuto(df, localMaxEdges = 0))
+    val dist = canonical(forcedAbove(graft.util.SizeGate.CcDriver)(
+      GraphOps.ccAuto(df)))
     assert(local == dist)
   }
 }

@@ -12,7 +12,7 @@ import graft.util.SizeGate
   * isolation — the table name is keyed by the dataset dir, so two
   * corpora in one warehouse never alias. KB fixtures never cross the
   * real 1 GiB bound, so the above-gate arms are forced with the
-  * measurement kill switch ([[SizeGate.NoGatedCacheKey]]). */
+  * force switch ([[SizeGate.ForceAboveKey]]). */
 class TextBucketedSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -28,10 +28,8 @@ class TextBucketedSpec extends SparkSpec {
   }
 
   /** Runs `body` on the above-gate arm of every size-gated cache. */
-  private def aboveGate[T](body: => T): T = {
-    spark.conf.set(SizeGate.NoGatedCacheKey, "true")
-    try body finally spark.conf.unset(SizeGate.NoGatedCacheKey)
-  }
+  private def aboveGate[T](body: => T): T =
+    forcedAbove(SizeGate.CorpusCache)(body)
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.orderBy("doc_a", "doc_b").collect().toSeq
@@ -111,7 +109,7 @@ class TextBucketedSpec extends SparkSpec {
     // would be substituted into ANY matching subtree by the
     // CacheManager and fake a cache in the uncached arm's plan
     spark.catalog.clearCache()
-    // the kill switch forces the above-gate arm of the SAME entry the
+    // the force switch takes the above-gate arm of the SAME entry the
     // registered ngram_jaccard_pairs query routes through
     val (pairs, release) = aboveGate(TextOps.jaccardPairs(spark, sf))
     try {
@@ -179,18 +177,20 @@ class TextBucketedSpec extends SparkSpec {
     "to 0 bytes and failed OPEN into the unbounded cache/broadcast " +
     "plans)") {
     def docs(d: String) = s"$d/documents.parquet"
-    val bcast = TextOps.CORPUS_BCAST_MAX_BYTES
+    def cacheable(path: String) =
+      SizeGate.below(spark, SizeGate.CorpusCache)(SizeGate.dirBytes(spark, path))
+    def bounded(path: String) = SizeGate.below(spark,
+      SizeGate.GramDimBroadcast)(SizeGate.dirBytes(spark, path))
     // a dir with no documents.parquet at all — getContentSummary throws,
     // dirBytes must report Long.MaxValue, both gates must say NO
     val missing = docs("/nonexistent/graft-gate-probe")
-    assert(!SizeGate.cacheable(spark, missing))
-    assert(!SizeGate.bounded(spark, missing, bcast))
+    assert(!cacheable(missing))
+    assert(!bounded(missing))
     // a non-local scheme the session's Hadoop conf cannot resolve —
     // the exact deployment shape the r12 gate silently mis-routed
-    assert(!SizeGate.cacheable(spark,
-      docs("hdfs://nonexistent-namenode:8020/corpora/x")))
+    assert(!cacheable(docs("hdfs://nonexistent-namenode:8020/corpora/x")))
     // sanity: a real, tiny local fixture still measures small on both
-    assert(SizeGate.cacheable(spark, docs(sf)))
-    assert(SizeGate.bounded(spark, docs(sf), bcast))
+    assert(cacheable(docs(sf)))
+    assert(bounded(docs(sf)))
   }
 }

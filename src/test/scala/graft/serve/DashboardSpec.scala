@@ -97,4 +97,22 @@ class DashboardSpec extends SparkSpec {
     clock = 150
     assert(get() == 2 && computes == 2)
   }
+
+  test("M6: storing a result evicts every expired entry, not only its " +
+    "own key") {
+    var clock = 0L
+    val cache = new Dashboard.ResultCache[String, Int](ttlMillis = 100,
+      now = () => clock)
+    for (i <- 1 to 5) cache.getOrCompute(s"w$i")(i)
+    assert(cache.size == 5)
+    clock = 60
+    cache.getOrCompute("fresh")(6)
+    assert(cache.size == 6, "nothing has expired yet")
+    // w1..w5 are 100 ms old (expired), `fresh` 40 ms (kept)
+    clock = 100
+    assert(cache.getOrCompute("next")(7) == 7)
+    assert(cache.size == 2)
+    assert(cache.getOrCompute("fresh")(-1) == 6, "a live entry survives")
+    assert(cache.getOrCompute("w1")(-1) == -1, "an evicted key recomputes")
+  }
 }

@@ -2,6 +2,7 @@ package graft.trace
 
 import graft.{Fixtures, SparkSpec}
 import graft.models.Pipeline
+import graft.util.SizeGate
 import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row}
@@ -11,15 +12,15 @@ import org.apache.spark.sql.functions._
 /** The two arms of the served trace's size gate give the same page: the
   * driver arm (window fetched once, traced on the driver) and the
   * distributed arm (the lazy plan behind the hop-1 fallback), forced
-  * through the gate's bound. Pages are compared as the benchmark's trace
+  * through the force switch. Pages are compared as the benchmark's trace
   * check compares them: the same sort keys in the same order, and the
   * same rows up to the order of rows that tie on the key, except in the
   * last key group of a full page, where LIMIT may cut anywhere. */
 class TraceArmSpec extends SparkSpec {
 
-  /** A bound no test window reaches, and one every window exceeds. */
-  private val Driver = 1 << 20
-  private val Distributed = -1
+  /** The served trace with the gate forced above: the distributed arm. */
+  private def distributedArm(traces: DataFrame, p: Trace.TraceParams) =
+    forcedAbove(SizeGate.TraceDriver)(Trace.traceWithFallback(traces, p))
 
   private val from = Timestamp.valueOf("2025-08-20 00:00:00")
   private val to = Timestamp.valueOf("2025-08-20 23:59:59")
@@ -56,8 +57,8 @@ class TraceArmSpec extends SparkSpec {
     * arms really taken, the same page. */
   private def assertArmsAgree(traces: DataFrame, p: Trace.TraceParams)
       : Seq[Row] = {
-    val onDriver = Trace.traceWithFallback(traces, p, Driver)
-    val distributed = Trace.traceWithFallback(traces, p, Distributed)
+    val onDriver = Trace.traceWithFallback(traces, p)
+    val distributed = distributedArm(traces, p)
     assert(isLocal(onDriver), s"$p: driver arm not taken")
     assert(!isLocal(distributed), s"$p: distributed arm not taken")
     assert(onDriver.schema == Trace.trace(traces, p).schema)
@@ -152,10 +153,18 @@ class TraceArmSpec extends SparkSpec {
 
   test("the gate: a window over the bound takes the distributed arm, " +
     "one at the bound the driver arm") {
-    // the diamond's window holds six edges
+    // the diamond's six edges padded with unreachable in-window edges
+    // to exactly the bound, and to one past it
+    def padded(edges: Long) = diamond.unionByName(spark.range(edges - 6)
+      .select(concat(lit("F"), col("id")).as("source_address"),
+        concat(lit("G"), col("id")).as("destination_address"),
+        lit("tf").as("transaction_hash"), lit(9L).as("block_id"),
+        lit(1.0).as("transferred_value_btc"),
+        lit(Timestamp.valueOf("2025-08-20 00:30:00")).as("tx_time")))
     val p = Trace.TraceParams("A", 3, from, to)
-    val over = Trace.traceWithFallback(diamond, p, bound = 5)
-    val at = Trace.traceWithFallback(diamond, p, bound = 6)
+    val bound = SizeGate.TraceDriver.bound
+    val over = Trace.traceWithFallback(padded(bound + 1), p)
+    val at = Trace.traceWithFallback(padded(bound), p)
     assert(!isLocal(over))
     assert(isLocal(at))
     assert(isLocal(Trace.traceWithFallback(diamond, p)))
@@ -172,14 +181,14 @@ class TraceArmSpec extends SparkSpec {
       ("B", "A", "t3", 2L, "2025-08-20 00:03:00", 1.0),
       ("B", "A", "t4", 2L, "2025-08-20 00:04:00", 1.0)))
     val p = Trace.TraceParams("A", 64, from, to)
-    val r = Trace.traceWithFallback(cycle, p, Driver)
+    val r = Trace.traceWithFallback(cycle, p)
     assert(isLocal(r))
     val hop1 = Trace.trace(cycle, p.copy(maxHops = 1)).collect().toSeq
     assert(r.collect().toSeq == hop1)
     assert(hop1.map(_.getString(3)) == Seq("t1", "t2"))
     // Below the overflow there is no fallback: the first 1000 paths
     // (2 + 4 + ... + 2^9 = 1022 of them through hop 9) reach hop 9.
-    assert(Trace.traceWithFallback(cycle, p.copy(maxHops = 62), Driver)
+    assert(Trace.traceWithFallback(cycle, p.copy(maxHops = 62))
       .collect().map(_.getInt(0)).max == 9)
   }
 }

@@ -59,7 +59,8 @@ class TraceCacheSpec extends SparkSpec {
     assert((stored -- blocks).isEmpty, "driver arm left checkpoint blocks")
     assert(spark.sharedState.cacheManager.isEmpty)
     // the probe sees the distributed arm's checkpoint of its result
-    Trace.traceWithFallback(traces, p, bound = -1).collect()
+    forcedAbove(graft.util.SizeGate.TraceDriver)(
+      Trace.traceWithFallback(traces, p)).collect()
     assert((stored -- blocks).nonEmpty)
   }
 }

@@ -2,10 +2,12 @@ package graft.util
 
 import graft.SparkSpec
 
-/** The size-gated broadcast hint: hints while Catalyst's size estimate
-  * is bounded, degrades to the unhinted (shuffle-capable) frame past
-  * the bound — the audit class for dims that are small at every
-  * measured scale but fact-proportional in the limit. */
+/** The size gates: one comparison ([[SizeGate.below]]) against one
+  * table of bounds, fail-closed on an unmeasurable input, with one force
+  * switch onto the above-bound arm. The blocks-dim broadcast hints while
+  * Catalyst's size estimate is bounded and degrades to the unhinted
+  * (shuffle-capable) frame past it — the audit class for dims that are
+  * small at every measured scale but fact-proportional in the limit. */
 class SizeGateSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -32,15 +34,33 @@ class SizeGateSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val o = graft.Tables.orders(spark, sf).select("o_orderkey", "o_custkey")
       val c = graft.Tables.customer(spark, sf).select("c_custkey", "c_name")
-      // a 1-byte bound: every real frame is "too big" — the scale-safe
-      // arm must be the plain shuffled join
-      val p = o.join(SizeGate.broadcastIfSmall(c, maxBytes = 1L),
-          o("o_custkey") === c("c_custkey"))
+      // forced above: the scale-safe arm must be the plain shuffled join
+      val p = forcedAbove(SizeGate.BlocksBroadcast)(
+          o.join(SizeGate.broadcastIfSmall(c),
+            o("o_custkey") === c("c_custkey")))
         .queryExecution.executedPlan.toString
       assert(!p.contains("BroadcastHashJoin"), p.take(1200))
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
         p.take(1200))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("below: the bound is inclusive; a NonFatal throw is above, " +
+    "fatal ones propagate") {
+    for (g <- SizeGate.gates) {
+      assert(SizeGate.below(spark, g)(g.bound), g)
+      assert(!SizeGate.below(spark, g)(BigInt(g.bound) + 1), g)
+    }
+    val g = SizeGate.CcDriver
+    assert(!SizeGate.below(spark, g)(throw new RuntimeException("no stats")))
+    assert(!SizeGate.below(spark, g)(SizeGate.dirBytes(spark,
+      "/nonexistent/graft_gate_probe")))
+    intercept[InterruptedException] {
+      SizeGate.below(spark, g)(throw new InterruptedException())
+    }
+    intercept[StackOverflowError] {
+      SizeGate.below(spark, g)(throw new StackOverflowError())
+    }
   }
 
   test("cacheIfBounded: small input → cached; above-bound input and " +
@@ -57,10 +77,9 @@ class SizeGateSpec extends SparkSpec {
     try assert(analyzed(below).contains("InMemoryRelation"),
       "below the bound the intermediate must be cached")
     finally below.unpersist()
-    // same input, 1-byte bound → uncached, identical lazy plan
-    val above = SizeGate.cacheIfBounded(spark,
-      graft.Tables.documents(spark, sf).select("doc_id"), docs,
-      maxBytes = 1L)
+    // same input, gate forced above → uncached, identical lazy plan
+    val above = forcedAbove(SizeGate.CorpusCache)(SizeGate.cacheIfBounded(
+      spark, graft.Tables.documents(spark, sf).select("doc_id"), docs))
     assert(!analyzed(above).contains("InMemoryRelation"),
       "above the bound no executor cache may be pinned")
     // unmeasurable input (missing dir) → fail closed = uncached
@@ -73,34 +92,58 @@ class SizeGateSpec extends SparkSpec {
       == Long.MaxValue)
   }
 
-  test("measurement kill switch (spark.graft.noGatedCache) forces the " +
-    "uncached arm even below the bound") {
-    val docs = s"$sf/documents.parquet"
-    assert(SizeGate.cacheable(spark, docs))
-    spark.conf.set(SizeGate.NoGatedCacheKey, "true")
+  test("force switch: a forced gate is above without measuring; bad " +
+    "names throw") {
+    var measured = 0
+    def probe(): BigInt = { measured += 1; 0 }
+    forcedAbove(SizeGate.CorpusCache, SizeGate.TraceDriver) {
+      assert(!SizeGate.below(spark, SizeGate.CorpusCache)(probe()))
+      assert(!SizeGate.below(spark, SizeGate.TraceDriver)(probe()))
+      assert(measured == 0, "a forced gate must not take its measurement")
+      assert(SizeGate.below(spark, SizeGate.GramDimBroadcast)(probe()))
+      assert(measured == 1)
+    }
+    spark.conf.set(SizeGate.ForceAboveKey, " cc_driver , ")
     try {
-      val df = SizeGate.cacheIfBounded(spark,
-        graft.Tables.documents(spark, sf).select("doc_id"), docs)
-      assert(!df.queryExecution.withCachedData.toString
-        .contains("InMemoryRelation"),
-        "with the kill switch set no gated cache may be pinned")
-      assert(!SizeGate.cacheable(spark, docs),
-        "the cache gate reads the switch")
-      assert(SizeGate.bounded(spark, docs, SizeGate.DEFAULT_CACHE_MAX_BYTES),
-        "the switch leaves the input-bytes bound alone")
-    } finally spark.conf.unset(SizeGate.NoGatedCacheKey)
+      assert(!SizeGate.below(spark, SizeGate.CcDriver)(0))
+      assert(SizeGate.below(spark, SizeGate.CcLabelBroadcast)(0))
+      spark.conf.set(SizeGate.ForceAboveKey, "corpus_cahce")
+      val e = intercept[IllegalArgumentException](
+        SizeGate.below(spark, SizeGate.CorpusCache)(0))
+      assert(e.getMessage.contains("corpus_cahce"))
+    } finally spark.conf.unset(SizeGate.ForceAboveKey)
+    assert(SizeGate.below(spark, SizeGate.CorpusCache)(0))
   }
 
-  test("corpus sizing and the kill switch live only in SizeGate: " +
-    "getContentSummary and NoGatedCacheKey reads nowhere else in src/main") {
+  test("gate audit: SizeGate alone sizes and forces; no dead or " +
+    "removed gates") {
+    val gate = "util/SizeGate.scala"
     val sizing = graft.SourceAudit.calls("""\bgetContentSummary\b""".r)
-    assert(sizing.keySet == Set("util/SizeGate.scala"),
-      s"input sized outside SizeGate: ${sizing - "util/SizeGate.scala"}")
-    // a read of the switch: a conf get of the key, the key's literal, or
-    // a call to a private reader of it
-    val reads = graft.SourceAudit.calls(("""conf\s*\.\s*get\w*\(\s*[\w.]*""" +
-      """NoGatedCacheKey|"spark\.graft\.noGatedCache"|\bnoGatedCache\s*\(""").r)
-    assert(reads.keySet == Set("util/SizeGate.scala"),
-      s"kill switch read outside SizeGate: ${reads - "util/SizeGate.scala"}")
+    assert(sizing.keySet == Set(gate),
+      s"input sized outside SizeGate: ${sizing - gate}")
+    // a read of the switch: a conf get of the key, or the key's literal
+    val reads = graft.SourceAudit.calls(("""conf\s*\.\s*get\w*\(\s*""" +
+      """[\w.]*ForceAboveKey|"spark\.graft\.forceAbove"""").r)
+    assert(reads.keySet == Set(gate),
+      s"force switch read outside SizeGate: ${reads - gate}")
+    // a gate's bound is compared only inside below(); the trace reads its
+    // bound once more, to size the bounded fetch that is its measurement
+    val boundReads = graft.SourceAudit.calls("""\.bound\b""".r) - gate
+    assert(boundReads == Map("trace/Trace.scala" -> 1),
+      s"a gate bound read outside SizeGate: $boundReads")
+    // every gate in the table is decided somewhere, through below()
+    val site = """\bbelow\(\s*[^,()]+,\s*(?:SizeGate\.)?(\w+)\s*\)""".r
+    val decided = graft.SourceAudit.codeLines("src/main/scala/graft")
+      .flatMap(_._2).flatMap(site.findAllMatchIn(_).map(_.group(1))).toSet
+    val dead = SizeGate.gates.map(_.toString).filterNot(decided)
+    assert(dead.isEmpty, s"gates with no below() call site: $dead")
+    // the bound constants, bound parameters and kill switch this table
+    // replaced
+    val removed = graft.SourceAudit.calls(("""\b(bounded|cacheable)\s*\(|""" +
+      """\b(NoGatedCacheKey|noGatedCache|CC_LABEL_BCAST_MAX_EDGES|""" +
+      """CORPUS_BCAST_MAX_BYTES|gramDimBcast|localMaxEdges|maxBytes|""" +
+      """targetBytes|DRIVER_MAX_ROWS|DEFAULT_CACHE_MAX_BYTES|""" +
+      """DEFAULT_MAX_BYTES)\b""").r)
+    assert(removed.isEmpty, s"removed gate names still in src/main: $removed")
   }
 }
