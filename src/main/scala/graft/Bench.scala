@@ -1,7 +1,27 @@
 package graft
 
+import scala.collection.mutable
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration._
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
+/** The one registry timer. A timed run fences the listener probe, builds
+  * the query, runs `queryExecution.toRdd.count()` — the fixed physical
+  * plan with every row produced, so the action cannot prune a Window or
+  * an unused aggregate the way `count()` does — reads the run's cost and
+  * then [[reset]]s. [[time]] is the one min-of-N loop over such runs;
+  * `runMain graft.Bench` runs it over the whole registry, and
+  * `Measure bench` over named queries. */
 object Bench {
+
+  /** Job count, union of job intervals, executor run time, shuffle-write
+    * and disk-spill bytes of one run. */
+  final case class Cost(jobs: Int, jobS: Double, taskS: Double, shuffleMb: Double, spillMb: Double)
+
+  /** One timed run: wall seconds (construction included), construction
+    * seconds, rows produced and the run's [[Cost]]. */
+  final case class Run(wall: Double, construct: Double, rows: Long, cost: Cost)
 
   /** One query's measurement: min of the timed executions, `failed` if ANY
     * execution threw. A failed query reports -1.0, never the elapsed time
@@ -10,8 +30,9 @@ object Bench {
     * ratio >NOISE_SPREAD means the host was loaded during at least one
     * run, so the artifact flags itself rather than reading as a
     * regression on an unchanged query set (r5: one 0.26 s query recorded
-    * 5.1 s in the official run). */
-  final case class Timing(secs: Double, failed: Boolean, spread: Double)
+    * 5.1 s in the official run). `min` is the fastest run, whose cost
+    * split the full artifact carries. */
+  final case class Timing(secs: Double, failed: Boolean, spread: Double, min: Option[Run] = None)
 
   /** Run-to-run max/min ratio above which a query's measurement is
     * marked noise-suspect in the emitted JSON. */
@@ -23,32 +44,110 @@ object Bench {
   def num(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  /** Time each query `runs` times (min reported — the host shows
-    * multi-second external load spikes; min measures capability, not that
-    * moment's noise), invoking `reset` after every run so state built
-    * inside one run cannot distort the next. */
-  def measure(queries: Seq[(String, () => Unit)], runs: Int,
-      reset: () => Unit): Map[String, Timing] =
-    queries.map { case (name, run) =>
-      val attempts = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { run(); true } catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        reset()
-        (dt, ok)
+  /** A JSON object from ordered fields; nested field lists nest. */
+  def json(fields: Seq[(String, Any)]): String = fields.map { case (k, v) =>
+    "\"" + k + "\":" + (v match {
+      case x: Double => num(x)
+      case x: String => "\"" + x + "\""
+      case x: Seq[(String, Any)] @unchecked => json(x)
+      case x => x.toString
+    })
+  }.mkString("{", ",", "}")
+
+  /** A run's split: rows, construction, jobs, job/task seconds, the
+    * driver gap (wall minus job time), shuffle and spill. */
+  def layers(r: Run): Seq[(String, Any)] = Seq("rows" -> r.rows,
+    "construct_s" -> r.construct, "jobs" -> r.cost.jobs, "job_s" -> r.cost.jobS,
+    "task_s" -> r.cost.taskS, "driver_gap_s" -> math.max(0.0, r.wall - r.cost.jobS),
+    "shuffle_mb" -> r.cost.shuffleMb, "spill_mb" -> r.cost.spillMb)
+
+  /** Job intervals, executor run time, shuffle-write and disk-spill bytes.
+    * [[cost]] fences the asynchronous listener bus with a one-task job: the
+    * bus delivers in order, so at the fence's JobStart every earlier event
+    * has been counted. Job time is the union of job intervals (concurrent
+    * broadcast or subquery jobs count once); wall minus it is driver time. */
+  private[graft] final class Probe(spark: SparkSession) extends SparkListener {
+    private val spans = mutable.Map[Int, (Long, Long)]()
+    private val fenceStages = mutable.Set[Int]()
+    private var taskMs, shuffle, spill = 0L
+    private var fence = Promise[Cost]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      if (Option(e.properties).exists(_.getProperty(FenceKey) != null)) {
+        fenceStages ++= e.stageIds
+        val done = spans.values.filter(_._2 >= 0).toSeq.sorted
+        var covered, end = 0L
+        done.foreach { case (a, b) => if (b > end) { covered += b - math.max(a, end); end = b } }
+        fence.trySuccess(Cost(done.size, covered / 1e3, taskMs / 1e3, shuffle / 1e6, spill / 1e6))
+        spans.clear(); taskMs = 0L; shuffle = 0L; spill = 0L
+      } else spans(e.jobId) = (e.time, -1L)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      spans.get(e.jobId).foreach(s => spans(e.jobId) = (s._1, e.time))
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      if (!fenceStages(e.stageId)) Option(e.taskMetrics).foreach { m =>
+        taskMs += m.executorRunTime; spill += m.diskBytesSpilled
+        shuffle += m.shuffleWriteMetrics.bytesWritten
       }
-      val ok = attempts.forall(_._2)
-      val times = attempts.map(_._1)
-      val spread = if (ok && times.min > 0) times.max / times.min else 1.0
-      val t = Timing(if (ok) times.min else -1.0, !ok, spread)
+    }
+
+    /** Counters since the previous call; zeroes them. */
+    def cost(): Cost = {
+      val p = Promise[Cost](); synchronized { fence = p }
+      spark.sparkContext.setLocalProperty(FenceKey, "1")
+      try spark.sparkContext.parallelize(Seq(0), 1).count()
+      finally spark.sparkContext.setLocalProperty(FenceKey, null)
+      Await.result(p.future, 1.minute)
+    }
+  }
+  private val FenceKey = "graft.measure.fence"
+
+  private[graft] def withProbe[T](spark: SparkSession)(body: Probe => T): T = {
+    val p = new Probe(spark); spark.sparkContext.addSparkListener(p)
+    try body(p) finally spark.sparkContext.removeSparkListener(p)
+  }
+
+  /** The one timed run. [[reset]] runs even when the run throws, so a
+    * failed query leaves no cached plan to the next. */
+  private[graft] def run(spark: SparkSession, probe: Probe, mk: () => DataFrame): Run =
+    try {
+      probe.cost()
+      val t0 = System.nanoTime()
+      val df = mk()
+      val t1 = System.nanoTime()
+      val rows = df.queryExecution.toRdd.count()
+      val wall = (System.nanoTime() - t0) / 1e9
+      Run(wall, (t1 - t0) / 1e9, rows, probe.cost())
+    } finally reset(spark)
+
+  /** Times each query: one untimed warmup run (JIT and codegen would
+    * otherwise land in the first timed run), then `runs` timed runs with
+    * the min kept — the host shows multi-second external load spikes; min
+    * measures capability, not that moment's noise. A throw in any run
+    * marks the query failed, skips its remaining runs and the loop goes
+    * on to the next query. */
+  private[graft] def time(spark: SparkSession, queries: Seq[(String, () => DataFrame)],
+      runs: Int): Seq[(String, Timing)] = withProbe(spark) { probe =>
+    queries.map { case (name, mk) =>
+      val done = try {
+        run(spark, probe, mk)
+        Some(Seq.fill(runs)(run(spark, probe, mk)))
+      } catch { case _: Throwable => None }
+      val t = done.fold(Timing(-1.0, failed = true, spread = 1.0)) { rs =>
+        val best = rs.minBy(_.wall)
+        val worst = rs.map(_.wall).max
+        Timing(best.wall, failed = false,
+          if (best.wall > 0) worst / best.wall else 1.0, Some(best))
+      }
       // per-query progress on stderr: long benches (hour-plus at sf100)
       // are otherwise a blind wait, and a killed run salvages nothing.
       // stderr keeps the stdout contract (ONE JSON line) intact.
-      System.err.println(
-        f"[bench] $name min=${t.secs}%.3f spread=$spread%.2f" +
-          (if (t.failed) " FAILED" else ""))
+      System.err.println(f"[bench] $name min=${t.secs}%.3f spread=${t.spread}%.2f" +
+        (if (t.failed) " FAILED" else ""))
       name -> t
-    }.toMap
+    }
+  }
 
   /** Measurement-regime descriptor carried into every emitted artifact:
     * this round's own finding is that shuffle partitions alone swing
@@ -56,19 +155,19 @@ object Bench {
     * 32→128), and the banked sf100 artifact used non-default runs=2 —
     * artifacts from different regimes must be distinguishable without
     * cross-referencing SCALE.md prose. -1 = unknown (pure-function
-    * tests). `action` names the timing action regime (r14: "auto" =
-    * toRdd.count() for window-pruned entries, count() otherwise;
-    * "count" = legacy; "rdd" = toRdd.count() everywhere) — numbers from
-    * different action regimes are not comparable for the affected
-    * entries, so the artifact must say which one produced it. */
-  final case class Regime(cpus: Int = -1, shuffle: Int = -1, runs: Int = -1,
-      action: String = "?")
+    * tests). */
+  final case class Regime(cpus: Int = -1, shuffle: Int = -1, runs: Int = -1)
 
   /** One JSON line: total over SUCCEEDED queries, per-query seconds
     * (failed ones carry -1.0), an explicit `failed` name list, and the
     * measurement regime. `names = Some(...)` restricts the per-query map
     * (the stdout line must stay short enough to survive the driver's
-    * stdout-tail window) while total/failed always cover everything. */
+    * stdout-tail window) while total/failed always cover everything;
+    * `names = None` is the full artifact, which also carries each
+    * query's `layers` (the min run's split). `action` is always "rdd"
+    * (toRdd.count() everywhere): artifacts written under the retired
+    * "auto"/"count" regimes time count() for some entries and are not
+    * comparable on those. */
   def renderJson(results: Map[String, Timing], sf: String,
       names: Option[Seq[String]],
       loadAvg: (Double, Double) = (-1.0, -1.0),
@@ -91,6 +190,8 @@ object Bench {
       .map(_._1).sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val spreads = sel.map { case (k, t) => "\"" + k + "\":" + num(t.spread) }
       .mkString("{", ",", "}")
+    val split = if (names.isDefined) "" else "\"layers\":" + json(sel.flatMap {
+      case (k, t) => t.min.map(r => k -> layers(r)) }) + ","
     val total = results.values.collect { case t if !t.failed => t.secs }.sum
     // 1-minute system load average at measurement start/end (-1.0 where
     // the JVM cannot provide one): lets an artifact reader adjudicate
@@ -98,17 +199,17 @@ object Bench {
     val load = s""""load_avg":{"start":${num(loadAvg._1)},""" +
       s""""end":${num(loadAvg._2)}}"""
     val reg = s""""cpus":${regime.cpus},"shuffle":${regime.shuffle},""" +
-      s""""runs":${regime.runs},"action":"${regime.action}""""
+      s""""runs":${regime.runs},"action":"rdd""""
     s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
       s""""queries":$qs,"failed":$failed,"noise_suspect":$noisy,""" +
-      s""""spread":$spreads,$load,$reg,"sf":"$sf"}"""
+      s""""spread":$spreads,$split$load,$reg,"sf":"$sf"}"""
   }
 
   /** Between timed runs: System.gc() prompts ContextCleaner to delete
     * finished queries' shuffle files, whose residue otherwise fills local
     * disk in a long suite (~50 GB by query ~94 of the sf100 run, three
     * casualties; SCALE.md decade 5, finding 2). */
-  def reset(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def reset(spark: SparkSession): Unit = {
     spark.catalog.clearCache(); System.gc()
   }
 
@@ -116,98 +217,42 @@ object Bench {
     java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
 
+  /** The registry's data directory: SPARK_GRAFT_SF_DIR, default sf0.1. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** Timed runs per query: SPARK_GRAFT_RUNS, default 3. Two runs proved
+    * noise-fragile (r5: the official artifact read 2× high on an
+    * unchanged query set when both runs landed on a loaded host); with
+    * three, one clean run suffices and the spread field flags the entries
+    * where even the min may be suspect. The knob exists for very long
+    * scale-decade runs (sf100 used 2), and the artifact's "runs" field
+    * records any deviation. */
+  def runs: Int = {
+    val raw = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3")
+    val n = try raw.toInt catch {
+      case _: NumberFormatException => throw new IllegalArgumentException(
+        s"SPARK_GRAFT_RUNS must be a positive integer, got '$raw'")
+    }
+    require(n >= 1, s"SPARK_GRAFT_RUNS must be >= 1, got $n")
+    n
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_SHUFFLE decouples shuffle parallelism from core count
-    // for the cluster-shape audit (SCALE.md: sweep 64/128/256 at sf100 to
-    // show the suite doesn't depend on the local[32] sweet spot).
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val sf = sfDir
+    val n = runs
     // Resolve the artifact's regime ints BEFORE the measurement loop:
     // non-numeric values (`SPARK_GRAFT_CPUS=*` is valid for local[*])
     // fall back to the documented "unknown" sentinel -1 — an hours-long
     // sf100 run must never die on a cosmetic toInt after measuring
-    // (ADVICE r12). runs is appended after its own validation below.
+    // (ADVICE r12).
     def intOr(raw: String): Int =
       try raw.toInt catch { case _: NumberFormatException => -1 }
-    val regimeCpus = intOr(cpus)
-    val regimeShuffle = intOr(shuffle)
-    // session stability knobs (heartbeat armor etc.) live in Sessions —
-    // shared with Measure so the two measurement regimes cannot drift
-    val spark = Sessions.builder(cpus, shuffle).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup at the smallest SF first: JIT + codegen compilation otherwise
-    // lands entirely in the first measured query. The same pass detects,
-    // per query, whether count() PRUNES a Window node from the plan —
-    // r13's own finding: df.count() optimizes to groupBy().count(), and
-    // Catalyst drops window expressions nothing references, so the
-    // window family (w1_running_balance, balance_history, x13_sessionize,
-    // x15_window_values, seq_packing, ...) was benching a plan with the
-    // windows GONE (r11's "108.7 s balance spill" was the join tier).
-    // Detection is plan-shape only (analysis + optimization, no jobs)
-    // and self-maintaining: a future window query gets the honest
-    // action without a hand-kept name list.
-    def hasWindow(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-        : Boolean =
-      p.collectFirst {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
-      }.isDefined
-    val windowPruned: Set[String] =
-      SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-        val pruned = try {
-          val df = fn(spark, "/root/testdata/sf0.001")
-          df.count()
-          hasWindow(df.queryExecution.optimizedPlan) &&
-            !hasWindow(df.groupBy().count().queryExecution.optimizedPlan)
-        } catch { case _: Throwable => false }
-        spark.catalog.clearCache()
-        if (pruned) Some(name) else None
-      }.toSet
-    // Timing action per query. Default "auto": entries whose windows
-    // count() would prune run toRdd.count() — executes the FIXED
-    // physical plan and produces every row executor-side (the honest
-    // "materialize the result" action; the one Measure always times,
-    // r13) — everything else keeps count() for
-    // cross-round comparability. "count"/"rdd" force one action
-    // everywhere (the dual-record transition columns, BENCH_NOTES r14).
-    val actionMode = sys.env.getOrElse("SPARK_GRAFT_ACTION", "auto")
-    require(Set("auto", "count", "rdd")(actionMode),
-      s"SPARK_GRAFT_ACTION must be auto|count|rdd, got '$actionMode'")
-    def action(name: String,
-        df: org.apache.spark.sql.DataFrame): Unit = actionMode match {
-      case "count" => df.count(); ()
-      case "rdd" => df.queryExecution.toRdd.count(); ()
-      case _ =>
-        if (windowPruned(name)) df.queryExecution.toRdd.count()
-        else df.count()
-        ()
-    }
-    System.err.println(s"[bench] action=$actionMode window-pruned entries " +
-      s"(toRdd.count under auto): ${windowPruned.toSeq.sorted.mkString(", ")}")
-    // Stable order + per-query cache isolation; three timed runs, min
-    // kept. Two runs proved noise-fragile (r5: the official artifact
-    // read 2× high on an unchanged query set when both runs landed on a
-    // loaded host); with three, one clean run suffices and the spread
-    // field flags the entries where even the min may be suspect.
+    val (cpus, shuffle) = Sessions.shape
+    val regime = Regime(intOr(cpus), intOr(shuffle), n)
+    val spark = Sessions.start()
     val loadStart = systemLoad()
-    // default stays 3 (two runs proved noise-fragile, r5); the env
-    // knob exists for very long scale-decade runs where even 3 may
-    // not fit the session — any deviation is now self-describing via
-    // the artifact's "runs" field (plus adjudication notes).
-    val runs = {
-      val raw = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3")
-      val n = try raw.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_RUNS must be a positive integer, got '$raw'")
-      }
-      require(n >= 1, s"SPARK_GRAFT_RUNS must be >= 1, got $n")
-      n
-    }
-    val results = measure(
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        name -> (() => action(name, fn(spark, sfDir)))
-      },
-      runs = runs, reset = () => reset(spark))
+    val results = time(spark, SparkEntry.queries.toSeq.sortBy(_._1).map {
+      case (name, fn) => name -> (() => fn(spark, sf)) }, n).toMap
     val loadAvg = (loadStart, systemLoad())
     // r1+r2 driver runs both recorded parsed:null: the full per-query JSON
     // line is ~4.5 KB, so its START falls outside the driver's stdout-tail
@@ -226,9 +271,8 @@ object Bench {
     require(headline.forall(results.contains),
       s"headline names missing from registry: ${
         headline.filterNot(results.contains).mkString(", ")}")
-    val regime = Regime(regimeCpus, regimeShuffle, runs, actionMode)
-    val shortJson = renderJson(results, sfDir, Some(headline), loadAvg, regime)
-    val fullJson = renderJson(results, sfDir, None, loadAvg, regime)
+    val shortJson = renderJson(results, sf, Some(headline), loadAvg, regime)
+    val fullJson = renderJson(results, sf, None, loadAvg, regime)
     println(shortJson)
     spark.stop()
     java.nio.file.Files.write(

@@ -12,8 +12,7 @@ import java.sql.Timestamp
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.builder("8", "8").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start()
 
     val dir = if (args.nonEmpty) java.nio.file.Paths.get(args(0))
       else { val d = Files.createTempDirectory("graft-demo"); Fixtures.writeAll(d); d }

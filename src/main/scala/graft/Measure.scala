@@ -1,10 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import scala.collection.mutable
-import scala.concurrent.{Await, Promise}
-import scala.concurrent.duration._
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
@@ -12,67 +8,18 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
 import graft.ops._
 import graft.util.SizeGate
 
-/** The one measurement and plan-inspection main, on the library's own
-  * session ([[Sessions.builder]]). A timed run is `queryExecution.toRdd
-  * .count()` — the fixed physical plan with every row produced, so count()
-  * cannot prune a Window or an unused aggregate — then [[Bench.reset]].
-  *   - `bench <query…>`: warmup + min-of-3, one JSON line per query;
+/** The A/B and plan-inspection main, on the library's own session
+  * ([[Sessions.start]]). Every timed run is [[Bench]]'s: `queryExecution
+  * .toRdd.count()` under its listener probe, then [[Bench.reset]].
+  *   - `bench <query…>`: [[Bench.time]] over the named queries (one warmup,
+  *     min of SPARK_GRAFT_RUNS, default 3), one JSON line per query;
   *   - `ab <experiment> [query…]`: interleaved arms of an [[experiments]] entry;
   *   - `plan [--final] [--out DIR SUFFIX] <query…>`: the executed plan
   *     (`--final`: drained first, so AQE's final shape shows); `--out` also
   *     writes `explain("formatted")` to DIR/<query>_SUFFIX.txt.
-  * Env as in Bench: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS,
-  * SPARK_GRAFT_SHUFFLE, SPARK_GRAFT_CONF. */
+  * Env as in Bench: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_RUNS,
+  * and the session's SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE, SPARK_GRAFT_CONF. */
 object Measure {
-
-  private final case class Cost(jobs: Int, jobS: Double, taskS: Double, shuffleMb: Double, spillMb: Double)
-
-  /** Job intervals, executor run time, shuffle-write and disk-spill bytes.
-    * [[cost]] fences the asynchronous listener bus with a one-task job: the
-    * bus delivers in order, so at the fence's JobStart every earlier event
-    * has been counted. Job time is the union of job intervals (concurrent
-    * broadcast or subquery jobs count once); wall minus it is driver time. */
-  private final class Probe(spark: SparkSession) extends SparkListener {
-    private val spans = mutable.Map[Int, (Long, Long)]()
-    private val fenceStages = mutable.Set[Int]()
-    private var taskMs, shuffle, spill = 0L
-    private var fence = Promise[Cost]()
-
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      if (Option(e.properties).exists(_.getProperty(FenceKey) != null)) {
-        fenceStages ++= e.stageIds
-        val done = spans.values.filter(_._2 >= 0).toSeq.sorted
-        var covered, end = 0L
-        done.foreach { case (a, b) => if (b > end) { covered += b - math.max(a, end); end = b } }
-        fence.trySuccess(Cost(done.size, covered / 1e3, taskMs / 1e3, shuffle / 1e6, spill / 1e6))
-        spans.clear(); taskMs = 0L; shuffle = 0L; spill = 0L
-      } else spans(e.jobId) = (e.time, -1L)
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      spans.get(e.jobId).foreach(s => spans(e.jobId) = (s._1, e.time))
-    }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-      if (!fenceStages(e.stageId)) Option(e.taskMetrics).foreach { m =>
-        taskMs += m.executorRunTime; spill += m.diskBytesSpilled
-        shuffle += m.shuffleWriteMetrics.bytesWritten
-      }
-    }
-
-    /** Counters since the previous call; zeroes them. */
-    def cost(): Cost = {
-      val p = Promise[Cost](); synchronized { fence = p }
-      spark.sparkContext.setLocalProperty(FenceKey, "1")
-      try spark.sparkContext.parallelize(Seq(0), 1).count()
-      finally spark.sparkContext.setLocalProperty(FenceKey, null)
-      Await.result(p.future, 1.minute)
-    }
-  }
-  private val FenceKey = "graft.measure.fence"
-
-  private def withProbe[T](spark: SparkSession)(body: Probe => T): T = {
-    val p = new Probe(spark); spark.sparkContext.addSparkListener(p)
-    try body(p) finally spark.sparkContext.removeSparkListener(p)
-  }
 
   /** Runs `body` with `conf` set, restoring every key's previous value. */
   private def withConf[T](spark: SparkSession, conf: Map[String, String])(body: => T): T = {
@@ -84,41 +31,14 @@ object Measure {
     }
   }
 
-  private final case class Run(wall: Double, construct: Double, rows: Long, cost: Cost)
-  private def run(spark: SparkSession, probe: Probe, mk: () => DataFrame): Run = {
-    probe.cost()
-    val t0 = System.nanoTime()
-    val df = mk()
-    val t1 = System.nanoTime()
-    val rows = df.queryExecution.toRdd.count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val c = probe.cost()
-    Bench.reset(spark)
-    Run(wall, (t1 - t0) / 1e9, rows, c)
-  }
-
-  private def json(fields: Seq[(String, Any)]): String = fields.map { case (k, v) =>
-    "\"" + k + "\":" + (v match {
-      case x: Double => Bench.num(x)
-      case x: String => "\"" + x + "\""
-      case x: Seq[(String, Any)] @unchecked => json(x)
-      case x => x.toString
-    })
-  }.mkString("{", ",", "}")
-
-  /** One warmup, then min-of-3; the line describes the min run. */
+  /** [[Bench.time]] over `names`; each line describes the query's min run
+    * (a failed query: `min_s` -1 and `failed`). */
   def bench(spark: SparkSession, d: String, names: Seq[String]): Seq[String] =
-    withProbe(spark) { probe =>
-      names.map { name =>
-        val mk = () => SparkEntry.queries(name)(spark, d)
-        run(spark, probe, mk)
-        val r = Seq.fill(3)(run(spark, probe, mk)).minBy(_.wall)
-        json(Seq("query" -> name, "min_s" -> r.wall, "rows" -> r.rows,
-          "construct_s" -> r.construct, "jobs" -> r.cost.jobs, "job_s" -> r.cost.jobS,
-          "task_s" -> r.cost.taskS, "driver_gap_s" -> math.max(0.0, r.wall - r.cost.jobS),
-          "shuffle_mb" -> r.cost.shuffleMb, "spill_mb" -> r.cost.spillMb))
+    Bench.time(spark, names.map(n => n -> (() => SparkEntry.queries(n)(spark, d))), Bench.runs)
+      .map { case (name, t) =>
+        Bench.json(Seq("query" -> name, "min_s" -> t.secs) ++
+          t.min.fold(Seq[(String, Any)]("failed" -> true))(Bench.layers))
       }
-    }
 
   /** An A/B arm: a DataFrame builder and the SQL confs it runs under. */
   final case class Arm(name: String, df: () => DataFrame, conf: Map[String, String] = Map.empty)
@@ -145,11 +65,11 @@ object Measure {
     val (first, fp) = prints.head
     for ((n, p) <- prints.tail) require(p == fp,
       s"${g.label}: arms $first and $n disagree (rows, fingerprint): $fp vs $p")
-    withProbe(spark) { probe =>
-      def once(a: Arm) = a.name -> withConf(spark, a.conf)(run(spark, probe, a.df))
+    Bench.withProbe(spark) { probe =>
+      def once(a: Arm) = a.name -> withConf(spark, a.conf)(Bench.run(spark, probe, a.df))
       g.arms.foreach(once)
       val runs = (0 until 3).flatMap(i => (if (i % 2 == 0) g.arms else g.arms.reverse).map(once))
-      json(Seq("experiment" -> g.label, "setup_s" -> setupS, "rows" -> fp._1,
+      Bench.json(Seq("experiment" -> g.label, "setup_s" -> setupS, "rows" -> fp._1,
         "arms" -> g.arms.map { a =>
           val r = runs.filter(_._1 == a.name).map(_._2).minBy(_.wall)
           a.name -> Seq("min_s" -> r.wall, "shuffle_mb" -> r.cost.shuffleMb)
@@ -293,10 +213,8 @@ object Measure {
   def main(args: Array[String]): Unit = {
     val usage = "usage: Measure bench <query…> | ab <experiment> [query…] | plan [--final] " +
       s"[--out DIR SUFFIX] <query…>; experiments: ${experiments.keys.toSeq.sorted.mkString(" ")}"
-    val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.builder(cpus, sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val d = Bench.sfDir
+    val spark = Sessions.start()
     try args.toList match {
       case "bench" :: names if names.nonEmpty => bench(spark, d, names).foreach(println)
       case "ab" :: exp :: names if experiments.contains(exp) =>

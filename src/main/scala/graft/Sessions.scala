@@ -8,6 +8,22 @@ import org.apache.spark.sql.SparkSession
   * not another silently changes what an artifact measured. */
 object Sessions {
 
+  /** The session shape every main runs: `(cpus, shuffle)` from
+    * SPARK_GRAFT_CPUS (default 4) and SPARK_GRAFT_SHUFFLE (default: the
+    * cpus value). The one place these are read. */
+  def shape: (String, String) = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    (cpus, sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
+  }
+
+  /** A main's session: [[builder]] at [[shape]], log level WARN. */
+  def start(): SparkSession = {
+    val (cpus, shuffle) = shape
+    val spark = builder(cpus, shuffle).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Builder with the measurement-session config applied; callers add
     * nothing but `.getOrCreate()`.
     *

@@ -4,8 +4,7 @@ package graft
   * return >0 rows on sf0.001. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.builder("4", "4").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start()
     val df = SparkEntry.entry(spark)
     println("ENTRY_SCHEMA=" + df.schema.simpleString)
     println("ENTRY_ROWS=" + df.count())

@@ -5,9 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.builder(cpus, cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start()
     new java.io.File(outDir).mkdirs()
     // Optional local-iteration filter (comma-separated exact names); the
     // driver never sets it, so the driver always dumps the full set.

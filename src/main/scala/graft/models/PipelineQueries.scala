@@ -1,6 +1,8 @@
 package graft.models
 
 import java.nio.file.Paths
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, date_format}
 import graft.ops.{Q, QueryModule}
 
 /** The whole reference pipeline as ONE gate row. The operator inventory
@@ -59,10 +61,10 @@ object PipelineQueries extends QueryModule {
     // (load_data_to_snowflake.sh:109-134 append-load + README.md:14);
     // this query runs that as CONTINUOUS ingest — a file-source stream
     // over the arrivals directory (the transactions dump split into two
-    // arrival files = a 2-batch replay), foreachBatch appending each
-    // micro-batch to the staged raw layer and incrementally rebuilding
-    // ONLY the load_date partitions that batch touched via
-    // `Pipeline.writeBuildIncremental`. The final mart is read back
+    // arrival files = a 2-batch replay), foreachBatch staging each
+    // micro-batch under its own batch id ([[streamBatch]]) and
+    // incrementally rebuilding ONLY the load_date partitions that batch
+    // touched via `Pipeline.writeBuildIncremental`. The final mart is read back
     // from parquet and gated against the SAME DuckDB oracle as the
     // batch twin, so the incremental path must converge to exactly the
     // batch mart (StreamMartSpec additionally pins row-for-row equality
@@ -76,7 +78,6 @@ object PipelineQueries extends QueryModule {
     // sessionize_stream.
     Q("pipeline_stream_trace_mart",
       (s, _) => {
-        import org.apache.spark.sql.functions.{col, date_format}
         graft.util.TempDirs.cleanStale("graft_e2e_fixture_")
         graft.util.TempDirs.cleanStale("graft_stream_mart_")
         graft.Fixtures.writeAll(Paths.get(fixtureDir))
@@ -105,34 +106,11 @@ object PipelineQueries extends QueryModule {
             (header +: batch).mkString("\n") + "\n")
         val staged = s"$base/staged_tx"
         val mart = s"$base/mart"
-        // static sides read exactly as Pipeline.readRaw does; the
-        // transactions side is the stream, which drops malformed lines
-        // as every other reader does
-        def rd(token: String, sch: org.apache.spark.sql.types.StructType) =
-          graft.ingest.Tsv.read(s, s"$fixtureDir/*$token*{.tsv,.tsv.gz}",
-            sch)
         val src = graft.streaming.StreamIngest.readTsvStream(s,
           arrivals.toString, graft.schema.BlockchairSchemas.transactions)
         val q = src.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-              _: Long) =>
-            batch.write.mode("append").parquet(staged)
-            val bld = Pipeline.build(
-              rd("blocks", graft.schema.BlockchairSchemas.blocks),
-              s.read.parquet(staged),
-              rd("inputs", graft.schema.BlockchairSchemas.inputs),
-              rd("outputs", graft.schema.BlockchairSchemas.outputs),
-              rd("addresses", graft.schema.BlockchairSchemas.addresses))
-            // partitions touched by THIS batch = the load dates of the
-            // traces its transactions produce (null tx_time rows ride
-            // the always-in-scope sentinel partition)
-            val touched = bld.fctTransactionTraces
-              .join(batch.select(col("hash").as("transaction_hash"))
-                .distinct(), Seq("transaction_hash"), "left_semi")
-              .select(date_format(col("tx_time"), "yyyyMMdd").as("ld"))
-              .na.drop().distinct()
-              .collect().map(_.getString(0)).toSeq
-            Pipeline.writeBuildIncremental(bld, mart, Some(touched))
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            streamBatch(s, fixtureDir, staged, mart, batch, batchId)
           }
           .option("checkpointLocation", s"$base/ckpt")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -168,6 +146,38 @@ object PipelineQueries extends QueryModule {
       Some(e2eOracle),
       eager = true)
   )
+
+  /** One micro-batch of `pipeline_stream_trace_mart`: stage the batch in
+    * its own `batch_id` directory, rebuild the DAG over every staged
+    * batch and the static `fixture` sides, and rewrite the mart
+    * partitions this batch touched. The staging write overwrites its
+    * batch's directory, so a batch replayed after a crash between the
+    * sink write and the commit log lands once, not twice. */
+  private[models] def streamBatch(s: SparkSession, fixture: String, staged: String,
+      mart: String, batch: DataFrame, batchId: Long): Unit = {
+    batch.write.mode("overwrite").parquet(s"$staged/batch_id=$batchId")
+    // static sides read exactly as Pipeline.readRaw does; the
+    // transactions side is the stream, which drops malformed lines
+    // as every other reader does
+    def rd(token: String, sch: org.apache.spark.sql.types.StructType) =
+      graft.ingest.Tsv.read(s, s"$fixture/*$token*{.tsv,.tsv.gz}", sch)
+    val bld = Pipeline.build(
+      rd("blocks", graft.schema.BlockchairSchemas.blocks),
+      s.read.parquet(staged).drop("batch_id"),
+      rd("inputs", graft.schema.BlockchairSchemas.inputs),
+      rd("outputs", graft.schema.BlockchairSchemas.outputs),
+      rd("addresses", graft.schema.BlockchairSchemas.addresses))
+    // partitions touched by THIS batch = the load dates of the
+    // traces its transactions produce (null tx_time rows ride
+    // the always-in-scope sentinel partition)
+    val touched = bld.fctTransactionTraces
+      .join(batch.select(col("hash").as("transaction_hash"))
+        .distinct(), Seq("transaction_hash"), "left_semi")
+      .select(date_format(col("tx_time"), "yyyyMMdd").as("ld"))
+      .na.drop().distinct()
+      .collect().map(_.getString(0)).toSeq
+    Pipeline.writeBuildIncremental(bld, mart, Some(touched))
+  }
 
   private lazy val e2eOracle = s"""WITH blocks_raw AS (
           SELECT * FROM read_csv(

@@ -29,6 +29,25 @@ class StreamMartSpec extends SparkSpec {
     assert(st == b)
   }
 
+  test("a micro-batch replayed under its batch id lands once: the mart " +
+    "equals a single run's") {
+    val dir = java.nio.file.Files.createTempDirectory("stream-replay")
+    val fixture = dir.resolve("fixture")
+    graft.Fixtures.writeAll(fixture)
+    val batch = graft.ingest.Tsv.read(spark, s"$fixture/*transactions*{.tsv,.tsv.gz}",
+      graft.schema.BlockchairSchemas.transactions)
+    def mart(name: String, deliveries: Int) = {
+      val root = dir.resolve(name)
+      for (_ <- 1 to deliveries) PipelineQueries.streamBatch(spark, fixture.toString,
+        s"$root/staged", s"$root/mart", batch, batchId = 0L)
+      spark.read.parquet(s"$root/mart/fct_transaction_traces")
+        .drop("trace_sequence").collect().map(_.toString).sorted.toSeq
+    }
+    val once = mart("once", 1)
+    assert(once.nonEmpty)
+    assert(mart("replayed", 2) == once)
+  }
+
   test("pipeline_stream_trace_mart (eager Q): output schema is the " +
     "batch mart's minus trace_sequence") {
     val df =
